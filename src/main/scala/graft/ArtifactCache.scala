@@ -114,14 +114,8 @@ object ArtifactCache {
     caches.flatMap { c =>
       c.warm match {
         case PerDir(build) =>
-          val t0 = System.nanoTime()
-          val ok =
-            try { build(spark, dir); true }
-            catch { case e: Throwable =>
-              System.err.println(s"[warm] artifact '${c.name}' failed: ${e.getMessage}")
-              false
-            }
-          Some((c.name, (System.nanoTime() - t0) / 1e9, ok))
+          val (sec, ok) = Measure.timed("warm", s"artifact '${c.name}'")(build(spark, dir))
+          Some((c.name, sec, ok))
         case _: KeyDriven => None
       }
     }

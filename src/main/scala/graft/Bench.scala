@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 
 /** Bench main — times every registered query with `.count()` on
   * `SPARK_GRAFT_SF_DIR` and prints the contract JSON line
@@ -16,24 +15,14 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     // default to every core: the contract environment is local[32], and
-    // benching at local[4] (the old default when the env var was unset)
-    // under-reports shuffle-heavy queries ~3× — use SPARK_GRAFT_CPUS to
-    // pin a smaller width deliberately
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = Tuning.tuned(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
+    // benching at local[4] under-reports shuffle-heavy queries ~3× — use
+    // SPARK_GRAFT_CPUS to pin a smaller width deliberately.
+    // SPARK_GRAFT_CONF=spark.sql.streaming.stateStore.providerClass=... times
+    // the streaming family under another state store (e.g. RocksDB);
+    // session clones inherit the conf, so every stream_* scoped session
+    // follows.
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // SPARK_GRAFT_STATESTORE=rocksdb times the streaming family under the
-    // production state store (VERDICT r15 item 4 — the ×100 streaming
-    // suspects had only run the default heap-backed provider). Session
-    // clones inherit the conf, so every stream_* scoped session follows.
-    if (sys.env.get("SPARK_GRAFT_STATESTORE").contains("rocksdb"))
-      spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
     // untimed warmup: JIT, codegen cache, parquet footers — so per-query
     // numbers measure the query, not whichever one ran first — plus the
     // fixtures and EVERY ArtifactCache'd shared-artifact build, derived
@@ -41,10 +30,6 @@ object Bench {
     // three artifacts across r10–r12: PQ codebook, component labels,
     // dedup_cluster's label fixpoint at 4.56 s in-sweep vs 0.056 s
     // isolated — see ArtifactCache.Warm / Warmups)
-    def warm(label: String)(body: => Unit): Unit =
-      try body catch { case e: Throwable =>
-        System.err.println(s"[bench] warmup '$label' failed: ${e.getMessage}")
-      }
     // itemized: per-fixture/per-artifact build seconds print below with
     // the detail line and the contract line carries the total as
     // `warm_sec`, so the untimed warm block's cost is part of the round
@@ -55,9 +40,7 @@ object Bench {
     // SPARK_GRAFT_BENCH_ONLY=a,b,c restricts the timed set — dev-loop
     // re-measure convenience (variance pinning); the driver leaves it unset
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY").map(_.split(",").toSet)
-    val timedSet = SparkEntry.queries.toSeq
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .sortBy(_._1)
+    val timedSet = SparkEntry.queries.keys.toSeq.filter(n => only.forall(_.contains(n))).sorted
     // Untimed JIT/codegen warm block (VERDICT r14 item 1): the driver's
     // r14 window charged the alphabetically-FIRST ~16 queries 7–21× their
     // isolated minima — sweep-start cold JIT/codegen cost landing on
@@ -68,14 +51,9 @@ object Bench {
     // parquet footers and shuffle paths are compiled before any clock
     // starts. ~35 mostly-sub-second queries — bounded, family-complete,
     // and independent of which names happen to sort to the sweep head.
-    timedSet.groupBy { case (name, _) => name.takeWhile(_ != '_') }
-      .toSeq.sortBy(_._1)
-      .foreach { case (_, members) =>
-        val (name, fn) = members.minBy(_._1)
-        warm(s"family:$name") { fn(spark, sfDir).count() }
-        spark.catalog.clearCache()
-      }
-    val results = timedSet.zipWithIndex.map { case ((name, fn), i) =>
+    timedSet.groupBy(_.takeWhile(_ != '_')).toSeq.sortBy(_._1)
+      .foreach { case (_, members) => Measure.count(spark, sfDir, members.min) }
+    val results = timedSet.zipWithIndex.map { case (name, i) =>
       // GC barrier between ~128-query chunks (VERDICT r13 item 2): a
       // 500+-query single-JVM sweep accumulates GC/codegen pressure that
       // the driver's window charged to whichever queries ran late
@@ -85,19 +63,10 @@ object Bench {
       // i == 0 included (r14 item 1): the warm block above just churned
       // the heap; timing starts from a settled state like every chunk.
       if (i % 128 == 0) { System.gc(); Thread.sleep(200) }
-      val t0 = System.nanoTime()
-      val ok = try { fn(spark, sfDir).count(); true } catch {
-        case e: Throwable =>
-          System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
-          false
-      }
-      val sec = (System.nanoTime() - t0) / 1e9
-      // isolate queries from each other: persisted frames (text_langid/
-      // text_tfidf token caches and the like) otherwise accumulate across
-      // all 100+ queries and the growing heap pressure taxes every query
-      // that runs AFTER them — each query pays its own cache build inside
-      // its own timing, nothing leaks forward
-      spark.catalog.clearCache()
+      // Measure.count clears the cache after each query: persisted frames
+      // (text_langid/text_tfidf token caches and the like) would otherwise
+      // accumulate across all 100+ queries and tax every query after them
+      val (sec, ok) = Measure.count(spark, sfDir, name)
       (name, sec, ok)
     }
     def d3(v: Double): String = String.format(java.util.Locale.ROOT, "%.3f", Double.box(v))
@@ -153,6 +122,14 @@ object Bench {
       spark.catalog.clearCache()
       Warmups.warmAll(spark, sfDir)
       spark.catalog.clearCache()
+      // Two reruns of `name`; a rerun that CRASHES must not contribute its
+      // (tiny) elapsed time: min-of-reruns would then adjudicate a real
+      // regression as an environmental spike — failed runs record as None
+      // and are excluded from min (all-failed => no min).
+      def reruns(name: String): Seq[Option[Double]] = (1 to 2).map { _ =>
+        val (sec, ok) = Measure.count(spark, sfDir, name)
+        if (ok) Some(sec) else None
+      }
       // Window-warmth CONTROLS (VERDICT r13 item 6): fixed sub-second,
       // artifact-free queries re-run in every ISOLATED block. Their
       // sweep/min ratio measures residual window warmth DIRECTLY — the
@@ -163,14 +140,7 @@ object Bench {
       val sweepByName = okResults.toMap
       val controlRatios = controlNames.flatMap { name =>
         sweepByName.get(name).flatMap { sweepSec =>
-          val runs = (1 to 2).flatMap { _ =>
-            val t0 = System.nanoTime()
-            val ok = try { SparkEntry.queries(name)(spark, sfDir).count(); true }
-                     catch { case _: Throwable => false }
-            val sec = (System.nanoTime() - t0) / 1e9
-            spark.catalog.clearCache()
-            if (ok) Some(sec) else None
-          }
+          val runs = reruns(name).flatten
           if (runs.isEmpty) None else Some(sweepSec / math.max(runs.min, 1e-9))
         }
       }
@@ -181,21 +151,7 @@ object Bench {
       // wider net plus the noise_ratio below lets a single-window read
       // be corrected without manual re-measures
       val top = okResults.sortBy(-_._2).take(16)
-      val iso = top.map { case (name, sweepSec) =>
-        // a rerun that CRASHES must not contribute its (tiny) elapsed time:
-        // min-of-reruns would then adjudicate a real regression as an
-        // environmental spike — failed runs record as null and are
-        // excluded from min (all-failed => min=None)
-        val runs: Seq[Option[Double]] = (1 to 2).map { _ =>
-          val t0 = System.nanoTime()
-          val ok = try { SparkEntry.queries(name)(spark, sfDir).count(); true }
-                   catch { case _: Throwable => false }
-          val sec = (System.nanoTime() - t0) / 1e9
-          spark.catalog.clearCache()
-          if (ok) Some(sec) else None
-        }
-        (name, sweepSec, runs)
-      }
+      val iso = top.map { case (name, sweepSec) => (name, sweepSec, reruns(name)) }
       // window-noise estimate: median over the adjudicated set of
       // sweep/min. A clean window reads ≈1.0; the r12 VM-contention
       // windows would have read ~1.10–1.15 — the judge can correct a

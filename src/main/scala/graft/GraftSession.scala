@@ -2,11 +2,13 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Library front door: one call builds a session with every graft
-  * extension wired (as-of join strategy, CollapseRedundantRound optimizer
-  * rule, `cosine_sim` SQL function — see plans.GraftExtensions) and, via
-  * [[registerTables]], the test-data tables exposed as temp views so the
-  * whole SURVEY §2 surface is reachable from plain `spark.sql`.
+/** Library front door and the one session factory: Bench, Verify, Smoke,
+  * ScaleProbe, the dev tools and the test suites all build their session
+  * through [[builder]]. [[registerTables]] exposes the test-data tables as
+  * temp views and registers the `cosine_sim` / `minhash_sig` SQL
+  * functions, so the whole SURVEY §2 surface is reachable from plain
+  * `spark.sql`. The as-of join strategy needs no session setup: every
+  * `AsofJoinApi.asofJoin` call installs it on its session at runtime.
   *
   * A reference user's migration is: build the session here, point
   * registerTables at their parquet directory, and run their queries
@@ -18,21 +20,43 @@ object GraftSession {
     "region", "nation", "customer", "supplier", "part", "orders",
     "lineitem", "documents", "embeddings")
 
-  def builder(master: String = "local[*]",
-      shufflePartitions: Int = 32): SparkSession.Builder =
-    Tuning.tuned(SparkSession.builder()
-      .master(master)
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.sql.session.timeZone", "UTC"))
-      .withExtensions(new plans.GraftExtensions)
+  /** Default width: `SPARK_GRAFT_CPUS`, else every available core. */
+  def defaultCpus: Int = sys.env.get("SPARK_GRAFT_CPUS").map(_.trim.toInt)
+    .getOrElse(Runtime.getRuntime.availableProcessors())
 
-  def create(master: String = "local[*]", shufflePartitions: Int = 32): SparkSession =
-    builder(master, shufflePartitions).getOrCreate()
+  /** `local[cpus]` with one shuffle partition per core, UTC session time,
+    * no UI and the [[Tuning]] defaults; then every `k=v` entry of
+    * `SPARK_GRAFT_CONF=k=v;k=v` (e.g. the RocksDB state-store provider,
+    * or `spark.graft.*` knobs for an A/B), which overrides all of these. */
+  def builder(cpus: Int = defaultCpus): SparkSession.Builder = {
+    val b = Tuning.tuned(SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus.toLong)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false"))
+    parseConf(sys.env.getOrElse("SPARK_GRAFT_CONF", "")).foldLeft(b) {
+      case (acc, (k, v)) => acc.config(k, v)
+    }
+  }
+
+  /** `k=v;k=v` → pairs. Empty entries are skipped; an entry without `=`
+    * or without a key fails here, naming the entry, instead of surfacing
+    * later as an unexplained conf. */
+  def parseConf(spec: String): Seq[(String, String)] =
+    spec.split(";").toSeq.map(_.trim).filter(_.nonEmpty).map { kv =>
+      kv.split("=", 2) match {
+        case Array(k, v) if k.trim.nonEmpty => k.trim -> v.trim
+        case _ => throw new IllegalArgumentException(
+          s"SPARK_GRAFT_CONF entry '$kv' is not of the form key=value")
+      }
+    }
 
   /** Expose every sfDir table (including the ns-timestamp-safe events
-    * reader) as a temp view for SQL use. */
+    * reader) as a temp view, and the graft SQL functions, for SQL use. */
   def registerTables(spark: SparkSession, sfDir: String): Unit = {
     tableNames.foreach(n => Tables.t(spark, sfDir, n).createOrReplaceTempView(n))
     Tables.events(spark, sfDir).createOrReplaceTempView("events")
+    functions.CosineSim.register(spark)
+    functions.MinHashSig.register(spark)
   }
 }

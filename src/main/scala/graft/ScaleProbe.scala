@@ -26,14 +26,7 @@ object ScaleProbe {
   def main(args: Array[String]): Unit = {
     val mode = args(0)
     val dir = args(1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     val out = mode match {
       case "pairwork" => pairwork(spark, dir)
@@ -131,10 +124,9 @@ object ScaleProbe {
     val round = graft.operators.AnalyticsOps.lpaRound(adj, labels, nodeBcast)
     val plan = round.queryExecution.executedPlan.toString
     val planBroadcasts = plan.contains("BroadcastExchange")
-    def timed(name: String): Double = {
-      val t0 = System.nanoTime()
-      SparkEntry.queries(name)(s, dir).count()
-      math.rint((System.nanoTime() - t0) / 1e7) / 100.0
+    def timed(name: String): String = Measure.count(s, dir, name) match {
+      case (sec, true) => (math.rint(sec * 100) / 100.0).toString
+      case (_, false) => "null"
     }
     val qs = Seq("graph_label_prop", "graph_kcore", "graph_bfs_hops",
       "graph_components", "graph_modularity")

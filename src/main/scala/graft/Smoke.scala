@@ -1,17 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Local smoke: drives SparkEntry.entry the way the driver's t1 does
   * (rows>0 on sf0.001) and prints the result. */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = Tuning.tuned(SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
+    val spark = GraftSession.builder(4).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val df = SparkEntry.entry(spark)
     df.show(20, truncate = false)

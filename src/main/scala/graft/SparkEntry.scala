@@ -1,13 +1,22 @@
 package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import graft.Tables.QFn
+
+/** One operator bank: the queries it registers and, for those DuckDB can
+  * express with the same semantics, their oracle SQL. */
+trait Bank {
+  def queries: Map[String, QFn]
+  def oracles: Map[String, String]
+}
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
   * Every operator in SURVEY.md §2 contributes one entry to `queries`
   * (run on `$sfDir/<table>.parquet`) and, when DuckDB can express the same
   * semantics, a matching oracle SQL string in `oracleSql`. Modules own
-  * their slices; this object is just the union.
+  * their slices in a [[Bank]]; [[banks]] lists every bank once, and both
+  * views are built from it once, at first use.
   */
 object SparkEntry {
 
@@ -16,45 +25,26 @@ object SparkEntry {
   def entry(spark: SparkSession): DataFrame =
     queries("agg_group")(spark, "/root/testdata/sf0.001")
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    operators.Aggregates.queries ++
-      operators.Relational.queries ++
-      operators.SetOps.queries ++
-      operators.Windows.queries ++
-      functions.ScalarBank.queries ++
-      operators.TextOps.queries ++
-      operators.VectorOps.queries ++
-      operators.EtlOps.queries ++
-      operators.TypedOps.queries ++
-      operators.ScaleOps.queries ++
-      operators.ShapeOps.queries ++
-      operators.AnalyticsOps.queries ++
-      operators.LmOps.queries ++
-      operators.MinHashDedup.queries ++
-      operators.Multimodal.queries ++
-      operators.MultimodalFrames.queries ++
-      sources.RestQueries.queries ++
-      streaming.Streams.queries ++
-      streaming.StreamDedup.queries
+  val banks: Seq[Bank] = Seq(
+    operators.Aggregates, operators.Relational, operators.SetOps,
+    operators.Windows, functions.ScalarBank, operators.TextOps,
+    operators.VectorOps, operators.EtlOps, operators.TypedOps,
+    operators.ScaleOps, operators.ShapeOps, operators.AnalyticsOps,
+    operators.LmOps, operators.MinHashDedup, operators.Multimodal,
+    operators.MultimodalFrames, sources.RestQueries, streaming.Streams,
+    streaming.StreamDedup)
 
-  def oracleSql: Map[String, String] =
-    operators.Aggregates.oracles ++
-      operators.Relational.oracles ++
-      operators.SetOps.oracles ++
-      operators.Windows.oracles ++
-      functions.ScalarBank.oracles ++
-      operators.TextOps.oracles ++
-      operators.VectorOps.oracles ++
-      operators.EtlOps.oracles ++
-      operators.TypedOps.oracles ++
-      operators.ScaleOps.oracles ++
-      operators.ShapeOps.oracles ++
-      operators.AnalyticsOps.oracles ++
-      operators.LmOps.oracles ++
-      operators.MinHashDedup.oracles ++
-      operators.Multimodal.oracles ++
-      operators.MultimodalFrames.oracles ++
-      sources.RestQueries.oracles ++
-      streaming.Streams.oracles ++
-      streaming.StreamDedup.oracles
+  val queries: Map[String, QFn] = union("query", banks.map(_.queries))
+
+  val oracleSql: Map[String, String] = union("oracle", banks.map(_.oracles))
+
+  /** The union of `maps`; a name registered by two of them is an error,
+    * not a silent last-wins overwrite. */
+  private[graft] def union[V](what: String, maps: Seq[Map[String, V]]): Map[String, V] = {
+    val dups = maps.flatMap(_.keys).groupBy(identity).collect {
+      case (name, hits) if hits.size > 1 => name
+    }
+    require(dups.isEmpty, s"$what names registered by more than one bank: ${dups.toSeq.sorted.mkString(", ")}")
+    maps.foldLeft(Map.empty[String, V])(_ ++ _)
+  }
 }

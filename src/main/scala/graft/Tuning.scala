@@ -2,8 +2,9 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Session-level performance defaults shared by every graft entrypoint
-  * (Bench, Verify, Smoke, GraftSession, the test harness, the dev tools).
+/** Session-level performance defaults. [[GraftSession.builder]], the one
+  * session factory behind every graft entrypoint (Bench, Verify, Smoke,
+  * ScaleProbe, the test suites, the dev tools), applies them.
   *
   *  - '''checkpoint GC at submit time'''
   *    (`spark.cleaner.referenceTracking.cleanCheckpoints=true`): when a

@@ -16,20 +16,13 @@ import org.apache.spark.sql.SparkSession
   */
 object Warmups {
 
-  /** Force init of every object that constructs an [[ArtifactCache]]
-    * (or might grow one later). Scala object init runs on first
+  /** Force init of every object that constructs an [[ArtifactCache]]:
+    * `Tables` and the operator banks. Scala object init runs on first
     * reference; without this, a cache in a not-yet-touched bank would
     * be invisible to [[ArtifactCache.warmAll]] and its first consumer
     * query would pay the build in-sweep. */
   def loadAll(): Unit = {
-    val _ = (Tables, operators.Aggregates, operators.AnalyticsOps,
-      operators.Components, operators.DistRank, operators.EtlOps,
-      operators.LmOps, operators.MinHashDedup, operators.Multimodal,
-      operators.MultimodalFrames, operators.PValueGrids,
-      operators.Relational, operators.RoundPin, operators.ScaleOps,
-      operators.SetOps, operators.ShapeOps, operators.TextOps,
-      operators.TypedOps, operators.VectorOps, operators.Windows,
-      streaming.Streams, streaming.StreamDedup)
+    val _ = (Tables, SparkEntry.banks)
   }
 
   /** Stage fixtures + build every PerDir artifact for `dir`, each step
@@ -46,12 +39,8 @@ object Warmups {
   def warmAllTimed(spark: SparkSession, dir: String): Seq[(String, Double, Boolean)] = {
     loadAll()
     def step(label: String)(body: => Unit): (String, Double, Boolean) = {
-      val t0 = System.nanoTime()
-      val ok = try { body; true } catch { case e: Throwable =>
-        System.err.println(s"[warm] fixture '$label' failed: ${e.getMessage}")
-        false
-      }
-      (label, (System.nanoTime() - t0) / 1e9, ok)
+      val (sec, ok) = Measure.timed("warm", s"fixture '$label'")(body)
+      (label, sec, ok)
     }
     val fixtures = Seq(
       step("bucketed tables")(operators.ScaleOps.prepareBucketed(spark, dir)),

@@ -17,7 +17,7 @@ import graft.Tables._
   * is avoided (half-up vs half-even would diverge; 6-dp rounding of 2-dp
   * data is exact).
   */
-object ScalarBank {
+object ScalarBank extends graft.Bank {
 
   val queries: Map[String, QFn] = Map(
     "fn_string" -> ((s, dir) => {

@@ -17,7 +17,7 @@ import graft.functions.GeoMean
   * linestatus, event_type, mktsegment) is tiny, so the shuffle moves only
   * the partially-aggregated state, not data.
   */
-object Aggregates {
+object Aggregates extends graft.Bank {
 
   /** Per-returnflag geometric mean of extendedprice through the typed
     * `Aggregator[Double, Buf, Double]` API (functions/GeoMean) — the one

@@ -77,7 +77,7 @@ import graft.Tables._
   * determinism at audit scale; the pure-throughput variant at 100 TB keeps
   * the same plan with a plain double sum per (label, dim).
   */
-object AnalyticsOps {
+object AnalyticsOps extends graft.Bank {
 
   private val d38 = DecimalType(38, 18)
 

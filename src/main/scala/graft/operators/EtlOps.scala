@@ -19,7 +19,7 @@ import graft.Tables._
   * `sink_parquet` demonstrates partitioned layout (partition pruning on
   * read is free after this).
   */
-object EtlOps {
+object EtlOps extends graft.Bank {
 
   // per-process root (like ScaleOps' per-PID warehouse): two JVMs staging
   // the same sfDir concurrently must not race on a non-atomic Overwrite —

@@ -38,7 +38,7 @@ import graft.Tables._
   * engines and identically defined (unit ins/del/sub), so the oracle is
   * exact.
   */
-object LmOps {
+object LmOps extends graft.Bank {
 
   val queries: Map[String, QFn] = Map(
     // one BPE vocabulary-training iteration at corpus scale — the heavy

@@ -25,7 +25,7 @@ import graft.Tables._
   * no DuckDB oracle (xxhash64 has no DuckDB equivalent); the unit suite
   * plants perturbed near-duplicates and asserts they collide.
   */
-object MinHashDedup {
+object MinHashDedup extends graft.Bank {
 
   private val K = 16      // default minhash signature length (4 bands × 4)
   private val BANDS = 4   // band count is fixed; rows-per-band adapts

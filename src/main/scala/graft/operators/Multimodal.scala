@@ -29,7 +29,7 @@ import graft.Tables._
   * gives Python codecs), outputs are typed structs, and nothing ever
   * collects to the driver.
   */
-object Multimodal {
+object Multimodal extends graft.Bank {
 
   /** Corpus-adaptive band count for mm_phash's banded hamming join
     * (VERDICT r14 item 2 — the fixed 4×16-bit banding was a capacity

@@ -15,7 +15,7 @@ import graft.Tables._
   * Scale note: per-row HOFs inside codegen — no shuffle; frame sampling at
   * 100 TB is embarrassingly parallel over the scan.
   */
-object MultimodalFrames {
+object MultimodalFrames extends graft.Bank {
 
   val queries: Map[String, QFn] = Map(
     "mm_frame_sample" -> ((s, dir) => {

@@ -19,7 +19,7 @@ import graft.Tables._
   * state is bounded by events-per-user, which is what a 1000-executor
   * cluster partitions on anyway.
   */
-object Relational {
+object Relational extends graft.Bank {
 
   val queries: Map[String, QFn] = Map(
     // ---- 2.B cleaning ----

@@ -21,7 +21,7 @@ import graft.Tables._
   * SALT reducers instead of one straggler. Result provably equals the
   * unsalted join (same oracle).
   */
-object ScaleOps {
+object ScaleOps extends graft.Bank {
 
   private val SALT = 8
 

@@ -13,7 +13,7 @@ import graft.Tables._
   * no global sort). `sort_multi` is a full range-partitioned sort, the one
   * operator here that legitimately needs a global exchange.
   */
-object SetOps {
+object SetOps extends graft.Bank {
 
   val queries: Map[String, QFn] = Map(
     "sort_multi" -> ((s, dir) => {

@@ -30,7 +30,7 @@ import graft.Tables._
   * hash aggregation (by key × day) and, for LOCF, one window sorted within
   * each key partition. No fact-sized cartesian exists anywhere in the plan.
   */
-object ShapeOps {
+object ShapeOps extends graft.Bank {
 
   val queries: Map[String, QFn] = Map(
     "agg_unpivot" -> ((s, dir) => {

@@ -18,7 +18,7 @@ import graft.Tables._
   * size; the MinHash/LSH path in MinHashDedup is the scale-out answer for
   * all-pairs similarity.
   */
-object TextOps {
+object TextOps extends graft.Bank {
 
   import graft.functions.NfcNormalize.nfc
 

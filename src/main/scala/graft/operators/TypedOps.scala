@@ -14,7 +14,7 @@ import graft.Tables._
   * The per-group sum uses exact BigDecimal(18,6) arithmetic, matching the
   * oracle's DECIMAL cast (same HALF_UP rounding as Spark's Cast).
   */
-object TypedOps {
+object TypedOps extends graft.Bank {
 
   case class OrderRow(o_orderkey: Long, o_custkey: Long, o_orderstatus: String,
       o_totalprice: Double)

@@ -33,7 +33,7 @@ import graft.functions.CosineSim.cosine_sim
   * sequentially — bit-identical to the DuckDB oracle arithmetic (and to
   * the HOF formulation the unit spec cross-checks against).
   */
-object VectorOps {
+object VectorOps extends graft.Bank {
 
   /** The resident vector store: the embeddings table persisted ONCE per
     * (JVM, dir) and shared by every ANN tier. Each query here probes the

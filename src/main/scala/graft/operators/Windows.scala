@@ -15,7 +15,7 @@ import graft.Tables._
   * start timestamps are emitted as epoch-second BIGINTs so the oracle
   * compare never depends on timestamp-zone rendering.
   */
-object Windows {
+object Windows extends graft.Bank {
 
   val queries: Map[String, QFn] = Map(
     // 2-D skyline (Pareto frontier) over (price, size) — the

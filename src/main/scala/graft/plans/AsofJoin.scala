@@ -217,8 +217,8 @@ case class AsofJoinExec(left: SparkPlan, right: SparkPlan,
 }
 
 /** DataFrame-level entry point. Registers the planner strategy on the
-  * session (runtime `experimental.extraStrategies` — no builder-time
-  * extension needed; `GraftExtensions` offers the builder path too). */
+  * session at runtime (`experimental.extraStrategies`, idempotent), so
+  * no session needs a builder-time extension. */
 object AsofJoinApi {
   def ensureStrategy(spark: SparkSession): Unit = {
     val exp = spark.experimental
@@ -253,25 +253,5 @@ object AsofJoinApi {
     sameType("timestamp", lt, rt)
     Bridge.ofRows(spark,
       AsofJoin(lp, rp, lk, rk, lt, rt, attr(rp, rightTie), mode, toleranceMicros))
-  }
-}
-
-/** Builder-time registration: SparkSession.builder().withExtensions(new
-  * GraftExtensions) — injects the as-of strategy and the cosine_sim SQL
-  * function. */
-class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
-  override def apply(e: org.apache.spark.sql.SparkSessionExtensions): Unit = {
-    e.injectPlannerStrategy(_ => AsofStrategy)
-    e.injectOptimizerRule(_ => CollapseRedundantRound)
-    e.injectFunction((
-      new org.apache.spark.sql.catalyst.FunctionIdentifier("cosine_sim"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[graft.functions.CosineSim].getName, "cosine_sim"),
-      (exprs: Seq[Expression]) => graft.functions.CosineSim(exprs(0), exprs(1))))
-    e.injectFunction((
-      new org.apache.spark.sql.catalyst.FunctionIdentifier("minhash_sig"),
-      new org.apache.spark.sql.catalyst.expressions.ExpressionInfo(
-        classOf[graft.functions.MinHashSig].getName, "minhash_sig"),
-      (exprs: Seq[Expression]) => graft.functions.MinHashSig.fromExprs(exprs)))
   }
 }

@@ -10,7 +10,7 @@ import graft.Tables._
   * 1000 records from `range(0, 1000)` — the driver hash-checks the whole
   * extract→aggregate path, not just rows>0. The unit suite covers
   * pushdown, auth, pagination, pacing and the four failure classes. */
-object RestQueries {
+object RestQueries extends graft.Bank {
   private lazy val stub = RestStubServer.start(totalRows = 1000L)
 
   val queries: Map[String, QFn] = Map(

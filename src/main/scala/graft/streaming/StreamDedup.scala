@@ -32,7 +32,7 @@ import graft.operators.MinHashDedup
   * cross-batch duplicates and asserts drop/keep decisions and `dup_of`
   * attribution.
   */
-object StreamDedup {
+object StreamDedup extends graft.Bank {
 
   private val docSchema = StructType(Seq(
     StructField("doc_id", LongType),

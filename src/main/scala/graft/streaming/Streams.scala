@@ -26,7 +26,7 @@ import graft.Tables.{dsum, t, EventTypes, QFn}
   * upserts on a real cluster (here: hash-partitioned target + dynamic
   * partition overwrite of only the buckets a batch touches).
   */
-object Streams {
+object Streams extends graft.Bank {
 
   // per-staged-dir memo of the events `ts` physical type (see eventsStream)
   private val tsTypeCache = new graft.ArtifactCache[DataType]("events ts type",

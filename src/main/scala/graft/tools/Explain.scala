@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: print formatted physical plans for named queries.
   * usage: runMain graft.tools.Explain <sfDir> q1,q2,... */
 object Explain {
@@ -9,18 +7,11 @@ object Explain {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.01"
     val names = if (args.length > 1) args(1).split(",").toSeq
       else Seq("agg_group", "join_broadcast", "scan_parquet", "limit_n")
-    val spark = graft.Tuning.tuned(SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")).getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    // GRAFT_EXPLAIN_CONF=k=v;k=v — session confs to apply before planning
-    // (e.g. spark.graft.dedup.forceCollapse=true to print a gated query's
+    // SPARK_GRAFT_CONF=k=v;k=v sets session confs before planning (e.g.
+    // spark.graft.dedup.forceCollapse=true to print a gated query's
     // collapse-branch plan on a dup-free corpus)
-    sys.env.get("GRAFT_EXPLAIN_CONF").foreach(_.split(";").foreach { kv =>
-      val Array(k, v) = kv.split("=", 2)
-      spark.conf.set(k, v)
-    })
+    val spark = graft.GraftSession.builder().getOrCreate()
+    spark.sparkContext.setLogLevel("ERROR")
     for (n <- names) {
       println(s"\n========== $n ==========")
       graft.SparkEntry.queries(n)(spark, sfDir).explain("formatted")

@@ -1,9 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev profiling: run named queries (or all) N times in-session to separate
-  * JIT/codegen warmup from steady-state cost.
+  * JIT/codegen warmup from steady-state cost. SPARK_GRAFT_CONF=k=v;k=v sets
+  * session confs for an A/B.
   * usage: runMain graft.tools.Profile <sfDir> <repeat> [q1,q2,...] */
 object Profile {
   def main(args: Array[String]): Unit = {
@@ -11,31 +10,13 @@ object Profile {
     val repeat = if (args.length > 1) args(1).toInt else 2
     val names = if (args.length > 2) args(2).split(",").toSeq
       else graft.SparkEntry.queries.keys.toSeq.sorted
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.Tuning.tuned(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
+    val spark = graft.GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    // SPARK_GRAFT_CONF=k=v;k=v — session confs to apply before running
-    // (dev A/B convenience, mirrors Explain's GRAFT_EXPLAIN_CONF)
-    sys.env.get("SPARK_GRAFT_CONF").foreach(_.split(";").foreach { kv =>
-      val Array(k, v) = kv.split("=", 2)
-      spark.conf.set(k, v)
-    })
     graft.Warmups.warmAll(spark, sfDir)
     spark.catalog.clearCache()
     for (name <- names) {
-      val times = (1 to repeat).map { _ =>
-        val t0 = System.nanoTime()
-        graft.SparkEntry.queries(name)(spark, sfDir).count()
-        val sec = (System.nanoTime() - t0) / 1e9
-        spark.catalog.clearCache() // bench hygiene: per-run cache build
-        sec
-      }
-      println(f"$name%-24s ${times.map(t => f"$t%6.2f").mkString(" ")}")
+      val times = (1 to repeat).map(_ => graft.Measure.count(spark, sfDir, name))
+      println(f"$name%-24s ${times.map { case (t, ok) => if (ok) f"$t%6.2f" else "FAILED" }.mkString(" ")}")
     }
     spark.stop()
     sys.exit(0)

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: print the formatted plan of ONE ktruss support peel
   * (trussRound) — the query-level explain hides the peels behind
   * RoundPin's eager materialization, so the round subplan (where the
@@ -10,10 +8,7 @@ import org.apache.spark.sql.SparkSession
 object TrussPlan {
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
-    val spark = graft.Tuning.tuned(SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")).getOrCreate()
+    val spark = graft.GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val (allPairs, nodes) = graft.operators.AnalyticsOps.allPairsGraph(spark, sfDir)
     val bcast = nodes.count() <= graft.Knobs.graphBroadcastMaxNodes(spark)

@@ -2,11 +2,10 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-/** Catalyst extension points: the cosine_sim SQL registration, the
-  * redundant-round optimizer rule, and the as-of strategy (runtime path —
-  * the builder-time GraftExtensions wires these same three objects via
-  * SparkSessionExtensions; getOrCreate in a shared-JVM test suite cannot
-  * exercise builder-time injection without tearing down every session). */
+/** Catalyst extension points, all installed at runtime on the session
+  * that uses them: the `cosine_sim` / `minhash_sig` SQL registrations
+  * (which [[GraftSession.registerTables]] also performs) and the as-of
+  * strategy (`AsofJoinApi.asofJoin` installs it on first use). */
 class ExtensionsSpec extends SparkSuite {
 
   test("cosine_sim is callable from SQL text after registration") {
@@ -33,32 +32,6 @@ class ExtensionsSpec extends SparkSuite {
     assert(e.getMessage.contains("INT literal"), e.getMessage)
   }
 
-  test("CollapseRedundantRound rewrites round(round(e,3),6) to round(e,3)") {
-    val df = spark.sql("SELECT round(round(c, 3), 6) AS r FROM VALUES (1.2345678D) AS t(c)")
-    val before = df.queryExecution.analyzed
-    val after = graft.plans.CollapseRedundantRound(before)
-    def countRounds(p: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): Int = {
-      var n = 0
-      p.transformAllExpressions {
-        case r: org.apache.spark.sql.catalyst.expressions.Round => n += 1; r
-      }
-      n
-    }
-    assert(countRounds(before) === 2)
-    assert(countRounds(after) === 1)
-    assert(df.head.getDouble(0) === 1.235) // semantics unchanged
-  }
-
-  test("CollapseRedundantRound keeps a genuinely tighter outer round") {
-    val df = spark.sql("SELECT round(round(c, 6), 3) AS r FROM VALUES (1.2345678D) AS t(c)")
-    val after = graft.plans.CollapseRedundantRound(df.queryExecution.analyzed)
-    var n = 0
-    after.transformAllExpressions {
-      case r: org.apache.spark.sql.catalyst.expressions.Round => n += 1; r
-    }
-    assert(n === 2, "outer round(…,3) narrows the value and must stay")
-  }
-
   test("as-of join null-extends null keys/timestamps (never matches them)") {
     import spark.implicits._
     val left = Seq((Some(1L), Some(10L)), (None, Some(10L)), (Some(1L), None))
@@ -83,18 +56,21 @@ class ExtensionsSpec extends SparkSuite {
   }
 
   test("GraftSession.registerTables exposes the full surface to plain SQL") {
-    GraftSession.registerTables(spark, sf)
-    graft.functions.CosineSim.register(spark)
-    val n = spark.sql("SELECT count(1) FROM lineitem").head.getLong(0)
+    // a fresh session starts from the built-in function registry, so the
+    // graft functions below resolve only if registerTables registered them
+    val fresh = spark.newSession()
+    GraftSession.registerTables(fresh, sf)
+    val n = fresh.sql("SELECT count(1) FROM lineitem").head.getLong(0)
     assert(n > 0)
     // events view must be the ns-safe reader
-    val ev = spark.sql("SELECT count(1) FROM events WHERE ts IS NOT NULL").head.getLong(0)
+    val ev = fresh.sql("SELECT count(1) FROM events WHERE ts IS NOT NULL").head.getLong(0)
     assert(ev > 0)
     // cosine_sim over the registered embeddings view from SQL text
-    val s = spark.sql(
+    val s = fresh.sql(
       """SELECT round(cosine_sim(embedding, embedding), 9) AS s
          FROM embeddings LIMIT 1""").head.getDouble(0)
     assert(s === 1.0)
+    assert(fresh.sql("SELECT minhash_sig(array('a', 'b'), 4, 1)").head.getSeq[Long](0).size === 4)
   }
 
   test("as-of strategy handles ties and empty right side") {

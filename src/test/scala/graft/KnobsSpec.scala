@@ -1,20 +1,12 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
-import org.scalatest.funsuite.AnyFunSuite
 
 /** The scale-parameter registry contract (SURVEY §6.7, VERDICT r13
   * item 3): every knob in [[Knobs.all]] resolves its `spark.graft.*`
   * conf override, the SURVEY table stays in sync with the registry, and
   * the LSH plane-count rule behaves as documented at the boundaries. */
-class KnobsSpec extends AnyFunSuite {
-
-  private lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[2]")
-    .config("spark.sql.shuffle.partitions", "2")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+class KnobsSpec extends SparkSuite {
 
   private def accessor(key: String): SparkSession => Long = key match {
     case Knobs.LshTargetOccupancyKey => Knobs.lshTargetOccupancy

@@ -9,16 +9,10 @@ object SparkSuite {
   lazy val spark: SparkSession = {
     // the sf~1 rehearsal replays these suites against 10x data — let it
     // use the full machine (local[4] keeps the dev loop light)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_TEST_CPUS", "4")
-    // same Tuning defaults as the Bench/Verify entrypoints, so the plan
-    // pins and parity suites exercise the configuration the driver runs
-    val s = Tuning.tuned(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false"))
-      .getOrCreate()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_TEST_CPUS", "4").toInt
+    // the same session factory as the Bench/Verify entrypoints, so the
+    // plan pins and parity suites exercise the configuration Bench and Verify run
+    val s = GraftSession.builder(cpus).appName("graft-test").getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s
   }
