@@ -9,6 +9,8 @@ import org.apache.spark.sql.SparkSession
   * functions, so the whole SURVEY §2 surface is reachable from plain
   * `spark.sql`. The as-of join strategy needs no session setup: every
   * `AsofJoinApi.asofJoin` call installs it on its session at runtime.
+  * Every session built here, and every clone of one, shares one executor
+  * classloader and so reuses the classes another session compiled ([[Tuning]]).
   *
   * A reference user's migration is: build the session here, point
   * registerTables at their parquet directory, and run their queries

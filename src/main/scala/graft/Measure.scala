@@ -1,6 +1,8 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 
 /** The one timer: Bench's sweep and ISOLATED reruns, Profile, ScaleProbe
   * and the untimed warm block's itemization all take their seconds here,
@@ -28,4 +30,10 @@ object Measure {
     spark.catalog.clearCache()
     r
   }
+
+  /** Janino compiles so far in this JVM and their summed seconds: the
+    * misses of Spark's codegen cache, counted on the driver and on the
+    * local executor threads alike. Take the difference around a block. */
+  def codegen(): (Long, Double) =
+    (CodegenMetrics.METRIC_COMPILATION_TIME.getCount, CodeGenerator.compileTime / 1e9)
 }

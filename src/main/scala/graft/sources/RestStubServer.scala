@@ -20,6 +20,7 @@ import java.util.concurrent.ConcurrentHashMap
   *   &shape=wrapped  → page-numbered responses wrapped in an object
   *                     ({"records": [...], "total": N})
   *   &requireHeader=name:v → 400 unless header `name` is exactly `v`
+  *                     (a spec without `:` → 400 naming the spec)
   *   &shape=nested   → records with a nested object + array field
   *                     (schema-inference fixture)
   *   &fail=429once   → first hit of each page (or cursor) returns HTTP
@@ -167,6 +168,8 @@ object RestStubServer {
         } else if (params.contains("requireApiKeyQuery") &&
             !params.get("api_key").contains(params("requireApiKeyQuery"))) {
           send(401, """{"error": "bad api key param"}""")
+        } else if (params.get("requireHeader").exists(!_.contains(":"))) {
+          send(400, s"""{"error": "malformed requireHeader '${params("requireHeader")}', want name:value"}""")
         } else if (params.get("requireHeader").exists { spec =>
             val Array(name, want) = spec.split(":", 2)
             Option(x.getRequestHeaders.getFirst(name)) != Some(want)

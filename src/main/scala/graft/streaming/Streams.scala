@@ -260,7 +260,8 @@ object Streams extends graft.Bank {
     * the stream is built by `build` against that clone), so the caller's
     * session conf is never mutated and a concurrent query on it can't
     * silently inherit narrow parallelism. The memory-sink view and the
-    * returned frame are bound to the clone, which is dropped with it. */
+    * returned frame are bound to the clone, which is dropped with it.
+    * The clone reuses the classes the caller's session compiled ([[graft.Tuning]]). */
   private def runToTable(s: SparkSession, dir: String,
       build: SparkSession => DataFrame,
       name: String, mode: String): DataFrame = {

@@ -156,6 +156,19 @@ class RestCursorAuthSpec extends graft.SparkSuite {
     } finally stub.stop()
   }
 
+  test("a requireHeader spec without ':' is answered 400 naming the spec") {
+    val stub = RestStubServer.start(totalRows = 20L)
+    try {
+      val conn = new java.net.URI(stub.url + "?requireHeader=x-trace").toURL
+        .openConnection().asInstanceOf[java.net.HttpURLConnection]
+      try {
+        assert(conn.getResponseCode === 400)
+        val body = new String(conn.getErrorStream.readAllBytes(), "UTF-8")
+        assert(body.contains("malformed requireHeader 'x-trace'"), body)
+      } finally conn.disconnect()
+    } finally stub.stop()
+  }
+
   test("schema sampling sends static headers too (inferSchema + requireHeader)") {
     val stub = RestStubServer.start(totalRows = 60L)
     try {
