@@ -23,9 +23,13 @@ import org.apache.spark.sql.types.{ArrayType, BooleanType, DataType, LongType}
   * survive) terminate after ~k probes here, and sparse edges terminate
   * when either list exhausts.
   *
-  * Caller contract: both arrays ascending-sorted (trussRound builds them
-  * with sort_array) and element-null-free (collect_list never emits null
-  * elements). Array-level nulls propagate null like any BinaryExpression.
+  * Preconditions: both arrays element-null-free — enforced at analysis,
+  * the input type must be `array<bigint>` with `containsNull = false`
+  * (collect_list's type), because the merge reads a null slot as a
+  * garbage long — and ascending-sorted, a documented contract the
+  * expression cannot check per row (trussRound builds its lists with
+  * sort_array). Array-level nulls propagate null like any
+  * BinaryExpression.
   */
 case class SortedIntersectGE(left: Expression, right: Expression, k: Int)
     extends BinaryExpression {
@@ -37,14 +41,15 @@ case class SortedIntersectGE(left: Expression, right: Expression, k: Int)
 
   override def checkInputDataTypes()
       : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    val ok = Seq(left, right).forall(_.dataType match {
-      case ArrayType(LongType, _) => true
-      case _ => false
-    })
+    def show(t: DataType) = t match {
+      case ArrayType(e, true) => s"array<${e.catalogString}> with nullable elements"
+      case _ => t.catalogString
+    }
+    val ok = Seq(left, right).forall(_.dataType == ArrayType(LongType, containsNull = false))
     if (ok) org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckSuccess
     else org.apache.spark.sql.catalyst.analysis.TypeCheckResult.TypeCheckFailure(
-      s"sorted_intersect_ge expects two array<bigint> inputs, got " +
-        s"${left.dataType.catalogString} / ${right.dataType.catalogString}")
+      s"sorted_intersect_ge expects two array<bigint> inputs without null " +
+        s"elements, got ${show(left.dataType)} / ${show(right.dataType)}")
   }
 
   override def nullSafeEval(l: Any, r: Any): Any = {
@@ -105,6 +110,6 @@ case class SortedIntersectGE(left: Expression, right: Expression, k: Int)
 }
 
 object SortedIntersectGE {
-  def sorted_intersect_ge(a: Column, b: Column, k: Int): Column =
+  private[graft] def sorted_intersect_ge(a: Column, b: Column, k: Int): Column =
     Bridge.column(SortedIntersectGE(Bridge.expression(a), Bridge.expression(b), k))
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types._
+import graft.Scratch
 import graft.Tables._
 
 /** §2.A scans / sinks / load semantics (SURVEY.md) — the reference's
@@ -21,16 +22,6 @@ import graft.Tables._
   */
 object EtlOps extends graft.Bank {
 
-  // per-process root (like ScaleOps' per-PID warehouse): two JVMs staging
-  // the same sfDir concurrently must not race on a non-atomic Overwrite —
-  // one could read the other's half-written fixture
-  private def tmpDir(name: String): String = {
-    val p = Paths.get(System.getProperty("java.io.tmpdir"),
-      s"graft_etl_${ProcessHandle.current().pid()}", name)
-    Files.createDirectories(p.getParent)
-    p.toString
-  }
-
   /** One-time staging of the events table as JSONL / CSV fixtures for the
     * scan queries. The _SUCCESS marker makes re-runs read-only, and the
     * writes keep natural parallelism — a coalesce(1) single-task funnel is
@@ -38,7 +29,7 @@ object EtlOps extends graft.Bank {
     * Bench warms these so the timed queries measure the scan, not fixture
     * I/O. */
   def stageJsonl(s: SparkSession, dir: String): String = {
-    val path = tmpDir(s"jsonl_${pathTag(dir)}")
+    val path = Scratch.fixture(s, "jsonl", dir).toString
     if (!Files.exists(Paths.get(path, "_SUCCESS")))
       events(s, dir).select(col("props"))
         .write.mode(SaveMode.Overwrite).text(path)
@@ -51,7 +42,7 @@ object EtlOps extends graft.Bank {
     * inside a document is collect_list-nondeterministic, which is exactly
     * why the reading query must aggregate order-insensitively. */
   def stageNestedJson(s: SparkSession, dir: String): String = {
-    val path = tmpDir(s"njson_${pathTag(dir)}")
+    val path = Scratch.fixture(s, "njson", dir).toString
     if (!Files.exists(Paths.get(path, "_SUCCESS"))) {
       val o = t(s, dir, "orders").filter(col("o_orderkey") < 300)
         .select(col("o_orderkey"), col("o_orderstatus"))
@@ -68,7 +59,7 @@ object EtlOps extends graft.Bank {
   }
 
   def stageCsv(s: SparkSession, dir: String): String = {
-    val path = tmpDir(s"csv_${pathTag(dir)}")
+    val path = Scratch.fixture(s, "csv", dir).toString
     if (!Files.exists(Paths.get(path, "_SUCCESS")))
       events(s, dir).select(col("event_id"), col("event_type"), col("value"))
         .write.mode(SaveMode.Overwrite).option("header", "true").csv(path)
@@ -80,7 +71,7 @@ object EtlOps extends graft.Bank {
     * logs are the other big unstructured source next to JSON APIs), with
     * the spec's invalid-input class baked into the fixture. */
   def stageText(s: SparkSession, dir: String): String = {
-    val path = tmpDir(s"textlog_${pathTag(dir)}")
+    val path = Scratch.fixture(s, "textlog", dir).toString
     if (!Files.exists(Paths.get(path, "_SUCCESS")))
       events(s, dir).select(
         when(col("event_id") % 97 === 0,
@@ -93,7 +84,7 @@ object EtlOps extends graft.Bank {
   }
 
   def stageOrc(s: SparkSession, dir: String): String = {
-    val path = tmpDir(s"orc_${pathTag(dir)}")
+    val path = Scratch.fixture(s, "orc", dir).toString
     if (!Files.exists(Paths.get(path, "_SUCCESS")))
       events(s, dir).select(col("event_id"), col("user_id"), col("event_type"), col("value"))
         .write.mode(SaveMode.Overwrite).orc(path)
@@ -111,7 +102,7 @@ object EtlOps extends graft.Bank {
     * 64-file fixture; at scale the files already exist — ingestion starts
     * at the binaryFile scan, which is fully distributed. */
   def stageBinaryDocs(s: SparkSession, dir: String): String = {
-    val path = tmpDir(s"bindocs_${pathTag(dir)}")
+    val path = Scratch.fixture(s, "bindocs", dir).toString
     if (!Files.exists(Paths.get(path, "_STAGED"))) {
       Files.createDirectories(Paths.get(path))
       t(s, dir, "documents").filter(col("doc_id") < 64)
@@ -126,7 +117,7 @@ object EtlOps extends graft.Bank {
   }
 
   def stagePartitioned(s: SparkSession, dir: String): String = {
-    val path = tmpDir(s"part_orders_${pathTag(dir)}")
+    val path = Scratch.fixture(s, "part_orders", dir).toString
     if (!Files.exists(Paths.get(path, "_SUCCESS")))
       t(s, dir, "orders")
         .select(col("o_orderkey"), col("o_totalprice"), col("o_orderstatus"))
@@ -140,11 +131,11 @@ object EtlOps extends graft.Bank {
     * partition column → one sorted file per dir). Bench warms this so the
     * timed query measures the audit scan, not the two rewrites. */
   def stageCompact(s: SparkSession, dir: String): String = {
-    val frag = tmpDir(s"frag_docs_${pathTag(dir)}")
+    val frag = Scratch.fixture(s, "frag_docs", dir).toString
     if (!Files.exists(Paths.get(frag, "_SUCCESS")))
       t(s, dir, "documents").repartition(16)
         .write.mode(SaveMode.Overwrite).partitionBy("lang").parquet(frag)
-    val compact = tmpDir(s"compact_docs_${pathTag(dir)}")
+    val compact = Scratch.fixture(s, "compact_docs", dir).toString
     if (!Files.exists(Paths.get(compact, "_SUCCESS")))
       s.read.parquet(frag)
         .repartition(col("lang"))
@@ -158,7 +149,7 @@ object EtlOps extends graft.Bank {
     * physical plan, and ConvertToLocalRelation folds filters over inline
     * rows away before planning. */
   def stageStatusDim(s: SparkSession, dir: String): String = {
-    val path = tmpDir(s"dim_status_${pathTag(dir)}")
+    val path = Scratch.fixture(s, "dim_status", dir).toString
     if (!Files.exists(Paths.get(path, "_SUCCESS"))) {
       import s.implicits._
       Seq(("F", "finished"), ("O", "open"), ("P", "pending"))
@@ -171,7 +162,7 @@ object EtlOps extends graft.Bank {
   /** XML event dump — the third structured wire format beside JSONL/CSV
     * (Spark 4 ships the XML source natively; rowTag frames each record). */
   def stageXml(s: SparkSession, dir: String): String = {
-    val path = tmpDir(s"xml_${pathTag(dir)}")
+    val path = Scratch.fixture(s, "xml", dir).toString
     if (!Files.exists(Paths.get(path, "_SUCCESS")))
       events(s, dir).select(col("event_id"), col("event_type"), col("value"))
         .write.mode(SaveMode.Overwrite).option("rowTag", "event")
@@ -294,7 +285,7 @@ object EtlOps extends graft.Bank {
     // The round-trip is value-oracled: what entered the sink is what the
     // JSON reader gets back.
     "sink_dsv2" -> ((s, dir) => {
-      val out = tmpDir(s"docsink_${pathTag(dir)}")
+      val out = Scratch.fixture(s, "docsink", dir).toString
       t(s, dir, "documents")
         .select(col("doc_id"), col("lang"), col("source"), col("n_chars"))
         .write.format("graft.sources.DocSink").mode(SaveMode.Overwrite)
@@ -330,7 +321,7 @@ object EtlOps extends graft.Bank {
     // lines land in _corrupt_record instead of failing the job, and the
     // query audits valid vs corrupt. Fixture staged once.
     "scan_corrupt" -> ((s, dir) => {
-      val path = tmpDir(s"corrupt_${pathTag(dir)}")
+      val path = Scratch.fixture(s, "corrupt", dir).toString
       if (!Files.exists(Paths.get(path, "_SUCCESS")))
         events(s, dir)
           .select(when(col("event_id") % 10 === 0, concat(lit("{corrupt "), col("props")))
@@ -353,7 +344,7 @@ object EtlOps extends graft.Bank {
     // compatibility", README.md:23-24): rows nest into JSON documents,
     // written as JSONL and re-ingested — the full document round-trip.
     "sink_jsonl" -> ((s, dir) => {
-      val path = tmpDir(s"sinkj_${pathTag(dir)}")
+      val path = Scratch.fixture(s, "sinkj", dir).toString
       events(s, dir)
         .select(col("event_id"),
           struct(col("event_type").as("type"), col("value").as("value")).as("doc"))
@@ -377,7 +368,7 @@ object EtlOps extends graft.Bank {
     // exactness: value rides as integer micro-units in the file so CSV's
     // double→text→double boundary can never perturb the 6-dp compare.
     "sink_csv" -> ((s, dir) => {
-      val path = tmpDir(s"sinkc_${pathTag(dir)}")
+      val path = Scratch.fixture(s, "sinkc", dir).toString
       events(s, dir)
         .select(col("event_id"), col("event_type"),
           expr("CAST(round(value * 1000000, 0) AS BIGINT)").as("v6"))
@@ -402,7 +393,7 @@ object EtlOps extends graft.Bank {
     // survive any text serialization bit-exactly), read back through the
     // same rowTag framing, aggregate against the parquet-derived oracle.
     "sink_xml" -> ((s, dir) => {
-      val path = tmpDir(s"sinkx_${pathTag(dir)}")
+      val path = Scratch.fixture(s, "sinkx", dir).toString
       events(s, dir)
         .select(col("event_id"), col("event_type"),
           expr("CAST(round(value * 1000000, 0) AS BIGINT)").as("v6"))
@@ -421,7 +412,7 @@ object EtlOps extends graft.Bank {
     }),
 
     "sink_parquet" -> ((s, dir) => {
-      val path = tmpDir(s"sink_${pathTag(dir)}")
+      val path = Scratch.fixture(s, "sink", dir).toString
       t(s, dir, "lineitem")
         .write.mode(SaveMode.Overwrite).partitionBy("l_returnflag").parquet(path)
       s.read.parquet(path)
@@ -461,7 +452,7 @@ object EtlOps extends graft.Bank {
     // oracle checks the overwrite MODE, not just the row values. The mode
     // is a per-write option (no session-conf mutation leaking to peers).
     "sink_partition_overwrite" -> ((s, dir) => {
-      val path = tmpDir(s"sinkpo_${pathTag(dir)}")
+      val path = Scratch.fixture(s, "sinkpo", dir).toString
       val docs = t(s, dir, "documents").select(col("doc_id"), col("lang"), col("n_chars"))
       docs.withColumn("rev", lit(0L))
         .write.mode(SaveMode.Overwrite).partitionBy("lang").parquet(path)
@@ -502,7 +493,7 @@ object EtlOps extends graft.Bank {
     // loop implies): batch 1 lands without a column, batch 2 adds it;
     // mergeSchema unifies, older rows read as NULL. Fixture staged once.
     "scan_evolve" -> ((s, dir) => {
-      val path = tmpDir(s"evolve_${pathTag(dir)}")
+      val path = Scratch.fixture(s, "evolve", dir).toString
       if (!Files.exists(Paths.get(path, "v2", "_SUCCESS"))) {
         val o = t(s, dir, "orders")
         o.filter(col("o_orderkey") % 2 === 0)

@@ -1,7 +1,7 @@
 package graft.operators
 
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
-import java.nio.file.{Files, Paths}
+import java.nio.file.Files
 import javax.imageio.ImageIO
 import java.awt.image.BufferedImage
 
@@ -380,11 +380,9 @@ object Multimodal extends graft.Bank {
     * corpora arrive in (one image per object-store key). Driver-side loop
     * is fine HERE because it stages a 64-file fixture; at scale the files
     * already exist — ingestion starts at the binaryFile scan, which is
-    * fully distributed. Per-PID root like EtlOps: two JVMs staging the
-    * same sfDir concurrently must not race. */
+    * fully distributed. */
   def stagePngDocs(s: SparkSession, dir: String): String = {
-    val p = Paths.get(System.getProperty("java.io.tmpdir"),
-      s"graft_etl_${ProcessHandle.current().pid()}", s"png_${pathTag(dir)}")
+    val p = graft.Scratch.fixture(s, "png", dir)
     Files.createDirectories(p)
     if (!Files.exists(p.resolve("_STAGED"))) {
       t(s, dir, "documents").filter(col("doc_id") < 64)

@@ -1,6 +1,5 @@
 package graft.operators
 
-import java.nio.file.Paths
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Tables._
@@ -27,24 +26,21 @@ object ScaleOps extends graft.Bank {
 
   /** One-time creation of the bucketed table pair for `join_bucketed`.
     * Cache key is a digest of the FULL sfDir path (two dirs with the same
-    * digits must not collide) and the warehouse dir is per-process, so
-    * concurrent JVMs never race on a non-atomic saveAsTable overwrite.
+    * digits must not collide); the tables live in scratch ([[graft.Scratch]]).
     * Bench calls this during warmup so the timed query measures the join,
     * not the fixture write. */
   def prepareBucketed(s: SparkSession, dir: String): (String, String) = {
     val tag = graft.Tables.pathTag(dir)
-    val base = Paths.get(System.getProperty("java.io.tmpdir"),
-      s"graft_wh_${ProcessHandle.current().pid()}")
     val oTbl = s"orders_b_$tag"
     val cTbl = s"customer_b_$tag"
     if (!s.catalog.tableExists(oTbl)) {
       // external bucketed tables (bucket metadata needs the catalog;
       // explicit path keeps the warehouse conf untouched)
       t(s, dir, "orders").write.mode(SaveMode.Overwrite)
-        .option("path", base.resolve(oTbl).toString)
+        .option("path", graft.Scratch.path(s, oTbl).toString)
         .bucketBy(8, "o_custkey").sortBy("o_custkey").saveAsTable(oTbl)
       t(s, dir, "customer").write.mode(SaveMode.Overwrite)
-        .option("path", base.resolve(cTbl).toString)
+        .option("path", graft.Scratch.path(s, cTbl).toString)
         .bucketBy(8, "c_custkey").sortBy("c_custkey").saveAsTable(cTbl)
     }
     (oTbl, cTbl)

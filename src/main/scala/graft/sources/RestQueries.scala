@@ -33,9 +33,8 @@ object RestQueries extends graft.Bank {
         .option("url", stub.url).option("pages", "20").option("pageSize", "50")
         .option("pagesPerTrigger", "5")
         .load()
-      val q = stream.writeStream.format("memory").queryName("mem_rest_ingest")
-        .outputMode("append").start()
-      try q.processAllAvailable() finally q.stop()
+      graft.streaming.Streams.drain(s, "rest_ingest", stream.writeStream
+        .format("memory").queryName("mem_rest_ingest").outputMode("append"))
       s.table("mem_rest_ingest")
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n"), dsum(col("value")).as("v"))
@@ -52,8 +51,7 @@ object RestQueries extends graft.Bank {
     // form, so the hash check spans the whole extract→load→readback loop:
     // any JSON-rendering or commit-protocol defect breaks the values.
     "dsv2_pipeline" -> ((s, _) => {
-      val out = java.nio.file.Paths.get(System.getProperty("java.io.tmpdir"),
-        s"graft_etl_${ProcessHandle.current().pid()}", "docsink_pipeline").toString
+      val out = graft.Scratch.path(s, "docsink_pipeline").toString
       s.read.format("graft.sources.RestSource")
         .option("url", stub.url).option("pages", "20").option("pageSize", "50")
         .load()

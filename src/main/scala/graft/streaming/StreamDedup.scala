@@ -1,6 +1,6 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.Files
 import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -134,81 +134,32 @@ object StreamDedup extends graft.Bank {
     members.unpersist(false)
   }
 
-  /** Move the single part-file of a coalesce(1) staging write onto a
-    * fixed name (same contract as Streams.moveSinglePart). */
-  private def moveSinglePart(from: java.nio.file.Path, to: java.nio.file.Path): Unit = {
-    val listing = Files.list(from)
-    val parts =
-      try listing.filter(_.toString.endsWith(".parquet")).toArray(new Array[java.nio.file.Path](_)).toSeq
-      finally listing.close()
-    require(parts.size == 1,
-      s"expected exactly 1 part file in $from (coalesce(1) staging), got ${parts.size}")
-    Files.move(parts.head, to, StandardCopyOption.REPLACE_EXISTING)
-  }
-
-  /** One-time staging of the documents table as two mtime-ordered files
-    * (even doc_ids, then odd) so the file stream replays two micro-batches
-    * and planted near-dup pairs with adjacent ids land CROSS-batch.
-    * Idempotent per (PID, sf dir), like Streams.stageUpsertInput. */
-  private[graft] def stageDocBatches(s: org.apache.spark.sql.SparkSession, dir: String): java.nio.file.Path = {
-    val tag = graft.Tables.pathTag(dir)
-    val inDir = Paths.get(System.getProperty("java.io.tmpdir"),
-      s"graft_stream_${ProcessHandle.current().pid()}", s"docs_$tag")
-    if (!Files.exists(inDir.resolve("0_batch.parquet")) ||
-        !Files.exists(inDir.resolve("1_batch.parquet"))) {
-      org.apache.commons.io.FileUtils.deleteQuietly(inDir.toFile)
-      Files.createDirectories(inDir)
+  /** The documents table as two batches (even doc_ids, then odd) so the
+    * file stream replays two micro-batches and planted near-dup pairs with
+    * adjacent ids land CROSS-batch. */
+  private[graft] def stageDocBatches(s: org.apache.spark.sql.SparkSession, dir: String): java.nio.file.Path =
+    Streams.stageBatches(graft.Scratch.fixture(s, "docs", dir), {
       val docs = graft.Tables.t(s, dir, "documents").select(col("doc_id"), col("text"))
-      docs.filter(col("doc_id") % 2 === 0)
-        .coalesce(1).write.mode(SaveMode.Overwrite).parquet(inDir.resolve("b1").toString)
-      docs.filter(col("doc_id") % 2 === 1)
-        .coalesce(1).write.mode(SaveMode.Overwrite).parquet(inDir.resolve("b2").toString)
-      moveSinglePart(inDir.resolve("b1"), inDir.resolve("0_batch.parquet"))
-      moveSinglePart(inDir.resolve("b2"), inDir.resolve("1_batch.parquet"))
-      // file-stream ordering is by mtime — pin it (see stageUpsertInput)
-      Files.setLastModifiedTime(inDir.resolve("0_batch.parquet"),
-        java.nio.file.attribute.FileTime.fromMillis(1000000L))
-      Files.setLastModifiedTime(inDir.resolve("1_batch.parquet"),
-        java.nio.file.attribute.FileTime.fromMillis(2000000L))
-    }
-    inDir
-  }
+      Seq(docs.filter(col("doc_id") % 2 === 0), docs.filter(col("doc_id") % 2 === 1))
+    })
 
   /** Run the incremental-LSH dedup stream over staged document batches
     * into a FRESH per-invocation store/output (the store accumulates by
     * design — reuse across runs would dedup against a previous run). */
   def run(s: org.apache.spark.sql.SparkSession, inDir: java.nio.file.Path): DataFrame = {
-    // per-run store/checkpoint/out are ephemeral replay state → scratch
-    // medium (tmpfs when present; spark.graft.stream.scratchDir overrides
-    // — see Streams.scratchBase), deleted below either way
-    val runDir = Files.createTempDirectory(Streams.scratchBase(s), "graft_sdn_")
+    val runDir = graft.Scratch.fresh(s, "sdn_")
     val storeDir = runDir.resolve("store")
     val outDir = runDir.resolve("out")
-    val scoped = org.apache.spark.sql.graftbridge.Bridge.cloneSession(s)
-    // size-derived narrow parallelism for the bounded replay, exactly as
-    // Streams.streamShufflePartitions (optimization r16): input bytes =
-    // the staged batch files
-    val nBytes = try {
-      val l = Files.list(inDir)
-      try l.toArray(new Array[java.nio.file.Path](_))
-        .filter(p => p.toString.endsWith(".parquet")).map(Files.size).sum
-      finally l.close()
-    } catch { case _: Throwable => 0L }
-    scoped.conf.set("spark.sql.shuffle.partitions",
-      Streams.streamShufflePartitions(s, nBytes).toString)
-    val src = scoped.readStream.schema(docSchema)
+    val scoped = Streams.replaySession(s, inDir)
+    Streams.drain(s, "sdn", scoped.readStream.schema(docSchema)
       .option("maxFilesPerTrigger", "1").parquet(inDir.toString)
-    val q = src.writeStream
-      .foreachBatch((b: DataFrame, id: Long) => processBatch(b, id, storeDir, outDir))
-      .option("checkpointLocation", runDir.resolve("ckpt").toString)
-      .start()
-    try q.processAllAvailable() finally q.stop()
+      .writeStream.foreachBatch((b: DataFrame, id: Long) => processBatch(b, id, storeDir, outDir)))
     // decisions are batch-partitioned (batch=N dirs); the partition
     // column carries the batch id. Materialize the (doc-count-sized)
-    // decision frame eagerly so the per-invocation runDir — store,
-    // checkpoint, output — can be deleted HERE: without the cleanup every
-    // invocation (bench warmup + timed run + specs) leaves a full
-    // store+checkpoint tree in tmp for the JVM/tmp lifetime.
+    // decision frame eagerly so the per-invocation runDir — store and
+    // output — can be deleted HERE: without the cleanup every invocation
+    // (bench warmup + timed run + specs) would keep a full store tree
+    // until the context stops.
     val res = s.read.parquet(outDir.toString)
       .select(col("doc_id"), col("batch").cast("long").as("batch_id"),
         col("kept"), col("dup_of"))

@@ -1,7 +1,10 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.attribute.FileTime
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.streaming.DataStreamWriter
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types._
@@ -28,11 +31,11 @@ import graft.Tables.{dsum, t, EventTypes, QFn}
   */
 object Streams extends graft.Bank {
 
-  // per-staged-dir memo of the events `ts` physical type (see eventsStream)
+  // memo of the events `ts` physical type per source file version (see eventsStream)
   private val tsTypeCache = new graft.ArtifactCache[DataType]("events ts type",
     _ => (), graft.ArtifactCache.KeyDriven(
-      "schema-probe memo keyed by staged dir — one footer read, rebuilt " +
-        "on demand; nothing dir-shaped to pre-build"))
+      "schema-probe memo keyed by the events file's (path, size, mtime) — one " +
+        "footer read, rebuilt on demand; nothing dir-shaped to pre-build"))
 
   private val eventSchema = StructType(Seq(
     StructField("event_id", LongType),
@@ -44,27 +47,26 @@ object Streams extends graft.Bank {
 
   /** File-source stream over the events parquet with µs timestamps.
     * The file-stream source needs a directory, so the single events file is
-    * staged (symlinked) into a tmp dir per scale factor. All staging dirs
-    * below are per-PID (like EtlOps/ScaleOps) so concurrent JVMs never race
-    * on a non-atomic Overwrite of a shared fixture. */
+    * staged (symlinked) into a scratch dir per scale factor. */
   private[graft] def eventsStream(s: SparkSession, sfDir: String): DataFrame = {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val tag = graft.Tables.pathTag(sfDir)
-    val dir = Paths.get(System.getProperty("java.io.tmpdir"), s"graft_stream_${ProcessHandle.current().pid()}", s"events_$tag")
+    val dir = graft.Scratch.fixture(s, "events", sfDir)
     Files.createDirectories(dir)
+    val src = Paths.get(sfDir, "events.parquet")
     val link = dir.resolve("events.parquet")
-    if (!Files.exists(link))
-      Files.createSymbolicLink(link, Paths.get(sfDir, "events.parquet"))
+    if (!Files.exists(link, java.nio.file.LinkOption.NOFOLLOW_LINKS))
+      Files.createSymbolicLink(link, src)
     // the stream schema must match what the generator actually wrote for
     // `ts` (ns-INT64 in earlier drops, µs TIMESTAMP in current ones) — a
     // one-footer batch read resolves it, then ts normalizes to a session-tz
     // TIMESTAMP exactly like Tables.events does for the batch path. The
-    // probe is MEMOIZED per staged dir (optimization r17): it is a
-    // driver-side listing + footer read that every stream query's timed
-    // region otherwise repays (twice for the dual-source interval join)
-    // for a schema that is immutable per dir.
-    val tsType = tsTypeCache.getOrElseUpdate(dir.toString,
-      s.read.parquet(dir.toString).schema("ts").dataType)
+    // probe is MEMOIZED (optimization r17): it is a listing + footer read
+    // that every stream query's timed region otherwise repays (twice for
+    // the dual-source interval join). The key is the source
+    // file's (path, size, mtime), so a regenerated file is probed again.
+    val key = s"$src|${Files.size(src)}|${Files.getLastModifiedTime(src).toMillis}"
+    val tsType = tsTypeCache.getOrElseUpdate(key,
+      s.read.parquet(src.toString).schema("ts").dataType)
     val schema = StructType(eventSchema.map(f =>
       if (f.name == "ts") f.copy(dataType = tsType) else f))
     val raw = s.readStream.schema(schema).parquet(dir.toString)
@@ -73,18 +75,37 @@ object Streams extends graft.Bank {
     else raw.withColumn("ts", col("ts").cast("timestamp"))
   }
 
-  /** Move the single part-file of a coalesce(1) staging write onto a fixed
-    * name. Closes the directory stream (Files.list leaks the handle
-    * otherwise) and refuses >1 part file — a blind REPLACE_EXISTING move
-    * onto one destination would silently drop data. */
-  private def moveSinglePart(from: java.nio.file.Path, to: java.nio.file.Path): Unit = {
-    val listing = Files.list(from)
-    val parts =
-      try listing.filter(_.toString.endsWith(".parquet")).toArray(new Array[java.nio.file.Path](_)).toSeq
-      finally listing.close()
-    require(parts.size == 1,
-      s"expected exactly 1 part file in $from (coalesce(1) staging), got ${parts.size}")
-    Files.move(parts.head, to, StandardCopyOption.REPLACE_EXISTING)
+  /** Stage `frames` once as `<i>_batch.parquet` files in `inDir`, one file
+    * per frame, so a file stream with maxFilesPerTrigger=1 replays them in
+    * order, one per trigger. Idempotent: an `inDir` whose `_STAGED` marker
+    * (written last) exists is reused, so repeat runs (and the bench) time
+    * the stream, not this write. FileStreamSource orders by modification
+    * time, not name, and the staged parts' mtimes can tie on
+    * coarse-grained filesystems, so each file's mtime is pinned, strictly
+    * increasing. */
+  private[graft] def stageBatches(inDir: Path, frames: => Seq[DataFrame]): Path = {
+    if (!Files.exists(inDir.resolve("_STAGED"))) {
+      FileUtils.deleteQuietly(inDir.toFile)
+      Files.createDirectories(inDir)
+      frames.zipWithIndex.foreach { case (frame, i) =>
+        val part = inDir.resolve(s"_part$i")
+        frame.coalesce(1).write.mode(SaveMode.Overwrite).parquet(part.toString)
+        val listing = Files.list(part)
+        val parts =
+          try listing.filter(_.toString.endsWith(".parquet")).toArray(new Array[Path](_))
+          finally listing.close()
+        // a blind REPLACE_EXISTING move of several parts onto one name
+        // would silently drop data
+        require(parts.length == 1,
+          s"expected exactly 1 part file in $part (coalesce(1) staging), got ${parts.length}")
+        val staged = inDir.resolve(s"${i}_batch.parquet")
+        Files.move(parts.head, staged, StandardCopyOption.REPLACE_EXISTING)
+        FileUtils.deleteQuietly(part.toFile)
+        Files.setLastModifiedTime(staged, FileTime.fromMillis((i + 1) * 1000000L))
+      }
+      Files.createFile(inDir.resolve("_STAGED"))
+    }
+    inDir
   }
 
   /** Keyed MERGE of one micro-batch into a parquet "collection", rewriting
@@ -176,60 +197,15 @@ object Streams extends graft.Bank {
     }
   }
 
-  /** One-time staging of the upsert-sink input feed: batch 1 = the raw
-    * events, batch 2 = corrected duplicates (value × 2 for every 5th id),
-    * named so the file stream replays them in order, one per trigger.
-    * Idempotent (marker files) so repeat runs — and the bench — time the
-    * stream + merge, not this fixture write. */
-  private[graft] def stageUpsertInput(s: SparkSession, dir: String): java.nio.file.Path = {
+  /** The upsert-sink input feed: batch 0 = the raw events, batch 1 =
+    * corrected duplicates (value × 2 for every 5th id). */
+  private[graft] def stageUpsertInput(s: SparkSession, dir: String): Path = {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val tag = graft.Tables.pathTag(dir)
-    val inDir = Paths.get(System.getProperty("java.io.tmpdir"), s"graft_stream_${ProcessHandle.current().pid()}", s"in_$tag")
-    if (!Files.exists(inDir.resolve("0_batch.parquet")) ||
-        !Files.exists(inDir.resolve("1_batch.parquet"))) {
-      org.apache.commons.io.FileUtils.deleteQuietly(inDir.toFile)
-      Files.createDirectories(inDir)
+    stageBatches(graft.Scratch.fixture(s, "in", dir), {
       val raw = s.read.parquet(s"$dir/events.parquet")
         .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
-      raw.coalesce(1).write.mode(SaveMode.Overwrite).parquet(inDir.resolve("b1").toString)
-      raw.filter(col("event_id") % 5 === 0)
-        .withColumn("value", col("value") * 2)
-        .coalesce(1).write.mode(SaveMode.Overwrite).parquet(inDir.resolve("b2").toString)
-      moveSinglePart(inDir.resolve("b1"), inDir.resolve("0_batch.parquet"))
-      moveSinglePart(inDir.resolve("b2"), inDir.resolve("1_batch.parquet"))
-      // FileStreamSource orders by modification time, not name — the moves
-      // preserve the staged parts' mtimes, which can tie on coarse-grained
-      // filesystems and flip batch order. Pin strictly increasing mtimes.
-      Files.setLastModifiedTime(inDir.resolve("0_batch.parquet"),
-        java.nio.file.attribute.FileTime.fromMillis(1000000L))
-      Files.setLastModifiedTime(inDir.resolve("1_batch.parquet"),
-        java.nio.file.attribute.FileTime.fromMillis(2000000L))
-    }
-    inDir
-  }
-
-  /** Base dir for the replays' EPHEMERAL per-run state — checkpoint dirs,
-    * the dedup signature store, the upsert-sink target. Every micro-batch
-    * commits an offset-log write plus per-partition state-store delta
-    * files into the checkpoint dir, and that commit I/O is a fixed floor
-    * under every stream_* query's timing (VERDICT r16 item 7) — scratch
-    * state is shuffle-local-disk-class data (guide §5/§6), so the medium
-    * is a deployment knob: `spark.graft.stream.scratchDir` (a fast local
-    * SSD on a real cluster; durable shared storage for anything that must
-    * survive the driver, the same lever as RoundPin's
-    * spark.graft.checkpointDir). Default java.io.tmpdir. A tmpfs
-    * (/dev/shm) default was MEASURED AND REJECTED in this sandbox
-    * (optimization r17): stream_distinct_users read 3.6–9.5 s with state
-    * on /dev/shm vs 2.4–2.8 s on /tmp — shmem writes are slower than
-    * page-cached disk writes under this VM runtime, so autodetecting
-    * tmpfs would have shipped a regression. */
-  private[graft] def scratchBase(s: SparkSession): java.nio.file.Path = {
-    val base = s.conf.getOption("spark.graft.stream.scratchDir")
-      .filter(_.nonEmpty)
-      .getOrElse(System.getProperty("java.io.tmpdir"))
-    val p = Paths.get(base, s"graft_scratch_${ProcessHandle.current().pid()}")
-    Files.createDirectories(p)
-    p
+      Seq(raw, raw.filter(col("event_id") % 5 === 0).withColumn("value", col("value") * 2))
+    })
   }
 
   /** Shuffle-partition count for the bounded stream replays — SIZE-DERIVED
@@ -252,36 +228,50 @@ object Streams extends graft.Bank {
         math.max(2, math.min(s.sparkContext.defaultParallelism, byBytes))
       }
 
-  /** Run a streaming aggregation to completion into a memory sink.
-    * State-store instances scale with shuffle partitions; for these
-    * bounded replays the size-derived narrow setting cuts per-batch
-    * state-commit overhead without changing results. The narrow setting
-    * lives in a CLONED session (shared SparkContext, isolated SQLConf —
-    * the stream is built by `build` against that clone), so the caller's
-    * session conf is never mutated and a concurrent query on it can't
-    * silently inherit narrow parallelism. The memory-sink view and the
-    * returned frame are bound to the clone, which is dropped with it.
-    * The clone reuses the classes the caller's session compiled ([[graft.Tuning]]). */
+  /** A clone of `s` for one bounded replay of the parquet input at `input`
+    * (a file, or the `.parquet` files directly in a dir): shared
+    * SparkContext, its own SQLConf with the size-derived shuffle width.
+    * The caller's session conf is never mutated, so a concurrent query on
+    * it can't silently inherit narrow parallelism. The clone reuses the
+    * classes the caller's session compiled ([[graft.Tuning]]). */
+  private[graft] def replaySession(s: SparkSession, input: Path): SparkSession = {
+    val bytes = scala.util.Try {
+      val files = if (!Files.isDirectory(input)) Array(input) else {
+        val l = Files.list(input)
+        try l.filter(_.toString.endsWith(".parquet")).toArray(new Array[Path](_))
+        finally l.close()
+      }
+      files.map(Files.size).sum
+    }.getOrElse(0L)
+    val scoped = org.apache.spark.sql.graftbridge.Bridge.cloneSession(s)
+    scoped.conf.set("spark.sql.shuffle.partitions",
+      streamShufflePartitions(s, bytes).toString)
+    scoped
+  }
+
+  /** Drain a bounded stream: start `writer` with an explicit checkpoint in
+    * a fresh scratch dir, process all available input, stop, and delete
+    * the checkpoint — these replays have nothing to recover. The query
+    * runs on the session `writer` was built from. */
+  private[graft] def drain(s: SparkSession, name: String, writer: DataStreamWriter[_]): Unit = {
+    val ckpt = graft.Scratch.fresh(s, s"ckpt_${name}_")
+    val q = writer.option("checkpointLocation", ckpt.toString).start()
+    try q.processAllAvailable() finally {
+      q.stop()
+      FileUtils.deleteQuietly(ckpt.toFile)
+    }
+  }
+
+  /** Run a streaming aggregation to completion into a memory sink, on a
+    * [[replaySession]]: state-store instances and their per-batch commits
+    * scale with shuffle partitions, and the narrow width cuts that
+    * overhead without changing results. The memory-sink view and the
+    * returned frame are bound to the clone, which is dropped with it. */
   private def runToTable(s: SparkSession, dir: String,
       build: SparkSession => DataFrame,
       name: String, mode: String): DataFrame = {
-    val scoped = org.apache.spark.sql.graftbridge.Bridge.cloneSession(s)
-    val nBytes = try Files.size(Paths.get(dir, "events.parquet")) catch {
-      case _: Throwable => 0L
-    }
-    scoped.conf.set("spark.sql.shuffle.partitions",
-      streamShufflePartitions(s, nBytes).toString)
-    // explicit checkpoint on the scratch medium (see scratchBase) instead
-    // of Spark's implicit temp dir under java.io.tmpdir; deleted with the
-    // query — these bounded replays have nothing to recover
-    val ckpt = Files.createTempDirectory(scratchBase(s), s"ckpt_${name}_")
-    val q = build(scoped).writeStream.format("memory").queryName(name)
-      .option("checkpointLocation", ckpt.toString)
-      .outputMode(mode).start()
-    try { q.processAllAvailable() } finally {
-      q.stop()
-      org.apache.commons.io.FileUtils.deleteQuietly(ckpt.toFile)
-    }
+    val scoped = replaySession(s, Paths.get(dir, "events.parquet"))
+    drain(s, name, build(scoped).writeStream.format("memory").queryName(name).outputMode(mode))
     scoped.table(name)
   }
 
@@ -559,28 +549,17 @@ object Streams extends graft.Bank {
     // replay is idempotent (latest batch wins per event_id).
     "stream_upsert_sink" -> ((s, dir) => {
       val inDir = stageUpsertInput(s, dir)
-      val tag = graft.Tables.pathTag(dir)
-      // per-run scratch collection (fresh every invocation — the replay IS
-      // the query); a durable deployment target comes via scratchDir conf
-      val tgtDir = scratchBase(s).resolve(s"tgt_$tag")
-      org.apache.commons.io.FileUtils.deleteQuietly(tgtDir.toFile)
+      // per-run collection, fresh every invocation (the replay IS the query)
+      val tgtDir = graft.Scratch.fixture(s, "tgt", dir)
+      FileUtils.deleteQuietly(tgtDir.toFile)
       val stream = s.readStream
         .schema(StructType(Seq(
           StructField("event_id", LongType), StructField("user_id", LongType),
           StructField("event_type", StringType), StructField("value", DoubleType))))
         .option("maxFilesPerTrigger", "1").option("latestFirst", "false")
         .parquet(inDir.toString)
-      val ckpt = Files.createTempDirectory(scratchBase(s), "ckpt_upsert_")
-      val q = stream.writeStream.outputMode("append")
-        .option("checkpointLocation", ckpt.toString)
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
-          upsertBatch(batch, tgtDir, batchId)
-        }
-        .start()
-      try { q.processAllAvailable() } finally {
-        q.stop()
-        org.apache.commons.io.FileUtils.deleteQuietly(ckpt.toFile)
-      }
+      drain(s, "upsert", stream.writeStream.outputMode("append")
+        .foreachBatch((batch: DataFrame, batchId: Long) => upsertBatch(batch, tgtDir, batchId)))
       s.read.parquet(tgtDir.toString)
         .select(col("event_id"), col("event_type"), round(col("value"), 6).as("value"))
         .orderBy(col("event_id"))

@@ -227,12 +227,9 @@ class OperatorSpec extends SparkSuite {
 
   test("sink_parquet writes real partition directories") {
     q("sink_parquet").collect() // runs the write
-    // NB: must be the pid-suffixed dir THIS jvm wrote — the bare
-    // graft_etl/ path was a round-1 layout that lingers in /tmp and made
-    // this assertion pass against stale files
-    val dir = new java.io.File(
-      System.getProperty("java.io.tmpdir"),
-      s"graft_etl_${ProcessHandle.current().pid()}/sink_${graft.Tables.pathTag(sf)}")
+    // the dir THIS context wrote: a shared path could hold stale files
+    // from an earlier run and pass against them
+    val dir = graft.Scratch.fixture(spark, "sink", sf).toFile
     val parts = dir.listFiles().filter(_.getName.startsWith("l_returnflag="))
     assert(parts.map(_.getName).sorted.toSeq ===
       Seq("l_returnflag=A", "l_returnflag=N", "l_returnflag=R"))
@@ -240,9 +237,7 @@ class OperatorSpec extends SparkSuite {
 
   test("sink_compact: staged layout is genuinely fragmented before compaction") {
     q("sink_compact").collect() // stages fragmented + compacted layouts
-    val frag = new java.io.File(
-      System.getProperty("java.io.tmpdir"),
-      s"graft_etl_${ProcessHandle.current().pid()}/frag_docs_${graft.Tables.pathTag(sf)}")
+    val frag = graft.Scratch.fixture(spark, "frag_docs", sf).toFile
     val langDirs = frag.listFiles().filter(_.getName.startsWith("lang="))
     assert(langDirs.nonEmpty)
     // repartition(16) before partitionBy fans each lang over many tasks →
@@ -3173,10 +3168,9 @@ class PropertySpec extends SparkSuite {
   }
 
   test("sink_partition_overwrite: replaces exactly the en partition, in place") {
-    import java.nio.file.{Files, Paths}
+    import java.nio.file.Files
     q("sink_partition_overwrite").collect()   // base write + dynamic delta
-    val root = Paths.get(System.getProperty("java.io.tmpdir"),
-      s"graft_etl_${ProcessHandle.current().pid()}", s"sinkpo_${graft.Tables.pathTag(sf)}")
+    val root = graft.Scratch.fixture(spark, "sinkpo", sf)
     // every partition dir survives the delta (static overwrite would have
     // truncated the table root down to lang=en)
     for (lang <- Seq("de", "en", "es", "fr", "zh"))

@@ -427,6 +427,19 @@ class PlanSpec extends SparkSuite {
     }
   }
 
+  test("sorted_intersect_ge rejects arrays with nullable elements at analysis, naming itself") {
+    import org.apache.spark.sql.functions._
+    val df = spark.range(1).select(
+      array(lit(1L), lit(2L)).as("a"),                    // containsNull = false
+      array(lit(1L), lit(null).cast("long")).as("b"))     // containsNull = true
+    val e = intercept[org.apache.spark.sql.AnalysisException](
+      df.select(graft.functions.SortedIntersectGE
+        .sorted_intersect_ge(col("a"), col("b"), 1)).collect())
+    assert(e.getMessage.contains("sorted_intersect_ge"), e.getMessage)
+    assert(df.select(graft.functions.SortedIntersectGE
+      .sorted_intersect_ge(col("a"), col("a"), 2)).head.getBoolean(0))
+  }
+
   test("text_tfidf / text_langid reuse the pinned token frame (no double scan)") {
     // the shared tf/tok subtree is persisted; both the broadcast build and
     // the probe side must read the InMemoryRelation, not recompute the
