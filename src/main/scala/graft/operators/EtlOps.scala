@@ -291,7 +291,7 @@ object EtlOps extends graft.Bank {
         .write.format("graft.sources.DocSink").mode(SaveMode.Overwrite)
         .option("path", out).save()
       s.read.schema("doc_id BIGINT, lang STRING, source STRING, n_chars BIGINT")
-        .json(s"$out/*.jsonl")
+        .option("pathGlobFilter", "*.jsonl").json(out)
         .groupBy(col("lang"))
         .agg(count(lit(1)).as("n_docs"), sum(col("n_chars")).as("chars"))
         .orderBy(col("lang"))

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types.DecimalType
 import graft.Tables._
+import graft.{ArtifactCache, Pinned}
 import graft.functions.CosineSim.cosine_sim
 
 /** §2.I similarity search over the `embeddings` table (BASELINE.json north
@@ -310,32 +311,20 @@ object VectorOps extends graft.Bank {
   /** The approximate k-NN graph (vec_id, rk, nbr_id, sim), K=4: LSH-seeded
     * init top-K, one NN-Descent re-rank over N ∪ N∘N ∪ Nᵀ — the shared
     * construction behind vec_knn_graph (which just orders it) and
-    * vec_hubness (which folds its in-degrees). Built ONCE per (JVM, dir)
-    * into a context-cached RDD (ADVICE r13: vec_hubness re-ran the whole
-    * construction — 26.9 s duplicated at sf~1; the corpusPairs pattern):
-    * both consumers read the one materialized graph, warmAll pre-builds
-    * it, and the RDD cache survives catalog.clearCache between queries. */
-  private val knnGraphCache = new graft.ArtifactCache[
-    (org.apache.spark.rdd.RDD[org.apache.spark.sql.Row],
-     org.apache.spark.sql.types.StructType)]("knn graph",
-    _._1.unpersist(blocking = false),
-    graft.ArtifactCache.PerDir((s, d) => { knnGraphFrame(s, d); () }))
+    * vec_hubness (which folds its in-degrees). Pinned ONCE per (JVM, dir)
+    * (ADVICE r13: vec_hubness re-ran the whole construction — 26.9 s
+    * duplicated at sf~1): both consumers read the one materialized graph. */
+  private val knnGraphCache =
+    ArtifactCache.frames[Pinned]("knn graph")(knnGraphFrame(_, _))
 
-  private def knnGraphFrame(s: SparkSession, dir: String): DataFrame = {
+  private def knnGraphFrame(s: SparkSession, dir: String): DataFrame =
     // key folds in the RESOLVED occupancy (ADVICE r14): buildKnnGraph
     // depends on the conf-overridable plane count, and a dir-only key
     // would keep serving the old-plane graph after a retune while the
     // uncached lshRangePairs consumers switched immediately — the ANN
     // family must stay internally consistent without a manual evict
-    val (rdd, schema) = knnGraphCache.getOrElseUpdate(
-      s"$dir@occ${graft.Knobs.lshTargetOccupancy(s)}", {
-      val g = buildKnnGraph(s, dir)
-      val r = (g.rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK), g.schema)
-      r._1.count() // force now — no consumer query ever pays the build
-      r
-    })
-    s.createDataFrame(rdd, schema)
-  }
+    knnGraphCache.getOrElseUpdate(s"$dir@occ${graft.Knobs.lshTargetOccupancy(s)}",
+      Pinned(buildKnnGraph(s, dir))).on(s)
 
   /** Standing LSH bucket index for the incremental-ingest tier
     * (`vec_index_incremental`; VERDICT r14 item 6 — dedup_incremental's
@@ -344,30 +333,23 @@ object VectorOps extends graft.Bank {
     * RESIDENT count. An index's plane count is its persisted layout (the
     * `_PK_BUCKETS` discipline): arrivals PROBE it with the index's own
     * planes — they never re-derive the plane count or rebuild the index.
-    * Context-cached per (dir, occupancy) like the knn graph: the RDD
-    * materializes once (warmed pre-sweep, key folds in the resolved
-    * occupancy per ADVICE r14), so every ingest batch pays batch-sized
-    * bucket hashing plus bucket-local joins. At 100 TB this is the
-    * standing ANN index a continuously-growing embedding store
+    * Pinned per (dir, occupancy) like the knn graph (the key folds in the
+    * resolved occupancy per ADVICE r14), so every ingest batch pays
+    * batch-sized bucket hashing plus bucket-local joins. At 100 TB this
+    * is the standing ANN index a continuously-growing embedding store
     * maintains — new shards fold in by bucket append, not rebuild. */
-  private val standingIdxCache = new graft.ArtifactCache[
-    (Int, org.apache.spark.rdd.RDD[org.apache.spark.sql.Row],
-     org.apache.spark.sql.types.StructType)]("standing lsh index",
-    _._2.unpersist(blocking = false),
-    graft.ArtifactCache.PerDir((s, d) => { standingIndex(s, d); () }))
+  private val standingIdxCache =
+    ArtifactCache.frames[(Int, Pinned)]("standing lsh index")(standingIndex(_, _))
 
   private def standingIndex(s: SparkSession, dir: String): (Int, DataFrame) = {
     val occ = graft.Knobs.lshTargetOccupancy(s)
-    val (planes, rdd, schema) = standingIdxCache.getOrElseUpdate(s"$dir@occ$occ", {
+    val (planes, idx) = standingIdxCache.getOrElseUpdate(s"$dir@occ$occ", {
       val standing = embStore(s, dir).filter(col("vec_id") % 16 =!= 7)
       val p = lshPlaneCount(standing.count(), occ)
-      val idx = standing.withColumn("bucket",
-        graft.functions.LshBucket.lsh_bucket(col("embedding"), lshPlanes(p)))
-      val r = idx.rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      r.count() // force — no ingest batch ever pays the index build
-      (p, r, idx.schema)
+      (p, Pinned(standing.withColumn("bucket",
+        graft.functions.LshBucket.lsh_bucket(col("embedding"), lshPlanes(p)))))
     })
-    (planes, s.createDataFrame(rdd, schema))
+    (planes, idx.on(s))
   }
 
   private[graft] def buildKnnGraph(s: SparkSession, dir: String): DataFrame = {
@@ -956,7 +938,7 @@ object VectorOps extends graft.Bank {
     // Incremental-ingest ANN tier: the newest ingest slice
     // (vec_id % 16 = 7, the deterministic stand-in for "this batch's
     // arrivals") probes the STANDING LSH bucket index — planes frozen
-    // with the resident corpus, index context-cached and built once per
+    // with the resident corpus, index pinned and built once per
     // (dir, occupancy) — and reports each arrival's top-3 resident
     // neighbors among its bucket-mates. Per-batch cost is batch-sized
     // hashing + bucket-local joins; the index is NEVER rebuilt on ingest
@@ -1765,55 +1747,36 @@ object VectorOps extends graft.Bank {
   private[graft] val KmeansRounds = graft.Knobs.KmeansRoundsDefault
 
   /** The bounded-Lloyd result (final assignment + final centroids) as a
-    * context-cached artifact shared by vec_kmeans and vec_cluster_nmi —
-    * both consumed the same loop, each paying the 3-round build per
-    * query (~2.5 s in-sweep each at sf0.1); the knn-graph/codebook
-    * pattern builds it once per (dir, rounds) and both read the cached
-    * RDDs. The key folds in the RESOLVED rounds knob (it is a semantic
-    * round bound — a retune must rebuild, and unsetting must serve the
-    * original default-rounds clustering; the occ-keyed knn cache's
-    * ADVICE r14 discipline). */
-  private val kmeansCache = new graft.ArtifactCache[
-    (org.apache.spark.rdd.RDD[org.apache.spark.sql.Row],
-     org.apache.spark.sql.types.StructType,
-     org.apache.spark.rdd.RDD[org.apache.spark.sql.Row],
-     org.apache.spark.sql.types.StructType)]("kmeans assignment",
-    t => { t._1.unpersist(blocking = false); t._3.unpersist(blocking = false) },
-    graft.ArtifactCache.PerDir((s, d) => { kmeansAssignCent(s, d); () }))
+    * pinned artifact shared by vec_kmeans and vec_cluster_nmi — both
+    * consumed the same loop, each paying the 3-round build per query
+    * (~2.5 s in-sweep each at sf0.1); it builds once per (dir, rounds)
+    * and both read the pinned frames. The key folds in the RESOLVED
+    * rounds knob (it is a semantic round bound — a retune must rebuild,
+    * and unsetting must serve the original default-rounds clustering;
+    * the occ-keyed knn cache's ADVICE r14 discipline). */
+  private val kmeansCache =
+    ArtifactCache.frames[(Pinned, Pinned)]("kmeans assignment")(kmeansAssignCent(_, _))
 
   private def kmeansAssignCent(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
     val rounds = graft.Knobs.kmeansRounds(s)
-    val (ar, asch, cr, csch) = kmeansCache.getOrElseUpdate(s"$dir@r$rounds", {
-      val (a, c) = buildKmeans(s, dir)
-      val arr = a.rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK); arr.count() // force — consumers never pay the build
-      val crr = c.rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK); crr.count()
-      (arr, a.schema, crr, c.schema)
+    val (a, c) = kmeansCache.getOrElseUpdate(s"$dir@r$rounds", {
+      val (assign, cent) = buildKmeans(s, dir)
+      (Pinned(assign), Pinned(cent))
     })
-    (s.createDataFrame(ar, asch), s.createDataFrame(cr, csch))
+    (a.on(s), c.on(s))
   }
 
-  /** The spherical bounded-Lloyd assignment as the same class of
-    * context-cached artifact as [[kmeansCache]]: the 3-round unit-sphere
-    * loop was the second-highest in-sweep cost (2.8 s isolated at
-    * sf0.1), rebuilt on every vec_spherical_kmeans call; now it builds
-    * once per (dir, rounds) in warmup and the query folds the cached
-    * (vec_id, k, dot) rows. */
-  private val sphCache = new graft.ArtifactCache[
-    (org.apache.spark.rdd.RDD[org.apache.spark.sql.Row],
-     org.apache.spark.sql.types.StructType)]("spherical kmeans assignment",
-    _._1.unpersist(blocking = false),
-    graft.ArtifactCache.PerDir((s, d) => { sphericalAssign(s, d); () }))
+  /** The spherical bounded-Lloyd assignment, pinned like [[kmeansCache]]:
+    * the 3-round unit-sphere loop was the second-highest in-sweep cost
+    * (2.8 s isolated at sf0.1), rebuilt on every vec_spherical_kmeans
+    * call; now it builds once per (dir, rounds) in warmup and the query
+    * folds the pinned (vec_id, k, dot) rows. */
+  private val sphCache =
+    ArtifactCache.frames[Pinned]("spherical kmeans assignment")(sphericalAssign(_, _))
 
-  private def sphericalAssign(s: SparkSession, dir: String): DataFrame = {
-    val rounds = graft.Knobs.kmeansRounds(s)
-    val (rdd, schema) = sphCache.getOrElseUpdate(s"$dir@r$rounds", {
-      val a = buildSpherical(s, dir)
-      val r = a.rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      r.count() // force — the query never pays the build
-      (r, a.schema)
-    })
-    s.createDataFrame(rdd, schema)
-  }
+  private def sphericalAssign(s: SparkSession, dir: String): DataFrame =
+    sphCache.getOrElseUpdate(s"$dir@r${graft.Knobs.kmeansRounds(s)}",
+      Pinned(buildSpherical(s, dir))).on(s)
 
   /** The unit-sphere Lloyd loop (final (vec_id, k, dot) assignment):
     * exact-decimal dot products, argMAX under a (dot desc, k) total

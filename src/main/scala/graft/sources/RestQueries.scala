@@ -61,7 +61,7 @@ object RestQueries extends graft.Bank {
         .option("path", out).save()
       s.read
         .schema("event_id BIGINT, event_type STRING, value DOUBLE, _ingested_at TIMESTAMP")
-        .json(s"$out/*.jsonl")
+        .option("pathGlobFilter", "*.jsonl").json(out)
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n"), dsum(col("value")).as("v"))
         .orderBy(col("event_type"))

@@ -104,7 +104,7 @@ object RestSource {
 
   /** First-page sampling inference: fetch page 0 once and merge the field
     * types observed across its records. Driver-side, one request — but the
-    * same bounded-retry loop as the scan path (RestHttp.fetchArray): a
+    * same bounded-retry loop as the scan path (RestHttp.fetchNode): a
     * transient 429/5xx during inference must not fail a query the readers
     * would have survived. */
   def sampleSchema(options: CaseInsensitiveStringMap): StructType = {
@@ -122,17 +122,8 @@ object RestSource {
     val target = new java.net.URI(url + sep + params.mkString("&")).toURL
     val node = RestHttp.fetchNode(target, auth, options.getInt("maxRetries", 4),
       headers = headers)
-    val elems =
-      if (node.isArray) node.elements().asScala.toVector
-      else {
-        val dataField = Option(options.get("dataField")).getOrElse("records")
-        val data = node.get(dataField)
-        if (data == null || !data.isArray)
-          throw new java.io.IOException(
-            s"rest_source: response from $url is neither a JSON array nor an " +
-              s"object with array field '$dataField': $node")
-        data.elements().asScala.toVector
-      }
+    val elems = RestHttp.records(node,
+      Option(options.get("dataField")).getOrElse("records"), s"response from $url").toVector
     if (elems.isEmpty)
       throw new java.io.IOException(
         s"rest_source: schema sampling needs a non-empty JSON array page from $url")
@@ -459,13 +450,20 @@ private[sources] object RestHttp {
     null // unreachable
   }
 
-  /** GET + retry loop → JSON array body (the page-numbered protocol). */
-  def fetchArray(target: java.net.URL, auth: RestAuth, maxRetries: Int,
-      pace: () => Unit = () => (), warn: String => Unit = _ => ()): Vector[JsonNode] = {
-    val node = fetchNode(target, auth, maxRetries, pace, warn)
-    if (!node.isArray) throw new java.io.IOException(s"expected JSON array, got: $node")
-    node.elements().asScala.toVector
-  }
+  /** Records of a response: a bare JSON array, or — when the server wraps
+    * pages in an object ({"data": [...], "total": N}) — the array under
+    * `dataField`. `what` names the response in the error. */
+  def records(node: JsonNode, dataField: String,
+      what: String = "response"): Iterator[JsonNode] =
+    if (node.isArray) node.elements().asScala
+    else {
+      val data = node.get(dataField)
+      if (data == null || !data.isArray)
+        throw new java.io.IOException(
+          s"rest_source: $what is neither a JSON array nor an object " +
+            s"with array field '$dataField': $node")
+      data.elements().asScala
+    }
 }
 
 final class RestTable(tableSchema: StructType, options: CaseInsensitiveStringMap)
@@ -709,20 +707,6 @@ private[sources] trait RestRequests extends Logging {
     RestHttp.fetchNode(target, cfg.auth, cfg.maxRetries,
       pace = () => pace(), warn = m => logWarning(m), headers = cfg.headers)
   }
-
-  /** records of a response: a bare JSON array, or — when the server wraps
-    * pages in an object ({"data": [...], "total": N}) — the array under
-    * `dataField`. */
-  protected def extractRecords(node: JsonNode): Iterator[JsonNode] =
-    if (node.isArray) node.elements().asScala
-    else {
-      val data = node.get(cfg.dataField)
-      if (data == null || !data.isArray)
-        throw new java.io.IOException(
-          s"rest_source: response is neither a JSON array nor an object " +
-            s"with array field '${cfg.dataField}': $node")
-      data.elements().asScala
-    }
 }
 
 /** Sequential chain walk (paginationMode=cursor | nextUrl): request page 1
@@ -764,7 +748,7 @@ final class RestCursorReader(val cfg: RestReaderFactory)
           c.map(t => s"${cfg.cursorParam}=${java.net.URLEncoder.encode(t, java.nio.charset.StandardCharsets.UTF_8)}") ++
           commonParams)
     }
-    rows = extractRecords(node)
+    rows = RestHttp.records(node, cfg.dataField)
     val next = node.get(cfg.cursorField)
     if (next == null || next.isNull) done = true
     else {
@@ -801,7 +785,8 @@ final class RestPartitionReader(part: RestInputPartition, val cfg: RestReaderFac
 
   private def fetchPage(p: Int): Iterator[JsonNode] =
     // bare-array pages and {"data": [...]}-wrapped pages both decode
-    extractRecords(fetchNode(Seq(s"page=$p", s"limit=${cfg.pageSize}") ++ commonParams))
+    RestHttp.records(fetchNode(Seq(s"page=$p", s"limit=${cfg.pageSize}") ++ commonParams),
+      cfg.dataField)
 
   override def next(): Boolean = {
     while (!rows.hasNext && page <= part.lastPage) {

@@ -1,5 +1,8 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
+import org.apache.spark.storage.StorageLevel
 import org.scalatest.funsuite.AnyFunSuite
 
 /** graft.ArtifactCache: the process-level artifact memoizer must build
@@ -92,5 +95,39 @@ class ArtifactCacheSpec extends AnyFunSuite {
       "clearCache must not drop the context-level artifact RDDs")
     ArtifactCache.evictAllCaches()
     assert(sc.getPersistentRDDs.keySet.intersect(added).isEmpty, "eviction leaked")
+  }
+
+  test("the frame pin is decided in graft.Pinned only: no MEMORY_AND_DISK or .rdd.persist( elsewhere in src/main") {
+    val needles = Seq("StorageLevel.MEMORY_AND_DISK", ".rdd.persist(")
+    // Components keeps its per-round loop pin (reliable-checkpoint branch)
+    val allowed = Set("ArtifactCache.scala", "Components.scala")
+    val files = Files.walk(Paths.get("src/main")).iterator().asScala
+      .filter(p => Files.isRegularFile(p) && p.toString.endsWith(".scala")).toList
+    assert(files.size > 50, s"source walk broke: ${files.size} files")
+    val hits = for {
+      p <- files if !allowed(p.getFileName.toString)
+      n <- needles if Files.readString(p).contains(n)
+    } yield s"$p: $n"
+    assert(hits.isEmpty, s"frame pinned outside graft.Pinned: ${hits.mkString(", ")}")
+  }
+
+  test("after warmAll every frame a PerDir cache holds is MEMORY_AND_DISK with all partitions cached") {
+    val spark = SparkSuite.spark
+    ArtifactCache.evictAllCaches()
+    val failed = Warmups.warmAll(spark, SparkSuite.sf)
+    assert(failed.isEmpty, s"warmups failed: $failed")
+    val pins = ArtifactCache.caches.collect {
+      case c if c.warm.isInstanceOf[ArtifactCache.PerDir] => c.pins.map(c.name -> _)
+    }.flatten
+    assert(pins.map(_._1).distinct.size >= 14 && pins.size >= 18,
+      s"expected the 14 frame caches' 18 frames, got ${pins.map(_._1)}")
+    // getRDDStorageInfo lists only RDDs with at least one cached block
+    val info = spark.sparkContext.getRDDStorageInfo.map(i => i.id -> i).toMap
+    val bad = pins.collect { case (name, p) if !info.get(p.rdd.id).exists(i =>
+        i.storageLevel == StorageLevel.MEMORY_AND_DISK &&
+          i.numCachedPartitions == i.numPartitions) =>
+      s"$name: ${info.get(p.rdd.id).fold("nothing cached")(_.toString)}"
+    }
+    assert(bad.isEmpty, s"frames not pinned and forced by warmAll: ${bad.mkString("; ")}")
   }
 }

@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
 class DocSinkSpec extends SparkSuite {
 
   private def freshDir(tag: String): String = {
-    val p = Files.createTempDirectory(s"docsink_$tag")
+    val p = Scratch.fresh(spark, s"docsink_$tag")
     p.toString
   }
 
@@ -102,7 +102,7 @@ class DocSinkSpec extends SparkSuite {
 
   test("streaming write: epoch commits survive a checkpoint restart exactly once") {
     import spark.implicits._
-    val root = Files.createTempDirectory("docsink_stream")
+    val root = Scratch.fresh(spark, "docsink_stream")
     val srcDir = root.resolve("src"); Files.createDirectories(srcDir)
     val ckpt = root.resolve("ckpt").toString
     val outDir = root.resolve("out").toString

@@ -375,7 +375,7 @@ class OperatorSpec extends SparkSuite {
     val rows = (0 until 150).map(i => (i.toLong, aText)) ++
       Seq((500L, bText), (501L, bText), (502L, bText),
         (600L, cText), (700L, "totally unrelated content about catalyst"))
-    val dir = java.nio.file.Files.createTempDirectory("graft_tdn_collapse").toString
+    val dir = Scratch.fresh(spark, "graft_tdn_collapse").toString
     rows.toDF("doc_id", "text").write.mode("overwrite")
       .parquet(s"$dir/documents.parquet")
     assert(graft.Tables.distinctDocCount(spark, dir) === 4L,
@@ -951,7 +951,7 @@ class OperatorSpec extends SparkSuite {
     // never transitions out. Pre-fix, exit's mass vanished each round and
     // pi summed below 1; pagerank-style uniform redistribution keeps it.
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("graft_markov").toString
+    val dir = Scratch.fresh(spark, "graft_markov").toString
     Seq(
       (1L, "2024-01-01 00:00:00", 1L, "a"),
       (1L, "2024-01-01 00:01:00", 2L, "b"),
@@ -2322,7 +2322,7 @@ class PropertySpec extends SparkSuite {
       (0 until 5).map(i => (i.toLong, v0, 0)) ++
         Seq((10L, v1, 0), (11L, v1, 0), (20L, v2, 1), (21L, v3, 1),
           (30L, zero, 2), (31L, zero, 2))
-    val dir = java.nio.file.Files.createTempDirectory("graft_vec_col").toString
+    val dir = Scratch.fresh(spark, "graft_vec_col").toString
     rows.toDF("vec_id", "embedding", "label").write.mode("overwrite")
       .parquet(s"$dir/embeddings.parquet")
     // sims compared via raw bits: the zero-vector cluster yields NaN
@@ -5223,7 +5223,7 @@ class PropertySpec extends SparkSuite {
       (2L, "completely different content about catalyst optimizer internals"),
       (3L, "yet another unrelated document mentioning shuffle partitions"))
       .toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("graft_phash").toString
+    val dir = Scratch.fresh(spark, "graft_phash").toString
     planted.write.mode("overwrite").parquet(s"$dir/documents.parquet")
     val got = graft.SparkEntry.queries("mm_phash")(spark, dir).collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
@@ -5294,7 +5294,7 @@ class PropertySpec extends SparkSuite {
       "yet another unrelated document mentioning shuffle partitions")
     val rows = (0 until 7).map(i => (i.toLong, texts(0))) ++
       Seq((10L, texts(1)), (11L, texts(1)), (20L, texts(2)))
-    val dir = java.nio.file.Files.createTempDirectory("graft_phash_col").toString
+    val dir = Scratch.fresh(spark, "graft_phash_col").toString
     rows.toDF("doc_id", "text").write.mode("overwrite")
       .parquet(s"$dir/documents.parquet")
     val got = graft.SparkEntry.queries("mm_phash")(spark, dir).collect()
@@ -5329,7 +5329,7 @@ class PropertySpec extends SparkSuite {
       (2L, "completely different content about catalyst optimizer internals"),
       (3L, "yet another unrelated document mentioning shuffle partitions"))
       .toDF("doc_id", "text")
-    val dir = java.nio.file.Files.createTempDirectory("graft_phash3").toString
+    val dir = Scratch.fresh(spark, "graft_phash3").toString
     planted.write.mode("overwrite").parquet(s"$dir/documents.parquet")
     def run(): Seq[(Long, Long, Long)] =
       graft.SparkEntry.queries("mm_phash")(spark, dir).collect()

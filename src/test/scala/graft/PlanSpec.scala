@@ -1186,7 +1186,7 @@ class PlanSpec extends SparkSuite {
     // and strand later iterations; with the conf set, every RoundPin.pin
     // in the process writes a RELIABLE checkpoint instead. Parity on a
     // full pagerank member (5 gated rounds) + proof the files landed.
-    val dir = java.nio.file.Files.createTempDirectory("graft_ckpt_rel").toString
+    val dir = Scratch.fresh(spark, "graft_ckpt_rel").toString
     val base = q("graph_pagerank").collect().map(_.toString).sorted
     spark.conf.set("spark.graft.checkpointDir", dir)
     try {
@@ -1212,7 +1212,7 @@ class PlanSpec extends SparkSuite {
     // documented behavior) — if an earlier test already set it, the conf
     // dir passed here is ignored, so count rdd-* entries under the
     // EFFECTIVE dir before vs after instead of expecting a fresh dir
-    val dir = java.nio.file.Files.createTempDirectory("graft_ckpt_cc").toString
+    val dir = Scratch.fresh(spark, "graft_ckpt_cc").toString
     def countRdd(root: String): Long = {
       // getCheckpointDir returns a file: URI, conf values a bare path
       val p = if (root.startsWith("file:"))

@@ -11,9 +11,8 @@ import org.apache.spark.sql.functions._
 class RestCursorAuthSpec extends graft.SparkSuite {
 
   private def envFile(lines: String*): String = {
-    val f = Files.createTempFile("graft_env", ".env")
+    val f = Files.createTempFile(graft.Scratch.root(spark), "graft_env", ".env")
     Files.write(f, lines.mkString("\n").getBytes("UTF-8"))
-    f.toFile.deleteOnExit()
     f.toString
   }
 

@@ -271,7 +271,7 @@ class RestSourceSpec extends SparkSuite {
   test("streaming REST source resumes from the checkpointed page offset") {
     import java.nio.file.Files
     val stub = RestStubServer.start(totalRows = 200L)
-    val root = Files.createTempDirectory("graft_rest_ckpt")
+    val root = Scratch.fresh(spark, "graft_rest_ckpt")
     val ckpt = root.resolve("ckpt").toString
     val outDir = root.resolve("out").toString
     try {
@@ -297,7 +297,7 @@ class RestSourceSpec extends SparkSuite {
   test("kill mid-stream, restart from checkpoint: exactly-once, no refetch") {
     import java.nio.file.Files
     val stub = RestStubServer.start(totalRows = 200L)
-    val root = Files.createTempDirectory("graft_rest_kill")
+    val root = Scratch.fresh(spark, "graft_rest_kill")
     val ckpt = root.resolve("ckpt").toString
     val outDir = root.resolve("out").toString
     try {

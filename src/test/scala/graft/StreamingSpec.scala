@@ -252,7 +252,7 @@ class StreamingSpec extends SparkSuite {
     // r13 item 4)
     val faultPages = sys.env.getOrElse("SPARK_GRAFT_FAULT_PAGES", "4").toInt
     val stub = graft.sources.RestStubServer.start(totalRows = faultPages * 50L)
-    val root = Files.createTempDirectory("graft_rest_ckpt")
+    val root = Scratch.fresh(spark, "graft_rest_ckpt")
     val ckpt = root.resolve("ckpt").toString
     val outDir = root.resolve("out").toString
     def committedBatches: Long = {
@@ -332,7 +332,7 @@ class StreamingSpec extends SparkSuite {
       // trigger, bursts retried inside the reader (no restarts needed),
       // micro-batch count bounded by the admission-control contract and
       // committed offsets strictly monotone
-      val root = Files.createTempDirectory("graft_rest_scale")
+      val root = Scratch.fresh(spark, "graft_rest_scale")
       val ckpt = root.resolve("ckpt").toString
       val outDir = root.resolve("out").toString
       val perTrigger = 50
@@ -383,7 +383,7 @@ class StreamingSpec extends SparkSuite {
   test("checkpoint recovery: restart resumes committed offsets exactly once") {
     import java.nio.file.Files
     import spark.implicits._
-    val root = Files.createTempDirectory("graft_ckpt")
+    val root = Scratch.fresh(spark, "graft_ckpt")
     val srcDir = root.resolve("src"); Files.createDirectories(srcDir)
     val ckpt = root.resolve("ckpt").toString
     val outDir = root.resolve("out").toString
@@ -418,7 +418,7 @@ class StreamingSpec extends SparkSuite {
     // state would emit count 2 for the 00:20 window instead of 3.
     import java.nio.file.Files
     import spark.implicits._
-    val root = Files.createTempDirectory("graft_ckpt_state")
+    val root = Scratch.fresh(spark, "graft_ckpt_state")
     val srcDir = root.resolve("src"); Files.createDirectories(srcDir)
     val ckpt = root.resolve("ckpt").toString
     val outDir = root.resolve("out").toString
@@ -459,7 +459,7 @@ class StreamingSpec extends SparkSuite {
   test("upsertBatch rewrites only touched partitions; others byte-identical") {
     import java.nio.file.{Files, Path}
     import spark.implicits._
-    val tgt = Files.createTempDirectory("graft_upsert").resolve("tgt")
+    val tgt = Scratch.fresh(spark, "graft_upsert").resolve("tgt")
     def listDir(d: Path, pred: Path => Boolean): Seq[Path] = {
       val l = Files.list(d)
       try l.filter(p => pred(p)).toArray(new Array[Path](_)).toSeq.sortBy(_.toString)
@@ -496,7 +496,7 @@ class StreamingSpec extends SparkSuite {
     import spark.implicits._
     val cols = Seq("event_id", "user_id", "event_type", "value")
     val b1 = (0L until 64L).map(i => (i, i, "view", 1.0)).toDF(cols: _*)
-    val tgt = Files.createTempDirectory("graft_upsert_marker").resolve("tgt")
+    val tgt = Scratch.fresh(spark, "graft_upsert_marker").resolve("tgt")
     graft.streaming.Streams.upsertBatch(b1, tgt, 0L)
     // create wrote the layout's bucket count WITH the target
     assert(Files.readString(tgt.resolve("_PK_BUCKETS")).trim.toInt ===
@@ -524,7 +524,7 @@ class StreamingSpec extends SparkSuite {
     // the next power of two (ADVICE r15): a skewed legacy target whose
     // top buckets are empty must derive the true pow2 layout, not the
     // under-count that would silently re-key the merge
-    val skewed = Files.createTempDirectory("graft_upsert_skew")
+    val skewed = Scratch.fresh(spark, "graft_upsert_skew")
     Seq(0, 3, 7, 12).foreach(i => Files.createDirectories(skewed.resolve(s"_pk=$i")))
     assert(graft.streaming.Streams.pkBucketsOf(skewed) === Some(16))
     Seq(0, 5).foreach(i => Files.createDirectories(skewed.resolve(s"_pk=2$i")))
@@ -535,7 +535,7 @@ class StreamingSpec extends SparkSuite {
     import java.nio.file.Files
     import org.apache.spark.sql.DataFrame
     import spark.implicits._
-    val root = Files.createTempDirectory("graft_upsert_ckpt")
+    val root = Scratch.fresh(spark, "graft_upsert_ckpt")
     val src = root.resolve("src"); Files.createDirectories(src)
     val ckpt = root.resolve("ckpt").toString
     val tgt = root.resolve("tgt")
@@ -588,7 +588,7 @@ class StreamingSpec extends SparkSuite {
     val textA = "the quick brown fox jumps over the lazy dog and keeps running far away"
     val textB = "structured streaming joins watermark state stores micro batches and checkpoints"
     val textC = "an entirely different document about parquet column pruning and predicate pushdown"
-    val inDir = Files.createTempDirectory("graft_sdn_test_")
+    val inDir = Scratch.fresh(spark, "graft_sdn_test_")
     def stage(name: String, mtime: Long, rows: Seq[(Long, String)]): Unit = {
       import spark.implicits._
       val tmp = inDir.resolve(name + "_stage")
@@ -630,7 +630,7 @@ class StreamingSpec extends SparkSuite {
     // qualifying id.
     import java.nio.file.Files
     import spark.implicits._
-    val runDir = Files.createTempDirectory("graft_sdn_burst_")
+    val runDir = Scratch.fresh(spark, "graft_sdn_burst_")
     val store = runDir.resolve("store"); val out = runDir.resolve("out")
     val boiler = "subscribe to our newsletter terms of service privacy policy all rights reserved"
     val near = boiler.replace("newsletter", "mailing list") // near-dup of boiler
@@ -676,7 +676,7 @@ class StreamingSpec extends SparkSuite {
   test("stream_dedup_near: a replayed micro-batch is idempotent, no self-contamination") {
     import java.nio.file.Files
     import spark.implicits._
-    val runDir = Files.createTempDirectory("graft_sdn_replay_")
+    val runDir = Scratch.fresh(spark, "graft_sdn_replay_")
     val store = runDir.resolve("store"); val out = runDir.resolve("out")
     val b0 = Seq((1L, "aaa bbb ccc ddd eee fff"),
       (2L, "one two three four five six")).toDF("doc_id", "text")
@@ -700,7 +700,7 @@ class StreamingSpec extends SparkSuite {
   test("stream_dedup_near: the retention horizon bounds the dedup state like a watermark") {
     import java.nio.file.Files
     import spark.implicits._
-    val runDir = Files.createTempDirectory("graft_sdn_retain_")
+    val runDir = Scratch.fresh(spark, "graft_sdn_retain_")
     val store = runDir.resolve("store"); val out = runDir.resolve("out")
     val textA = "aaa bbb ccc ddd eee fff ggg hhh"
     def pb(id: Long, rows: Seq[(Long, String)]): Unit =
