@@ -25,19 +25,20 @@ object Bench {
     spark.sparkContext.setLogLevel("WARN")
     // untimed warmup: JIT, the codegen cache (shared by every session and
     // sized for the sweep's working set, see Tuning), parquet footers — so
-    // per-query numbers measure the query, not whichever one ran first — plus the
-    // fixtures and EVERY ArtifactCache'd shared-artifact build, derived
-    // mechanically from the cache registry (hand-listing here missed
-    // three artifacts across r10–r12: PQ codebook, component labels,
-    // dedup_cluster's label fixpoint at 4.56 s in-sweep vs 0.056 s
-    // isolated — see ArtifactCache.Warm / Warmups)
-    // itemized: per-fixture/per-artifact build seconds print below with
-    // the detail line and the contract line carries the total as
-    // `warm_sec`, so the untimed warm block's cost is part of the round
-    // record instead of invisible (VERDICT r16 item 6 — e.g. the LPA
-    // label artifact computes here, not in graph_label_prop's entry)
+    // per-query numbers measure the query, not whichever one ran first — plus
+    // EVERY staged Fixture and EVERY PerDir ArtifactCache build, derived
+    // mechanically from the one warm registry (hand lists here missed three
+    // artifacts across r10–r12 — dedup_cluster's label fixpoint timed
+    // 4.56 s in-sweep vs 0.056 s isolated — and four fixtures: njson, png,
+    // corrupt and evolve were staged inside their queries' entries).
+    // Itemized: each entry's own build seconds (a build nested in another
+    // entry's is billed to itself) print below with the detail line, and
+    // the contract line carries the total as `warm_sec`, so the untimed
+    // warm block's cost is part of the round record instead of invisible
+    // (VERDICT r16 item 6 — e.g. the LPA label artifact computes here, not
+    // in graph_label_prop's entry)
     val codegenAtStart = Measure.codegen()
-    val warmTimings = Warmups.warmAllTimed(spark, sfDir)
+    val warmTimings = ArtifactCache.warmAllTimed(spark, sfDir)
     val warmTotal = warmTimings.map(_._2).sum
     // SPARK_GRAFT_BENCH_ONLY=a,b,c restricts the timed set — dev-loop
     // re-measure convenience (variance pinning); the driver leaves it unset
@@ -85,7 +86,7 @@ object Bench {
     // full detail, slowest first — its own line, NOT the contract line
     println(results.map(r => (r._1, r._2)).sortBy(-_._2).map(ent).mkString("{\"detail\":{", ",", "}}"))
     // untimed warm block itemization (own line, human/audit-facing):
-    // every fixture staging + PerDir artifact build with its seconds
+    // every fixture staging + PerDir artifact build with its own seconds
     println(warmTimings.sortBy(-_._2)
       .map { case (n, sec, ok) => ent((if (ok) n else s"$n FAILED", sec)) }
       .mkString("{\"warm_detail\":{", ",", s"},\"warm_total\":${d3(warmTotal)}}"))
@@ -133,7 +134,7 @@ object Bench {
       // frame in r11: 10.68 s sweep vs 1.58 s rerun, partly inheritance).
       ArtifactCache.evictAllCaches()
       spark.catalog.clearCache()
-      Warmups.warmAll(spark, sfDir)
+      ArtifactCache.warmAll(spark, sfDir)
       spark.catalog.clearCache()
       // Two reruns of `name`; a rerun that CRASHES must not contribute its
       // (tiny) elapsed time: min-of-reruns would then adjudicate a real

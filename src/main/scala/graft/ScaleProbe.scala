@@ -109,8 +109,7 @@ object ScaleProbe {
   }
 
   private def gates(s: SparkSession, dir: String): String = {
-    val (allPairs, nodes) = graft.operators.AnalyticsOps.allPairsGraph(s, dir)
-    val nNodes = nodes.count()
+    val (allPairs, nodes, nNodes) = graft.operators.AnalyticsOps.allPairsGraph(s, dir)
     val nAll = allPairs.count()
     val nW = allPairs.filter(col("n_orders") >= 2).count()
     val nodeGate = Knobs.graphBroadcastMaxNodes(s)

@@ -36,7 +36,12 @@ object SparkEntry {
 
   val queries: Map[String, QFn] = union("query", banks.map(_.queries))
 
-  val oracleSql: Map[String, String] = union("oracle", banks.map(_.oracles))
+  /** Every bank's oracles, each on one line: banks write their SQL across
+    * lines for reading, and runs of whitespace collapse to one space here
+    * (no oracle puts a run of whitespace inside a quoted literal). Built on
+    * first use, so a JVM that only runs queries keeps no normalized copy. */
+  lazy val oracleSql: Map[String, String] = union("oracle", banks.map(_.oracles))
+    .map { case (k, v) => k -> v.replaceAll("\\s+", " ").trim }
 
   /** The union of `maps`; a name registered by two of them is an error,
     * not a silent last-wins overwrite. */

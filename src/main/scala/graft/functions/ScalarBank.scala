@@ -436,5 +436,5 @@ object ScalarBank extends graft.Bank {
     "udf_scalar" ->
       """SELECT p_partkey, regexp_replace(lower(trim(p_name)), '\s+', ' ', 'g') AS clean_name
          FROM part ORDER BY p_partkey"""
-  ).map { case (k, v) => k -> v.replaceAll("\\s+", " ").trim }
+  )
 }

@@ -1789,5 +1789,5 @@ object Aggregates extends graft.Bank {
              sum(CAST(l_quantity * l_extendedprice * l_extendedprice AS DECIMAL(38,6))) AS swx2
            FROM lineitem GROUP BY l_returnflag)
          ORDER BY l_returnflag"""
-  ).map { case (k, v) => k -> v.replaceAll("\\s+", " ").trim }
+  )
 }

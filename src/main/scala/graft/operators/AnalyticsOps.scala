@@ -466,10 +466,10 @@ object AnalyticsOps extends graft.Bank {
   private[graft] def lpaLabels(s: org.apache.spark.sql.SparkSession,
       dir: String): DataFrame =
     lpaCache.getOrElseUpdate(dir, {
-      val (und, nodes) = coPurchaseGraph(s, dir)
+      val (und, nodes, nNodes) = coPurchaseGraph(s, dir)
       val adj = und.select(col("p1").as("src"), col("p2").as("dst"))
         .union(und.select(col("p2").as("src"), col("p1").as("dst")))
-      val bcastLabels = nodes.count() <= graft.Knobs.graphBroadcastMaxNodes(s)
+      val bcastLabels = nNodes <= graft.Knobs.graphBroadcastMaxNodes(s)
       var labels = nodes.select(col("node"), col("node").as("lbl"))
         .transform(RoundPin.pin)
       for (_ <- 1 to graft.Knobs.labelPropRounds(s)) {
@@ -533,13 +533,12 @@ object AnalyticsOps extends graft.Bank {
     // the all-pairs co-purchase graph IS the shared artifact's cached
     // frame (ktruss peels the unfiltered pair set; the n ≥ 2 family
     // reads its subgraph) — no per-query distinct/self-join rebuild
-    val (allPairs, nodes) = allPairsGraph(s, dir)
+    val (allPairs, _, nNodes) = allPairsGraph(s, dir)
     var e = allPairs.select(col("p1"), col("p2"))
     // the per-round broadcast frame is the NEIGHBOR-LIST dim, which is
     // node-grain — so the gate compares the NODE domain against the
-    // node ceiling, computed ONCE off the artifact's cached node frame
-    // (a node-grain job), not re-counted per round
-    val bcastNbr = nodes.count() <= graft.Knobs.graphBroadcastMaxNodes(s)
+    // node ceiling: the artifact's node count, not re-counted per round
+    val bcastNbr = nNodes <= graft.Knobs.graphBroadcastMaxNodes(s)
     var prev = if (earlyExit) e.count() else -1L
     var stable = false
     for (_ <- 1 to graft.Knobs.trussRounds(s) if !stable) {
@@ -614,7 +613,7 @@ object AnalyticsOps extends graft.Bank {
     * per corpus snapshot). The ≥2 filter is a cheap map over the cached
     * RDD applied on read in [[coPurchaseGraph]]. */
   private[graft] def allPairsGraph(s: org.apache.spark.sql.SparkSession,
-      dir: String): (DataFrame, DataFrame) = {
+      dir: String): (DataFrame, DataFrame, Long) = {
     val (uc, nd) = graphCache.getOrElseUpdate(dir, {
       val li = t(s, dir, "lineitem")
         .select(col("l_orderkey").as("ok"), col("l_partkey").as("pk")).distinct()
@@ -630,14 +629,14 @@ object AnalyticsOps extends graft.Bank {
       li.unpersist(false)
       built
     })
-    (uc.on(s), nd.on(s))
+    (uc.on(s), nd.on(s), nd.rows)
   }
 
-  /** (weighted edges (p1, p2, n_orders ≥ 2), node domain (node)). */
+  /** (weighted edges (p1, p2, n_orders ≥ 2), node domain (node), node count). */
   private[graft] def coPurchaseGraph(s: org.apache.spark.sql.SparkSession,
-      dir: String): (DataFrame, DataFrame) = {
-    val (all, nodes) = allPairsGraph(s, dir)
-    (all.filter(col("n_orders") >= 2), nodes)
+      dir: String): (DataFrame, DataFrame, Long) = {
+    val (all, nodes, nNodes) = allPairsGraph(s, dir)
+    (all.filter(col("n_orders") >= 2), nodes, nNodes)
   }
 
   /** Memoized supplier co-service graph per (JVM, dir): the directed
@@ -688,7 +687,7 @@ object AnalyticsOps extends graft.Bank {
   private[graft] def componentLabels(s: org.apache.spark.sql.SparkSession,
       dir: String): DataFrame =
     labelsCache.getOrElseUpdate(dir, {
-      val (uc, nodes) = coPurchaseGraph(s, dir)
+      val (uc, nodes, _) = coPurchaseGraph(s, dir)
       Pinned(Components.hashMinLabels(s,
         uc.select(col("p1").as("d1"), col("p2").as("d2")),
         Some(nodes.select(col("node").as("id")))))
@@ -704,14 +703,14 @@ object AnalyticsOps extends graft.Bank {
   private[graft] def bfsVisited(s: org.apache.spark.sql.SparkSession,
       dir: String): DataFrame =
     bfsCache.getOrElseUpdate(dir, {
-      val (undRaw, nodes) = coPurchaseGraph(s, dir)
+      val (undRaw, _, nNodes) = coPurchaseGraph(s, dir)
       val und = undRaw.select(col("p1"), col("p2"))
       val adj = und.select(col("p1").as("src"), col("p2").as("dst"))
         .union(und.select(col("p2").as("src"), col("p1").as("dst")))
       val deg = adj.groupBy(col("src")).agg(count(lit(1)).as("dg"))
       val seeds = deg.orderBy(col("dg").desc, col("src")).limit(3)
         .select(col("src").as("seed"), col("src").as("node"), lit(0).as("dist"))
-      val bcastFrontier = nodes.count() <= graft.Knobs.graphBroadcastMaxNodes(s)
+      val bcastFrontier = nNodes <= graft.Knobs.graphBroadcastMaxNodes(s)
       var visited = seeds.transform(RoundPin.pin)
       var frontier = visited.select(col("seed"), col("node"))
       for (r <- 1 to graft.Knobs.bfsRounds(s)) {
@@ -2808,7 +2807,7 @@ object AnalyticsOps extends graft.Bank {
     // of one, the exact lesson trianglesBuild encodes); the tiny result is
     // eagerly materialized so both caches can be dropped here.
     "graph_degree_hist" -> ((s, dir) => {
-      val (uc, nodes) = coPurchaseGraph(s, dir)
+      val (uc, nodes, _) = coPurchaseGraph(s, dir)
       degreeHistBuild(uc.select(col("p1"), col("p2")), nodes)
     }),
 
@@ -3432,15 +3431,15 @@ object AnalyticsOps extends graft.Bank {
     // survivors broadcast back as two semi-joins, result checkpointed —
     // per-round cost is edge-linear, state never accumulates lineage.
     "graph_kcore" -> ((s, dir) => {
-      val (und, nodes) = coPurchaseGraph(s, dir)
+      val (und, _, nNodes) = coPurchaseGraph(s, dir)
       // Early peels keep a survivor set that is near node-domain-sized, so
       // the semi-join broadcast is SIZE-GATED exactly like pagerank's rank
       // frame: under PagerankBroadcastMaxNodes `keep` broadcasts (edges
       // never shuffle per round); above it the rounds fall back to plain
       // shuffle semi-joins — edge-linear per round, no driver/executor OOM
-      // from forcing a catalog-sized broadcast. The count is a node-sized
-      // job over the pinned artifact, not a corpus re-scan.
-      val bcastKeep = nodes.count() <= graft.Knobs.graphBroadcastMaxNodes(s)
+      // from forcing a catalog-sized broadcast. The count is the pinned
+      // artifact's, not a corpus re-scan.
+      val bcastKeep = nNodes <= graft.Knobs.graphBroadcastMaxNodes(s)
       var edges = und.select(col("p1"), col("p2"))
       // FIXPOINT EARLY-EXIT (optimization r16, same argument as
       // [[ktrussEdges]]): a peel round returns a subset (two semi-joins)
@@ -3719,7 +3718,7 @@ object AnalyticsOps extends graft.Bank {
     // broadcast — node-sized), new nodes via LEFT ANTI vs the visited
     // set, result checkpointed; per-round cost is edge-linear.
     "graph_bfs_hops" -> ((s, dir) => {
-      val (undRaw, nodes) = coPurchaseGraph(s, dir)
+      val (undRaw, _, nNodes) = coPurchaseGraph(s, dir)
       val und = undRaw.select(col("p1"), col("p2"))
       val adj = und.select(col("p1").as("src"), col("p2").as("dst"))
         .union(und.select(col("p2").as("src"), col("p1").as("dst")))
@@ -3731,7 +3730,7 @@ object AnalyticsOps extends graft.Bank {
       // pagerank/kcore): under it the expansion join broadcasts the
       // frontier; above it adj shuffles on src per round — the standard
       // large-graph BFS shape, no forced catalog-sized broadcast.
-      val bcastFrontier = nodes.count() <= graft.Knobs.graphBroadcastMaxNodes(s)
+      val bcastFrontier = nNodes <= graft.Knobs.graphBroadcastMaxNodes(s)
       var visited = hub.transform(RoundPin.pin)
       var frontier = visited
       // EMPTY-FRONTIER EARLY-EXIT (optimization r16): an empty frontier
@@ -10257,7 +10256,7 @@ object AnalyticsOps extends graft.Bank {
                  FROM rk)
          SELECT seg_a, seg_b, n_a, n_b, z, p_value,
                 least(madj6, 1000000) / 1000000.0 AS p_adjusted
-         FROM adj ORDER BY seg_a, seg_b""".replaceAll("\\s+", " ").trim,
+         FROM adj ORDER BY seg_a, seg_b""",
     "stat_friedman" ->
       """WITH daily AS (
            SELECT CAST(ts AS DATE) AS day, event_type AS et, count(1) AS c
@@ -11793,7 +11792,7 @@ object AnalyticsOps extends graft.Bank {
          am2 AS (SELECT max(ar) AS am FROM a2r)
          SELECT p AS part, round(CAST(ar AS DOUBLE) / CAST(am AS DOUBLE), 6) AS authority
          FROM a2r, am2 ORDER BY authority DESC, part LIMIT 10"""
-  ).map { case (k, v) => k -> v.replaceAll("\\s+", " ").trim }
+  )
 
   val oracles: Map[String, String] = oraclesMain +
     ("anom_consensus" ->
@@ -11807,7 +11806,7 @@ object AnalyticsOps extends graft.Bank {
           SELECT event_id, event_type, value,
                  CAST(count(1) AS INTEGER) AS n_detectors
           FROM u GROUP BY 1, 2, 3 HAVING count(1) >= 2
-          ORDER BY event_id""".replaceAll("\\s+", " ").trim) +
+          ORDER BY event_id""") +
     // p-value tiers: each wraps its base oracle as a CTE and applies the
     // SAME pinned-grid lookup (PValueGrids' canonical decimal strings —
     // identical literals, identical parsed doubles on both engines)
@@ -11815,17 +11814,17 @@ object AnalyticsOps extends graft.Bank {
       s"""WITH base AS (${oraclesMain("stat_ttest")})
           SELECT seg_a, seg_b, na, nb, t_stat, df,
                  round(${PValueGrids.pTwoSidedSql("t_stat")}, 6) AS p_value
-          FROM base ORDER BY seg_a, seg_b""".replaceAll("\\s+", " ").trim) +
+          FROM base ORDER BY seg_a, seg_b""") +
     ("stat_chi2_pvalue" ->
       s"""WITH base AS (${oraclesMain("stat_chi2")})
           SELECT n, dof, chi2,
                  round(${PValueGrids.chi2UpperSql("chi2", "dof")}, 6) AS p_value
-          FROM base""".replaceAll("\\s+", " ").trim) +
+          FROM base""") +
     ("stat_kruskal_pvalue" ->
       s"""WITH base AS (${oraclesMain("stat_kruskal_wallis")})
           SELECT k, n, h_stat, dof,
                  round(${PValueGrids.chi2UpperSql("h_stat", "dof")}, 6) AS p_value
-          FROM base""".replaceAll("\\s+", " ").trim) +
+          FROM base""") +
     ("stat_ks_pvalue" ->
       s"""WITH base AS (${oraclesMain("stat_ks_test")}),
           lam AS (
@@ -11836,23 +11835,23 @@ object AnalyticsOps extends graft.Bank {
             FROM base)
           SELECT n1, n2, d_stat, ks_lambda,
                  round(${PValueGrids.ksUpperSql("ks_lambda")}, 6) AS p_value
-          FROM lam""".replaceAll("\\s+", " ").trim) +
+          FROM lam""") +
     ("stat_mannwhitney_pvalue" ->
       s"""WITH base AS (${oraclesMain("stat_mannwhitney")})
           SELECT n_a, n_b, u_a, u_b, z_stat,
                  round(${PValueGrids.pTwoSidedSql("z_stat")}, 6) AS p_value
-          FROM base""".replaceAll("\\s+", " ").trim) ++
+          FROM base""") ++
     // extended p-value family: SELECT * keeps the base schema, the grid
     // lookup appends p_value; ordered outputs re-assert the base ORDER BY
     {
       def z(base: String, zCol: String, order: String = ""): String =
         s"""WITH base AS (${oraclesMain(base)})
             SELECT *, round(${PValueGrids.pTwoSidedSql(zCol)}, 6) AS p_value
-            FROM base $order""".replaceAll("\\s+", " ").trim
+            FROM base $order"""
       def c2(base: String, xCol: String, kCol: String, order: String = ""): String =
         s"""WITH base AS (${oraclesMain(base)})
             SELECT *, round(${PValueGrids.chi2UpperSql(xCol, kCol)}, 6) AS p_value
-            FROM base $order""".replaceAll("\\s+", " ").trim
+            FROM base $order"""
       Map(
         "stat_wilcoxon_pvalue" -> z("stat_wilcoxon_signed", "z_stat"),
         "stat_proportions_pvalue" ->
@@ -11890,7 +11889,7 @@ object AnalyticsOps extends graft.Bank {
               SELECT et_a, et_b, p_value, CAST(rk AS INT) AS rank,
                      least(madj6, 1000000) / 1000000.0 AS p_adjusted,
                      CAST(madj6 <= 50000 AS INT) AS significant_fwer05
-              FROM a ORDER BY rank""".replaceAll("\\s+", " ").trim,
+              FROM a ORDER BY rank""",
         "stat_fisher_combined" ->
           s"""WITH pbase AS (${z("stat_poisson_ztest", "z",
                 "ORDER BY et_a, et_b")}),
@@ -11905,7 +11904,7 @@ object AnalyticsOps extends graft.Bank {
               SELECT n_tests, fisher_chi2, dof,
                      round(${PValueGrids.chi2UpperSql("fisher_chi2", "dof")}, 6)
                        AS p_combined
-              FROM f""".replaceAll("\\s+", " ").trim,
+              FROM f""",
         "stat_stouffer_combined" ->
           s"""WITH zbase AS (${oraclesMain("stat_poisson_ztest")}),
               m AS (SELECT CAST(count(1) AS BIGINT) AS n_tests,
@@ -11918,7 +11917,7 @@ object AnalyticsOps extends graft.Bank {
               SELECT n_tests, z_combined,
                      round(${PValueGrids.pTwoSidedSql("z_combined")}, 6)
                        AS p_combined
-              FROM f""".replaceAll("\\s+", " ").trim,
+              FROM f""",
         "stat_bh_fdr" ->
           s"""WITH pbase AS (${z("stat_poisson_ztest", "z",
                 "ORDER BY et_a, et_b")}),
@@ -11936,7 +11935,7 @@ object AnalyticsOps extends graft.Bank {
               SELECT et_a, et_b, p_value, CAST(rk AS INT) AS rank,
                      least(madj6, 1000000) / 1000000.0 AS p_adjusted,
                      CAST(madj6 <= 50000 AS INT) AS significant_fdr05
-              FROM a ORDER BY rank""".replaceAll("\\s+", " ").trim,
+              FROM a ORDER BY rank""",
         "stat_anova_pvalue" ->
           c2("stat_anova", "f_stat * df_between", "df_between"),
         "stat_spearman_pvalue" ->

@@ -1,11 +1,11 @@
 package graft.operators
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Files
 import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types._
-import graft.Scratch
+import graft.{Fixture, Scratch}
 import graft.Tables._
 
 /** §2.A scans / sinks / load semantics (SURVEY.md) — the reference's
@@ -22,158 +22,137 @@ import graft.Tables._
   */
 object EtlOps extends graft.Bank {
 
-  /** One-time staging of the events table as JSONL / CSV fixtures for the
-    * scan queries. The _SUCCESS marker makes re-runs read-only, and the
-    * writes keep natural parallelism — a coalesce(1) single-task funnel is
-    * a stopper at scale and the read side globs the directory anyway.
-    * Bench warms these so the timed queries measure the scan, not fixture
-    * I/O. */
-  def stageJsonl(s: SparkSession, dir: String): String = {
-    val path = Scratch.fixture(s, "jsonl", dir).toString
-    if (!Files.exists(Paths.get(path, "_SUCCESS")))
-      events(s, dir).select(col("props"))
-        .write.mode(SaveMode.Overwrite).text(path)
-    path
+  /** The events table as JSONL / CSV / ORC / XML / text-log fixtures for
+    * the scan queries. The writes keep natural parallelism — a coalesce(1)
+    * single-task funnel is a stopper at scale and the read side globs the
+    * directory anyway. */
+  val stageJsonl = Fixture("jsonl") { (s, dir, out) =>
+    events(s, dir).select(col("props"))
+      .write.mode(SaveMode.Overwrite).text(out.toString)
   }
 
-  /** One-time staging of orders (< 300) as NESTED JSON documents — each
-    * order carries its lineitems as an embedded array, the
-    * document-store shape the spec's transform stage targets. Item order
-    * inside a document is collect_list-nondeterministic, which is exactly
-    * why the reading query must aggregate order-insensitively. */
-  def stageNestedJson(s: SparkSession, dir: String): String = {
-    val path = Scratch.fixture(s, "njson", dir).toString
-    if (!Files.exists(Paths.get(path, "_SUCCESS"))) {
-      val o = t(s, dir, "orders").filter(col("o_orderkey") < 300)
-        .select(col("o_orderkey"), col("o_orderstatus"))
-      val l = t(s, dir, "lineitem").filter(col("l_orderkey") < 300)
-      o.join(l, col("o_orderkey") === col("l_orderkey"))
-        .groupBy(col("o_orderkey"), col("o_orderstatus"))
-        .agg(collect_list(struct(col("l_linenumber").as("l"),
-          col("l_quantity").as("qty"), col("l_extendedprice").as("price"))).as("items"))
-        .select(to_json(struct(col("o_orderkey").as("o"),
-          col("o_orderstatus").as("status"), col("items").as("items"))).as("value"))
-        .write.mode(SaveMode.Overwrite).text(path)
-    }
-    path
+  /** Orders (< 300) as NESTED JSON documents — each order carries its
+    * lineitems as an embedded array, the document-store shape the spec's
+    * transform stage targets. Item order inside a document is
+    * collect_list-nondeterministic, which is exactly why the reading query
+    * must aggregate order-insensitively. */
+  val stageNestedJson = Fixture("njson") { (s, dir, out) =>
+    val o = t(s, dir, "orders").filter(col("o_orderkey") < 300)
+      .select(col("o_orderkey"), col("o_orderstatus"))
+    val l = t(s, dir, "lineitem").filter(col("l_orderkey") < 300)
+    o.join(l, col("o_orderkey") === col("l_orderkey"))
+      .groupBy(col("o_orderkey"), col("o_orderstatus"))
+      .agg(collect_list(struct(col("l_linenumber").as("l"),
+        col("l_quantity").as("qty"), col("l_extendedprice").as("price"))).as("items"))
+      .select(to_json(struct(col("o_orderkey").as("o"),
+        col("o_orderstatus").as("status"), col("items").as("items"))).as("value"))
+      .write.mode(SaveMode.Overwrite).text(out.toString)
   }
 
-  def stageCsv(s: SparkSession, dir: String): String = {
-    val path = Scratch.fixture(s, "csv", dir).toString
-    if (!Files.exists(Paths.get(path, "_SUCCESS")))
-      events(s, dir).select(col("event_id"), col("event_type"), col("value"))
-        .write.mode(SaveMode.Overwrite).option("header", "true").csv(path)
-    path
+  val stageCsv = Fixture("csv") { (s, dir, out) =>
+    events(s, dir).select(col("event_id"), col("event_type"), col("value"))
+      .write.mode(SaveMode.Overwrite).option("header", "true").csv(out.toString)
   }
 
   /** Pipe-delimited log lines from events, with every 97th event written
     * as a deterministic garbage line — the raw-log on-ramp (app/server
     * logs are the other big unstructured source next to JSON APIs), with
     * the spec's invalid-input class baked into the fixture. */
-  def stageText(s: SparkSession, dir: String): String = {
-    val path = Scratch.fixture(s, "textlog", dir).toString
-    if (!Files.exists(Paths.get(path, "_SUCCESS")))
-      events(s, dir).select(
-        when(col("event_id") % 97 === 0,
-          concat(lit("!! corrupt log line "), col("event_id")))
-          .otherwise(concat_ws("|",
-            col("event_id"), col("user_id"), col("event_type"), col("value")))
-          .as("value"))
-        .write.mode(SaveMode.Overwrite).text(path)
-    path
+  val stageText = Fixture("textlog") { (s, dir, out) =>
+    events(s, dir).select(
+      when(col("event_id") % 97 === 0,
+        concat(lit("!! corrupt log line "), col("event_id")))
+        .otherwise(concat_ws("|",
+          col("event_id"), col("user_id"), col("event_type"), col("value")))
+        .as("value"))
+      .write.mode(SaveMode.Overwrite).text(out.toString)
   }
 
-  def stageOrc(s: SparkSession, dir: String): String = {
-    val path = Scratch.fixture(s, "orc", dir).toString
-    if (!Files.exists(Paths.get(path, "_SUCCESS")))
-      events(s, dir).select(col("event_id"), col("user_id"), col("event_type"), col("value"))
-        .write.mode(SaveMode.Overwrite).orc(path)
-    path
+  val stageOrc = Fixture("orc") { (s, dir, out) =>
+    events(s, dir).select(col("event_id"), col("user_id"), col("event_type"), col("value"))
+      .write.mode(SaveMode.Overwrite).orc(out.toString)
+  }
+
+  /** For `scan_binaryfile`: each probe document's text written as a
+    * standalone .bin file (UTF-8 bytes) — the on-disk shape multimodal
+    * corpora actually arrive in (an image/audio blob per object-store key).
+    * Driver-side loop is fine HERE because it stages a 64-file fixture; at
+    * scale the files already exist — ingestion starts at the binaryFile
+    * scan, which is fully distributed. */
+  val stageBinaryDocs = Fixture("bindocs") { (s, dir, out) =>
+    Files.createDirectories(out)
+    t(s, dir, "documents").filter(col("doc_id") < 64)
+      .select(col("doc_id"), col("text")).collect()
+      .foreach { r =>
+        Files.write(out.resolve(f"doc_${r.getLong(0)}%05d.bin"),
+          r.getString(1).getBytes(java.nio.charset.StandardCharsets.UTF_8))
+      }
   }
 
   /** Hive-style partitioned layout of orders (partition column =
     * o_orderstatus) for the partition-pruning query. At 100 TB this layout
     * choice — partition by the columns queries filter on — is the
     * difference between scanning one directory and scanning the lake. */
-  /** One-time staging for `scan_binaryfile`: each probe document's text
-    * written as a standalone .bin file (UTF-8 bytes) — the on-disk shape
-    * multimodal corpora actually arrive in (an image/audio blob per
-    * object-store key). Driver-side loop is fine HERE because it stages a
-    * 64-file fixture; at scale the files already exist — ingestion starts
-    * at the binaryFile scan, which is fully distributed. */
-  def stageBinaryDocs(s: SparkSession, dir: String): String = {
-    val path = Scratch.fixture(s, "bindocs", dir).toString
-    if (!Files.exists(Paths.get(path, "_STAGED"))) {
-      Files.createDirectories(Paths.get(path))
-      t(s, dir, "documents").filter(col("doc_id") < 64)
-        .select(col("doc_id"), col("text")).collect()
-        .foreach { r =>
-          Files.write(Paths.get(path, f"doc_${r.getLong(0)}%05d.bin"),
-            r.getString(1).getBytes(java.nio.charset.StandardCharsets.UTF_8))
-        }
-      Files.write(Paths.get(path, "_STAGED"), Array.empty[Byte])
-    }
-    path
+  val stagePartitioned = Fixture("part_orders") { (s, dir, out) =>
+    t(s, dir, "orders")
+      .select(col("o_orderkey"), col("o_totalprice"), col("o_orderstatus"))
+      .write.mode(SaveMode.Overwrite).partitionBy("o_orderstatus").parquet(out.toString)
   }
 
-  def stagePartitioned(s: SparkSession, dir: String): String = {
-    val path = Scratch.fixture(s, "part_orders", dir).toString
-    if (!Files.exists(Paths.get(path, "_SUCCESS")))
-      t(s, dir, "orders")
-        .select(col("o_orderkey"), col("o_totalprice"), col("o_orderstatus"))
-        .write.mode(SaveMode.Overwrite).partitionBy("o_orderstatus").parquet(path)
-    path
+  /** For `sink_compact`: the deliberately fragmented partitioned layout
+    * (repartition(16) before partitionBy → many files per lang dir) and its
+    * compacted rewrite (redistribute on the partition column → one sorted
+    * file per dir), so the timed query measures the audit scan, not the
+    * two rewrites. */
+  val stageFragDocs = Fixture("frag_docs") { (s, dir, out) =>
+    t(s, dir, "documents").repartition(16)
+      .write.mode(SaveMode.Overwrite).partitionBy("lang").parquet(out.toString)
   }
-
-  /** One-time staging for `sink_compact`: the deliberately fragmented
-    * partitioned layout (repartition(16) before partitionBy → many files
-    * per lang dir) and its compacted rewrite (redistribute on the
-    * partition column → one sorted file per dir). Bench warms this so the
-    * timed query measures the audit scan, not the two rewrites. */
-  def stageCompact(s: SparkSession, dir: String): String = {
-    val frag = Scratch.fixture(s, "frag_docs", dir).toString
-    if (!Files.exists(Paths.get(frag, "_SUCCESS")))
-      t(s, dir, "documents").repartition(16)
-        .write.mode(SaveMode.Overwrite).partitionBy("lang").parquet(frag)
-    val compact = Scratch.fixture(s, "compact_docs", dir).toString
-    if (!Files.exists(Paths.get(compact, "_SUCCESS")))
-      s.read.parquet(frag)
-        .repartition(col("lang"))
-        .sortWithinPartitions(col("doc_id"))
-        .write.mode(SaveMode.Overwrite).partitionBy("lang").parquet(compact)
-    compact
+  val stageCompact = Fixture("compact_docs") { (s, dir, out) =>
+    s.read.parquet(stageFragDocs(s, dir).toString)
+      .repartition(col("lang"))
+      .sortWithinPartitions(col("doc_id"))
+      .write.mode(SaveMode.Overwrite).partitionBy("lang").parquet(out.toString)
   }
 
   /** Tiny order-status dim staged as PARQUET (not an inline relation):
     * dynamic partition pruning needs the dim-side filter to survive to the
     * physical plan, and ConvertToLocalRelation folds filters over inline
     * rows away before planning. */
-  def stageStatusDim(s: SparkSession, dir: String): String = {
-    val path = Scratch.fixture(s, "dim_status", dir).toString
-    if (!Files.exists(Paths.get(path, "_SUCCESS"))) {
-      import s.implicits._
-      Seq(("F", "finished"), ("O", "open"), ("P", "pending"))
-        .toDF("status", "label")
-        .write.mode(SaveMode.Overwrite).parquet(path)
-    }
-    path
+  val stageStatusDim = Fixture("dim_status") { (s, _, out) =>
+    import s.implicits._
+    Seq(("F", "finished"), ("O", "open"), ("P", "pending"))
+      .toDF("status", "label")
+      .write.mode(SaveMode.Overwrite).parquet(out.toString)
   }
 
   /** XML event dump — the third structured wire format beside JSONL/CSV
     * (Spark 4 ships the XML source natively; rowTag frames each record). */
-  def stageXml(s: SparkSession, dir: String): String = {
-    val path = Scratch.fixture(s, "xml", dir).toString
-    if (!Files.exists(Paths.get(path, "_SUCCESS")))
-      events(s, dir).select(col("event_id"), col("event_type"), col("value"))
-        .write.mode(SaveMode.Overwrite).option("rowTag", "event")
-        .format("xml").save(path)
-    path
+  val stageXml = Fixture("xml") { (s, dir, out) =>
+    events(s, dir).select(col("event_id"), col("event_type"), col("value"))
+      .write.mode(SaveMode.Overwrite).option("rowTag", "event")
+      .format("xml").save(out.toString)
   }
 
-  def stageFixtures(s: SparkSession, dir: String): Unit = {
-    stageJsonl(s, dir); stageCsv(s, dir); stageOrc(s, dir); stageText(s, dir)
-    stagePartitioned(s, dir); stageCompact(s, dir); stageStatusDim(s, dir)
-    stageBinaryDocs(s, dir); stageXml(s, dir); ()
+  /** JSONL with every 10th line deterministically corrupted, for
+    * `scan_corrupt`. */
+  val stageCorrupt = Fixture("corrupt") { (s, dir, out) =>
+    events(s, dir)
+      .select(when(col("event_id") % 10 === 0, concat(lit("{corrupt "), col("props")))
+        .otherwise(col("props")).as("line"))
+      .write.mode(SaveMode.Overwrite).text(out.toString)
+  }
+
+  /** Two ingest batches of orders for `scan_evolve`: `v1` without
+    * o_orderstatus, `v2` with it. */
+  val stageEvolve = Fixture("evolve") { (s, dir, out) =>
+    val o = t(s, dir, "orders")
+    o.filter(col("o_orderkey") % 2 === 0)
+      .select(col("o_orderkey"), col("o_totalprice"))
+      .write.mode(SaveMode.Overwrite).parquet(s"$out/v1")
+    o.filter(col("o_orderkey") % 2 === 1)
+      .select(col("o_orderkey"), col("o_totalprice"), col("o_orderstatus"))
+      .write.mode(SaveMode.Overwrite).parquet(s"$out/v2")
   }
 
   val queries: Map[String, QFn] = Map(
@@ -194,7 +173,7 @@ object EtlOps extends graft.Bank {
     // 100 TB lake queryable. Data files carry only the non-partition
     // columns; the partition value comes from the path.
     "scan_partitioned" -> ((s, dir) => {
-      val path = stagePartitioned(s, dir)
+      val path = stagePartitioned(s, dir).toString
       s.read.parquet(path)
         .filter(col("o_orderstatus") === "F")
         .select(col("o_orderkey"), r6(col("o_totalprice")).as("price"))
@@ -203,14 +182,14 @@ object EtlOps extends graft.Bank {
 
     "scan_jsonl" -> ((s, dir) => {
       // extract stage: JSONL payload dump → schema-applied JSON ingest
-      val path = stageJsonl(s, dir)
+      val path = stageJsonl(s, dir).toString
       s.read.schema(StructType(Seq(StructField("k", IntegerType)))).json(path)
         .groupBy(col("k")).agg(count(lit(1)).as("n"))
         .orderBy(col("k"))
     }),
 
     "scan_csv" -> ((s, dir) => {
-      val path = stageCsv(s, dir)
+      val path = stageCsv(s, dir).toString
       s.read.option("header", "true")
         .schema(StructType(Seq(
           StructField("event_id", LongType),
@@ -229,7 +208,7 @@ object EtlOps extends graft.Bank {
     // decimal-exact rollup as scan_csv so the double round-trip through
     // XML text is proven exact against the parquet-derived oracle.
     "scan_xml" -> ((s, dir) => {
-      val path = stageXml(s, dir)
+      val path = stageXml(s, dir).toString
       s.read.format("xml").option("rowTag", "event")
         .schema(StructType(Seq(
           StructField("event_id", LongType),
@@ -249,7 +228,7 @@ object EtlOps extends graft.Bank {
     // the structured sources. Regex runs once per line in the scan
     // stage — no shuffle before the final vocabulary-sized agg.
     "scan_text" -> ((s, dir) => {
-      val path = stageText(s, dir)
+      val path = stageText(s, dir).toString
       val pat = "^(\\d+)\\|(\\d+)\\|([a-z_]+)\\|(.+)$"
       s.read.text(path)
         .select(regexp_extract(col("value"), pat, 1).as("eid"),
@@ -269,7 +248,7 @@ object EtlOps extends graft.Bank {
     // the scan's aggregation is oracled against the source table, so the
     // write+read round-trip is value-checked end to end).
     "scan_orc" -> ((s, dir) => {
-      val path = stageOrc(s, dir)
+      val path = stageOrc(s, dir).toString
       s.read.orc(path)
         .filter(col("value") >= 50.0)
         .groupBy(col("event_type"))
@@ -307,7 +286,7 @@ object EtlOps extends graft.Bank {
     // staged dir: files hold exactly the documents' UTF-8 text bytes, so
     // DuckDB recomputes length + sha256 from the source table.
     "scan_binaryfile" -> ((s, dir) => {
-      val path = stageBinaryDocs(s, dir)
+      val path = stageBinaryDocs(s, dir).toString
       s.read.format("binaryFile").option("pathGlobFilter", "*.bin").load(path)
         .select(
           regexp_extract(col("path"), "doc_(\\d+)\\.bin", 1).cast("bigint").as("doc_id"),
@@ -321,12 +300,7 @@ object EtlOps extends graft.Bank {
     // lines land in _corrupt_record instead of failing the job, and the
     // query audits valid vs corrupt. Fixture staged once.
     "scan_corrupt" -> ((s, dir) => {
-      val path = Scratch.fixture(s, "corrupt", dir).toString
-      if (!Files.exists(Paths.get(path, "_SUCCESS")))
-        events(s, dir)
-          .select(when(col("event_id") % 10 === 0, concat(lit("{corrupt "), col("props")))
-            .otherwise(col("props")).as("line"))
-          .write.mode(SaveMode.Overwrite).text(path)
+      val path = stageCorrupt(s, dir).toString
       s.read
         .schema(StructType(Seq(
           StructField("k", IntegerType), StructField("_corrupt_record", StringType))))
@@ -429,7 +403,7 @@ object EtlOps extends graft.Bank {
     // tables, so the DuckDB oracle recomputes the same totals straight
     // from orders⋈lineitem — any flatten/parse bug breaks the hash.
     "scan_json_nested" -> ((s, dir) => {
-      val path = stageNestedJson(s, dir)
+      val path = stageNestedJson(s, dir).toString
       val schema = StructType(Seq(
         StructField("o", LongType), StructField("status", StringType),
         StructField("items", ArrayType(StructType(Seq(
@@ -478,7 +452,7 @@ object EtlOps extends graft.Bank {
     // per-partition file counts are audited DISTRIBUTEDLY via
     // input_file_name() — no driver-side filesystem walk.
     "sink_compact" -> ((s, dir) => {
-      val compact = stageCompact(s, dir)
+      val compact = stageCompact(s, dir).toString
       s.read.parquet(compact)
         // project the (non-deterministic) file name BEFORE aggregating —
         // Spark rejects non-deterministic expressions as direct agg args
@@ -493,16 +467,7 @@ object EtlOps extends graft.Bank {
     // loop implies): batch 1 lands without a column, batch 2 adds it;
     // mergeSchema unifies, older rows read as NULL. Fixture staged once.
     "scan_evolve" -> ((s, dir) => {
-      val path = Scratch.fixture(s, "evolve", dir).toString
-      if (!Files.exists(Paths.get(path, "v2", "_SUCCESS"))) {
-        val o = t(s, dir, "orders")
-        o.filter(col("o_orderkey") % 2 === 0)
-          .select(col("o_orderkey"), col("o_totalprice"))
-          .write.mode(SaveMode.Overwrite).parquet(s"$path/v1")
-        o.filter(col("o_orderkey") % 2 === 1)
-          .select(col("o_orderkey"), col("o_totalprice"), col("o_orderstatus"))
-          .write.mode(SaveMode.Overwrite).parquet(s"$path/v2")
-      }
+      val path = stageEvolve(s, dir).toString
       s.read.option("mergeSchema", "true").parquet(s"$path/v1", s"$path/v2")
         .groupBy(coalesce(col("o_orderstatus"), lit("pre_schema")).as("status"))
         .agg(count(lit(1)).as("n"), dsum(col("o_totalprice")).as("total"))
@@ -1273,5 +1238,5 @@ object EtlOps extends graft.Bank {
          decode(encode(text)) = text AS roundtrip_ok,
          to_base64(encode(substring(text, 1, 12))) AS head_b64
          FROM documents ORDER BY doc_id"""
-  ).map { case (k, v) => k -> v.replaceAll("\\s+", " ").trim }
+  )
 }

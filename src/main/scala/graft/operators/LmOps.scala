@@ -606,5 +606,5 @@ object LmOps extends graft.Bank {
          FROM c2 JOIN cw USING (w1) JOIN cr USING (w2) CROSS JOIN b
          WHERE n >= 5
          ORDER BY pkn DESC, w1, w2 LIMIT 20"""
-  ).map { case (k, v) => k -> v.replaceAll("\\s+", " ").trim }
+  )
 }

@@ -375,25 +375,20 @@ object Multimodal extends graft.Bank {
     SilenceFeat(docId, frames, nSilent, nRuns, longest)
   }
 
-  /** One-time staging for `mm_decode`: each probe document rendered and
-    * PNG-encoded to a standalone .png file — the on-disk shape multimodal
-    * corpora arrive in (one image per object-store key). Driver-side loop
-    * is fine HERE because it stages a 64-file fixture; at scale the files
-    * already exist — ingestion starts at the binaryFile scan, which is
-    * fully distributed. */
-  def stagePngDocs(s: SparkSession, dir: String): String = {
-    val p = graft.Scratch.fixture(s, "png", dir)
-    Files.createDirectories(p)
-    if (!Files.exists(p.resolve("_STAGED"))) {
-      t(s, dir, "documents").filter(col("doc_id") < 64)
-        .select(col("doc_id"), col("text")).collect()
-        .foreach { r =>
-          Files.write(p.resolve(f"doc_${r.getLong(0)}%05d.png"),
-            encodePng(r.getString(1).getBytes(java.nio.charset.StandardCharsets.UTF_8)))
-        }
-      Files.write(p.resolve("_STAGED"), Array.empty[Byte])
-    }
-    p.toString
+  /** For `mm_decode`: each probe document rendered and PNG-encoded to a
+    * standalone .png file — the on-disk shape multimodal corpora arrive in
+    * (one image per object-store key). Driver-side loop is fine HERE
+    * because it stages a 64-file fixture; at scale the files already
+    * exist — ingestion starts at the binaryFile scan, which is fully
+    * distributed. */
+  val stagePngDocs = graft.Fixture("png") { (s, dir, out) =>
+    Files.createDirectories(out)
+    t(s, dir, "documents").filter(col("doc_id") < 64)
+      .select(col("doc_id"), col("text")).collect()
+      .foreach { r =>
+        Files.write(out.resolve(f"doc_${r.getLong(0)}%05d.png"),
+          encodePng(r.getString(1).getBytes(java.nio.charset.StandardCharsets.UTF_8)))
+      }
   }
 
   val queries: Map[String, QFn] = Map(
@@ -402,7 +397,7 @@ object Multimodal extends graft.Bank {
     // identity is recovered from the key, as in any object-store corpus.
     "mm_decode" -> ((s, dir) => {
       import s.implicits._
-      val path = stagePngDocs(s, dir)
+      val path = stagePngDocs(s, dir).toString
       val media = s.read.format("binaryFile")
         .option("pathGlobFilter", "*.png").load(path)
         .select(
@@ -987,5 +982,5 @@ object Multimodal extends graft.Bank {
          SELECT doc_a, doc_b, CAST(bit_count(xor(pa, pb)) AS BIGINT) AS hamming
          FROM cand WHERE bit_count(xor(pa, pb)) <= 2
          ORDER BY hamming, doc_a, doc_b"""
-  ).map { case (k, v) => k -> v.replaceAll("\\s+", " ").trim }
+  )
 }

@@ -108,5 +108,5 @@ object MultimodalFrames extends graft.Bank {
            coalesce(list_max(jumps), 0) AS max_jump,
            round(CAST(n_frames AS DOUBLE) / (len(list_filter(jumps, x -> x > 100)) + 1), 6) AS mean_shot_len
          FROM j ORDER BY doc_id"""
-  ).map { case (k, v) => k -> v.replaceAll("\\s+", " ").trim }
+  )
 }

@@ -510,5 +510,5 @@ object Relational extends graft.Bank {
              ON v.user_id = p.user_id AND v.ts < p.ts
             AND v.ts >= p.ts - INTERVAL 30 MINUTE)
          WHERE rn = 1 ORDER BY event_id"""
-  ).map { case (k, v) => k -> v.replaceAll("\\s+", " ").trim }
+  )
 }

@@ -24,27 +24,20 @@ object ScaleOps extends graft.Bank {
 
   private val SALT = 8
 
-  /** One-time creation of the bucketed table pair for `join_bucketed`.
-    * Cache key is a digest of the FULL sfDir path (two dirs with the same
-    * digits must not collide); the tables live in scratch ([[graft.Scratch]]).
-    * Bench calls this during warmup so the timed query measures the join,
-    * not the fixture write. */
-  def prepareBucketed(s: SparkSession, dir: String): (String, String) = {
-    val tag = graft.Tables.pathTag(dir)
-    val oTbl = s"orders_b_$tag"
-    val cTbl = s"customer_b_$tag"
-    if (!s.catalog.tableExists(oTbl)) {
-      // external bucketed tables (bucket metadata needs the catalog;
-      // explicit path keeps the warehouse conf untouched)
-      t(s, dir, "orders").write.mode(SaveMode.Overwrite)
-        .option("path", graft.Scratch.path(s, oTbl).toString)
-        .bucketBy(8, "o_custkey").sortBy("o_custkey").saveAsTable(oTbl)
-      t(s, dir, "customer").write.mode(SaveMode.Overwrite)
-        .option("path", graft.Scratch.path(s, cTbl).toString)
-        .bucketBy(8, "c_custkey").sortBy("c_custkey").saveAsTable(cTbl)
-    }
-    (oTbl, cTbl)
+  /** The bucketed table pair for `join_bucketed`: external tables (bucket
+    * metadata needs the catalog; the explicit path keeps the warehouse conf
+    * untouched), each named after its fixture dir, so two sf dirs with the
+    * same digits never collide. */
+  private def bucketed(table: String, key: String) = graft.Fixture(s"${table}_b") { (s, dir, out) =>
+    t(s, dir, table).write.mode(SaveMode.Overwrite).option("path", out.toString)
+      .bucketBy(8, key).sortBy(key).saveAsTable(out.getFileName.toString)
   }
+  private val bucketedOrders = bucketed("orders", "o_custkey")
+  private val bucketedCustomer = bucketed("customer", "c_custkey")
+
+  /** (orders, customer) bucketed table names for `dir`. */
+  def prepareBucketed(s: SparkSession, dir: String): (String, String) =
+    (bucketedOrders(s, dir).getFileName.toString, bucketedCustomer(s, dir).getFileName.toString)
 
   val queries: Map[String, QFn] = Map(
     // Range-partitioner boundary pre-flight — exactly what Spark's
@@ -145,8 +138,8 @@ object ScaleOps extends graft.Bank {
     "join_dpp" -> ((s, dir) => {
       val sc = org.apache.spark.sql.graftbridge.Bridge.cloneSession(s)
       sc.conf.set("spark.sql.optimizer.dynamicPartitionPruning.useStats", "false")
-      val fact = sc.read.parquet(EtlOps.stagePartitioned(sc, dir))
-      val dim = sc.read.parquet(EtlOps.stageStatusDim(sc, dir))
+      val fact = sc.read.parquet(EtlOps.stagePartitioned(sc, dir).toString)
+      val dim = sc.read.parquet(EtlOps.stageStatusDim(sc, dir).toString)
         .filter(col("label") === "finished")
       fact.join(dim, fact("o_orderstatus") === dim("status"))
         .groupBy(col("label"))
@@ -270,5 +263,5 @@ object ScaleOps extends graft.Bank {
                            FROM events GROUP BY user_id) d
            ON user_id = d_user
          GROUP BY user_id ORDER BY user_id"""
-  ).map { case (k, v) => k -> v.replaceAll("\\s+", " ").trim }
+  )
 }

@@ -129,5 +129,5 @@ object SetOps extends graft.Bank {
            INTERSECT ALL
            SELECT o_custkey FROM orders WHERE o_orderstatus = 'O')
          GROUP BY o_custkey ORDER BY o_custkey"""
-  ).map { case (k, v) => k -> v.replaceAll("\\s+", " ").trim }
+  )
 }

@@ -2159,5 +2159,5 @@ object ShapeOps extends graft.Bank {
            FROM users u CROSS JOIN days d
            LEFT JOIN daily ON daily.user_id = u.user_id AND daily.day = d.day) x
          ORDER BY user_id, day"""
-  ).map { case (k, v) => k -> v.replaceAll("\\s+", " ").trim }
+  )
 }

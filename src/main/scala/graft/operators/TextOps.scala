@@ -3272,5 +3272,5 @@ object TextOps extends graft.Bank {
            FROM documents
            ORDER BY es_key DESC, doc_id LIMIT 20)
          ORDER BY doc_id"""
-  ).map { case (k, v) => k -> v.replaceAll("\\s+", " ").trim }
+  )
 }

@@ -48,5 +48,5 @@ object TypedOps extends graft.Bank {
          round(CAST(sum(CAST(o_totalprice AS DECIMAL(18,6))) AS DOUBLE), 6) AS total
          FROM orders WHERE o_totalprice > 100000.0
          GROUP BY o_orderstatus ORDER BY o_orderstatus"""
-  ).map { case (k, v) => k -> v.replaceAll("\\s+", " ").trim }
+  )
 }

@@ -1954,7 +1954,7 @@ object VectorOps extends graft.Bank {
                round(count(a.neighbor_id) / count(1), 6) AS recall
         FROM truth t LEFT JOIN ann a
           ON t.probe_id = a.probe_id AND t.neighbor_id = a.neighbor_id
-        GROUP BY t.probe_id ORDER BY t.probe_id""".replaceAll("\\s+", " ").trim) +
+        GROUP BY t.probe_id ORDER BY t.probe_id""") +
     ("eval_rbo" ->
       s"""WITH a AS (${oraclesBase("vec_knn_join")}),
           b AS (${oraclesBase("vec_ivf_ann")})
@@ -1967,7 +1967,7 @@ object VectorOps extends graft.Bank {
                    AS DOUBLE) AS rbo
           FROM a LEFT JOIN b
             ON a.probe_id = b.probe_id AND a.neighbor_id = b.neighbor_id
-          GROUP BY a.probe_id ORDER BY a.probe_id""".replaceAll("\\s+", " ").trim) +
+          GROUP BY a.probe_id ORDER BY a.probe_id""") +
     ("vec_pca_power" ->
       s"""WITH x AS MATERIALIZED (
             SELECT vec_id, CAST(u.p AS INTEGER) AS pos,
@@ -2735,5 +2735,5 @@ object VectorOps extends graft.Bank {
                   / sum(n_vecs) OVER (), 6) AS load_factor,
                 round(CAST(n_foreign AS DOUBLE) / n_vecs, 6) AS foreign_share
          FROM cells ORDER BY cell"""
-  ).map { case (k, v) => k -> v.replaceAll("\\s+", " ").trim }
+  )
 }

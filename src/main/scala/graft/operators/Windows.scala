@@ -342,5 +342,5 @@ object Windows extends graft.Bank {
                     THEN 1 ELSE 0 END AS new_sess
              FROM events))
          GROUP BY user_id, sid ORDER BY user_id, sid"""
-  ).map { case (k, v) => k -> v.replaceAll("\\s+", " ").trim }
+  )
 }

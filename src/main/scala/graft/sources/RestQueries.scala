@@ -124,5 +124,5 @@ object RestQueries extends graft.Bank {
       s"""SELECT event_type, count(1) AS n,
          round(CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE), 6) AS v
          FROM $stubRows GROUP BY event_type ORDER BY event_type"""
-  ).map { case (k, v) => k -> v.replaceAll("\\s+", " ").trim }
+  )
 }

@@ -137,11 +137,11 @@ object StreamDedup extends graft.Bank {
   /** The documents table as two batches (even doc_ids, then odd) so the
     * file stream replays two micro-batches and planted near-dup pairs with
     * adjacent ids land CROSS-batch. */
-  private[graft] def stageDocBatches(s: org.apache.spark.sql.SparkSession, dir: String): java.nio.file.Path =
-    Streams.stageBatches(graft.Scratch.fixture(s, "docs", dir), {
-      val docs = graft.Tables.t(s, dir, "documents").select(col("doc_id"), col("text"))
-      Seq(docs.filter(col("doc_id") % 2 === 0), docs.filter(col("doc_id") % 2 === 1))
-    })
+  private[graft] val stageDocBatches = graft.Fixture("docs") { (s, dir, out) =>
+    val docs = graft.Tables.t(s, dir, "documents").select(col("doc_id"), col("text"))
+    Streams.writeBatches(out,
+      Seq(docs.filter(col("doc_id") % 2 === 0), docs.filter(col("doc_id") % 2 === 1)))
+  }
 
   /** Run the incremental-LSH dedup stream over staged document batches
     * into a FRESH per-invocation store/output (the store accumulates by

@@ -45,17 +45,18 @@ object Streams extends graft.Bank {
     StructField("value", DoubleType),
     StructField("props", StringType)))
 
-  /** File-source stream over the events parquet with µs timestamps.
-    * The file-stream source needs a directory, so the single events file is
-    * staged (symlinked) into a scratch dir per scale factor. */
+  /** The file-stream source needs a directory, so the single events file
+    * is staged (symlinked) into a scratch dir per scale factor. */
+  private[graft] val stageEventsLink = graft.Fixture("events") { (_, sfDir, out) =>
+    Files.createDirectories(out)
+    Files.createSymbolicLink(out.resolve("events.parquet"), Paths.get(sfDir, "events.parquet"))
+  }
+
+  /** File-source stream over the events parquet with µs timestamps. */
   private[graft] def eventsStream(s: SparkSession, sfDir: String): DataFrame = {
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val dir = graft.Scratch.fixture(s, "events", sfDir)
-    Files.createDirectories(dir)
+    val dir = stageEventsLink(s, sfDir)
     val src = Paths.get(sfDir, "events.parquet")
-    val link = dir.resolve("events.parquet")
-    if (!Files.exists(link, java.nio.file.LinkOption.NOFOLLOW_LINKS))
-      Files.createSymbolicLink(link, src)
     // the stream schema must match what the generator actually wrote for
     // `ts` (ns-INT64 in earlier drops, µs TIMESTAMP in current ones) — a
     // one-footer batch read resolves it, then ts normalizes to a session-tz
@@ -75,37 +76,30 @@ object Streams extends graft.Bank {
     else raw.withColumn("ts", col("ts").cast("timestamp"))
   }
 
-  /** Stage `frames` once as `<i>_batch.parquet` files in `inDir`, one file
-    * per frame, so a file stream with maxFilesPerTrigger=1 replays them in
-    * order, one per trigger. Idempotent: an `inDir` whose `_STAGED` marker
-    * (written last) exists is reused, so repeat runs (and the bench) time
-    * the stream, not this write. FileStreamSource orders by modification
-    * time, not name, and the staged parts' mtimes can tie on
-    * coarse-grained filesystems, so each file's mtime is pinned, strictly
-    * increasing. */
-  private[graft] def stageBatches(inDir: Path, frames: => Seq[DataFrame]): Path = {
-    if (!Files.exists(inDir.resolve("_STAGED"))) {
-      FileUtils.deleteQuietly(inDir.toFile)
-      Files.createDirectories(inDir)
-      frames.zipWithIndex.foreach { case (frame, i) =>
-        val part = inDir.resolve(s"_part$i")
-        frame.coalesce(1).write.mode(SaveMode.Overwrite).parquet(part.toString)
-        val listing = Files.list(part)
-        val parts =
-          try listing.filter(_.toString.endsWith(".parquet")).toArray(new Array[Path](_))
-          finally listing.close()
-        // a blind REPLACE_EXISTING move of several parts onto one name
-        // would silently drop data
-        require(parts.length == 1,
-          s"expected exactly 1 part file in $part (coalesce(1) staging), got ${parts.length}")
-        val staged = inDir.resolve(s"${i}_batch.parquet")
-        Files.move(parts.head, staged, StandardCopyOption.REPLACE_EXISTING)
-        FileUtils.deleteQuietly(part.toFile)
-        Files.setLastModifiedTime(staged, FileTime.fromMillis((i + 1) * 1000000L))
-      }
-      Files.createFile(inDir.resolve("_STAGED"))
+  /** Write `frames` as `<i>_batch.parquet` files in `inDir`, one file per
+    * frame, so a file stream with maxFilesPerTrigger=1 replays them in
+    * order, one per trigger; a [[graft.Fixture]] writer, so it runs once
+    * per (context, sf dir). FileStreamSource orders by modification time,
+    * not name, and the staged parts' mtimes can tie on coarse-grained
+    * filesystems, so each file's mtime is pinned, strictly increasing. */
+  private[graft] def writeBatches(inDir: Path, frames: Seq[DataFrame]): Unit = {
+    Files.createDirectories(inDir)
+    frames.zipWithIndex.foreach { case (frame, i) =>
+      val part = inDir.resolve(s"_part$i")
+      frame.coalesce(1).write.mode(SaveMode.Overwrite).parquet(part.toString)
+      val listing = Files.list(part)
+      val parts =
+        try listing.filter(_.toString.endsWith(".parquet")).toArray(new Array[Path](_))
+        finally listing.close()
+      // a blind REPLACE_EXISTING move of several parts onto one name
+      // would silently drop data
+      require(parts.length == 1,
+        s"expected exactly 1 part file in $part (coalesce(1) staging), got ${parts.length}")
+      val staged = inDir.resolve(s"${i}_batch.parquet")
+      Files.move(parts.head, staged, StandardCopyOption.REPLACE_EXISTING)
+      FileUtils.deleteQuietly(part.toFile)
+      Files.setLastModifiedTime(staged, FileTime.fromMillis((i + 1) * 1000000L))
     }
-    inDir
   }
 
   /** Keyed MERGE of one micro-batch into a parquet "collection", rewriting
@@ -199,13 +193,12 @@ object Streams extends graft.Bank {
 
   /** The upsert-sink input feed: batch 0 = the raw events, batch 1 =
     * corrected duplicates (value × 2 for every 5th id). */
-  private[graft] def stageUpsertInput(s: SparkSession, dir: String): Path = {
+  private[graft] val stageUpsertInput = graft.Fixture("in") { (s, dir, out) =>
     s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    stageBatches(graft.Scratch.fixture(s, "in", dir), {
-      val raw = s.read.parquet(s"$dir/events.parquet")
-        .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
-      Seq(raw, raw.filter(col("event_id") % 5 === 0).withColumn("value", col("value") * 2))
-    })
+    val raw = s.read.parquet(s"$dir/events.parquet")
+      .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
+    writeBatches(out, Seq(raw,
+      raw.filter(col("event_id") % 5 === 0).withColumn("value", col("value") * 2)))
   }
 
   /** Shuffle-partition count for the bounded stream replays — SIZE-DERIVED
@@ -216,17 +209,15 @@ object Streams extends graft.Bank {
     * 33.6 s (8 partitions, the old constant) / 30.3 s (4) / 27.8 s (2) /
     * 33.3 s (1 — compute serializes). One partition per 32 MB of stream
     * input, floor 2, capped at the context's parallelism: sf0.1's 2 MB
-    * events file → 2; the ×100 rehearsal's ~200 MB → 7; a real deployment
-    * sets `spark.graft.stream.shufflePartitions` (state must be
-    * executor-memory-sized, the upsert-sink bucket rule). Results are
-    * partition-count-independent (every query ends in an ORDER BY; the
-    * RocksDB/default-provider parity spec re-runs the family). */
-  private[graft] def streamShufflePartitions(s: SparkSession, bytes: Long): Int =
-    s.conf.getOption("spark.graft.stream.shufflePartitions").map(_.toInt)
-      .getOrElse {
-        val byBytes = 1 + ((bytes - 1) / (32L << 20)).toInt
-        math.max(2, math.min(s.sparkContext.defaultParallelism, byBytes))
-      }
+    * events file → 2; the ×100 rehearsal's ~200 MB → 7; a real
+    * deployment's input grows the width up to the context's parallelism.
+    * Results are partition-count-independent (every query ends in an
+    * ORDER BY; the RocksDB/default-provider parity spec re-runs the
+    * family). */
+  private[graft] def streamShufflePartitions(s: SparkSession, bytes: Long): Int = {
+    val byBytes = 1 + ((bytes - 1) / (32L << 20)).toInt
+    math.max(2, math.min(s.sparkContext.defaultParallelism, byBytes))
+  }
 
   /** A clone of `s` for one bounded replay of the parquet input at `input`
     * (a file, or the `.parquet` files directly in a dir): shared
@@ -701,5 +692,5 @@ object Streams extends graft.Bank {
                ORDER BY epoch_us(ts) DESC, event_id DESC) AS rn
            FROM events)
          WHERE rn = 1 ORDER BY user_id"""
-  ).map { case (k, v) => k -> v.replaceAll("\\s+", " ").trim }
+  )
 }

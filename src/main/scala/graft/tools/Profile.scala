@@ -12,7 +12,7 @@ object Profile {
       else graft.SparkEntry.queries.keys.toSeq.sorted
     val spark = graft.GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    graft.Warmups.warmAll(spark, sfDir)
+    graft.ArtifactCache.warmAll(spark, sfDir)
     spark.catalog.clearCache()
     for (name <- names) {
       val times = (1 to repeat).map(_ => graft.Measure.count(spark, sfDir, name))

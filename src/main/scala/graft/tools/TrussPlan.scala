@@ -10,8 +10,8 @@ object TrussPlan {
     val sfDir = if (args.length > 0) args(0) else "/root/testdata/sf0.1"
     val spark = graft.GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    val (allPairs, nodes) = graft.operators.AnalyticsOps.allPairsGraph(spark, sfDir)
-    val bcast = nodes.count() <= graft.Knobs.graphBroadcastMaxNodes(spark)
+    val (allPairs, _, nNodes) = graft.operators.AnalyticsOps.allPairsGraph(spark, sfDir)
+    val bcast = nNodes <= graft.Knobs.graphBroadcastMaxNodes(spark)
     println("========== trussRound (one support peel) ==========")
     graft.operators.AnalyticsOps.trussRound(
       allPairs.select(org.apache.spark.sql.functions.col("p1"),

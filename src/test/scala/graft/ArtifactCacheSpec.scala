@@ -55,6 +55,24 @@ class ArtifactCacheSpec extends AnyFunSuite {
     assert(c.size === 1)
   }
 
+  test("warm itemization bills a build nested in another cache's build to its own cache") {
+    // the builders sleep only for this test's dir key, so the warm block
+    // of the shared test JVM pays nothing for these two registered caches
+    val key = "unit:nested-billing"
+    def work(d: String, ms: Long): Int = { if (d == key) Thread.sleep(ms); 0 }
+    lazy val inner: ArtifactCache[Int] = ArtifactCache.frames[Int]("test-billing-inner")(
+      (_, d) => { inner.getOrElseUpdate(d, work(d, 400)); () })
+    lazy val outer: ArtifactCache[Int] = ArtifactCache.frames[Int]("test-billing-outer")(
+      (s, d) => { outer.getOrElseUpdate(d, { inner.warmer.get(s, d); work(d, 150) }); () })
+    val t0 = System.nanoTime()
+    val items = ArtifactCache.warmTimed(null, key, Seq(outer, inner))
+    val wall = (System.nanoTime() - t0) / 1e9
+    val sec = items.map { case (label, s, ok) => assert(ok, label); label -> s }.toMap
+    assert(sec("test-billing-inner") >= 0.4, sec)
+    assert(sec("test-billing-outer") >= 0.15 && sec("test-billing-outer") < 0.4, sec)
+    assert(math.abs(sec.values.sum - wall) < 0.05, s"items $sec must sum to the block's $wall s")
+  }
+
   test("evictAllCaches unpersists the memoized graph-artifact RDDs and allows rebuild") {
     val spark = SparkSuite.spark
     val sc = spark.sparkContext
@@ -114,7 +132,7 @@ class ArtifactCacheSpec extends AnyFunSuite {
   test("after warmAll every frame a PerDir cache holds is MEMORY_AND_DISK with all partitions cached") {
     val spark = SparkSuite.spark
     ArtifactCache.evictAllCaches()
-    val failed = Warmups.warmAll(spark, SparkSuite.sf)
+    val failed = ArtifactCache.warmAll(spark, SparkSuite.sf)
     assert(failed.isEmpty, s"warmups failed: $failed")
     val pins = ArtifactCache.caches.collect {
       case c if c.warm.isInstanceOf[ArtifactCache.PerDir] => c.pins.map(c.name -> _)

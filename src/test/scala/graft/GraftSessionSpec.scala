@@ -38,4 +38,17 @@ class GraftSessionSpec extends AnyFunSuite {
     assert(SparkEntry.union("query", Seq(Map("a" -> 1), Map("b" -> 2))) === Map("a" -> 1, "b" -> 2))
     assert(SparkEntry.queries eq SparkEntry.queries)
   }
+
+  test("oracle SQL is normalized once in SparkEntry: one line, single spaces, no bank-level copies") {
+    assert(SparkEntry.oracleSql.size > 500)
+    val messy = SparkEntry.oracleSql.collect {
+      case (k, v) if v != v.trim || "\\s\\s|[\\n\\r\\t]".r.findFirstIn(v).isDefined => k
+    }
+    assert(messy.isEmpty, s"oracles not on one line: ${messy.mkString(", ")}")
+    val files = Files.walk(Paths.get("src/main")).iterator().asScala
+      .filter(p => p.toString.endsWith(".scala")).toList
+    val copies = files.filter(p => p.getFileName.toString != "SparkEntry.scala" &&
+      Files.readString(p).contains(".replaceAll(\"\\\\s+\", \" \").trim"))
+    assert(copies.isEmpty, s"oracle whitespace normalized outside SparkEntry: ${copies.mkString(", ")}")
+  }
 }

@@ -1,5 +1,6 @@
 package graft
 
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.SparkSession
 
 /** The scale-parameter registry contract (SURVEY §6.7, VERDICT r13
@@ -55,6 +56,22 @@ class KnobsSpec extends SparkSuite {
     // phash banding is pure capacity: the pigeonhole makes the pair set
     // identical at both band settings (see Multimodal.phashBandCount)
     assert(byKey(Knobs.PhashBandOccupancyKey) === "capacity")
+  }
+
+  test("every spark.graft. conf key read in src/main is a registered knob or a documented switch") {
+    // the two switches outside Knobs.all: the reliable-checkpoint dir
+    // (Tuning, RoundPin, Components) and the dedup collapse parity hook
+    val switches = Set("spark.graft.checkpointDir", "spark.graft.dedup.forceCollapse")
+    val allowed = Knobs.all.map(_._1).toSet ++ switches
+    val key = "\"(spark\\.graft\\.[A-Za-z0-9_.]+)".r
+    val files = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main")).iterator()
+      .asScala.filter(p => p.toString.endsWith(".scala")).toList
+    assert(files.size > 50, s"source walk broke: ${files.size} files")
+    val found = files.flatMap(p => key.findAllMatchIn(java.nio.file.Files.readString(p))
+      .map(m => s"${p.getFileName}: ${m.group(1)}"))
+    assert(found.size >= Knobs.all.size, s"key scan broke: $found")
+    val undeclared = found.filterNot(f => allowed(f.split(": ")(1)))
+    assert(undeclared.isEmpty, s"conf keys outside Knobs.all: ${undeclared.mkString(", ")}")
   }
 
   test("SURVEY §6.7 table lists exactly the registered knobs with their defaults") {

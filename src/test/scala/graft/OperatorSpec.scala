@@ -14,19 +14,22 @@ class OperatorSpec extends SparkSuite {
 
   test("every declared query RUNS on sf0.001 and every oracle key exists") {
     assert(SparkEntry.oracleSql.keySet.subsetOf(SparkEntry.queries.keySet))
-    // Warmup-completeness gate (VERDICT r12 item 1): after Warmups.warmAll,
-    // running EVERY registered query must not grow any PerDir ArtifactCache
-    // — growth means a shared artifact was built inside a query, i.e. its
-    // bench sweep entry would time the build (the dedup_cluster defect:
-    // 4.563 s in-sweep vs 0.056 s isolated). KeyDriven caches (query-site
-    // pins) legitimately grow and are exempt by construction.
+    // Warmup-completeness gate (VERDICT r12 item 1): after
+    // ArtifactCache.warmAll, running EVERY registered query must not grow
+    // any PerDir ArtifactCache nor stage any Fixture — either means its
+    // bench sweep entry would time a one-off build (the dedup_cluster
+    // defect: 4.563 s in-sweep vs 0.056 s isolated). KeyDriven caches
+    // (query-site pins) legitimately grow and are exempt by construction.
     ArtifactCache.evictAllCaches()
-    val warmFailures = Warmups.warmAll(spark, sf)
+    val warmFailures = ArtifactCache.warmAll(spark, sf)
     assert(warmFailures.isEmpty, s"warmups failed: $warmFailures")
     def perDirSizes: Map[String, Int] = ArtifactCache.caches.collect {
       case c if c.warm.isInstanceOf[ArtifactCache.PerDir] => c.name -> c.size
     }.toMap
+    def stagings: Map[String, Int] =
+      ArtifactCache.fixtures.map(f => f.name -> f.stagings.get).toMap
     val warmed = perDirSizes
+    val staged = stagings
     val failures = SparkEntry.queries.toSeq.sortBy(_._1).flatMap { case (name, fn) =>
       try { fn(spark, sf).count(); None }
       catch { case e: Throwable => Some(s"$name: ${e.getMessage}") }
@@ -39,6 +42,9 @@ class OperatorSpec extends SparkSuite {
     assert(grown.isEmpty,
       "ArtifactCache built INSIDE a query after warmAll (its bench entry " +
         s"would time the build — give it a PerDir warm): ${grown.mkString(", ")}")
+    val restaged = stagings.collect { case (n, k) if k != staged(n) => s"$n: ${staged(n)} -> $k" }
+    assert(restaged.isEmpty,
+      s"fixture staged INSIDE a query after warmAll: ${restaged.mkString(", ")}")
   }
 
   // Birth discipline (VERDICT r11 item 7): every registered query must be

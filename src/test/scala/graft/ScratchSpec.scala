@@ -32,25 +32,50 @@ class ScratchSpec extends SparkSuite {
   test("every staging entrypoint returns a path under the context's SparkFiles root") {
     def under(p: String): Boolean =
       Paths.get(p.stripPrefix("file:")).toAbsolutePath.normalize.startsWith(root)
+    val fixtures = ArtifactCache.fixtures
+    val names = fixtures.map(_.name)
+    assert(names.size >= 18 && names.distinct.size === names.size,
+      s"expected the 18+ declared fixtures, each once: ${names.mkString(", ")}")
+    val staged = fixtures.map(f => f(spark, sf))
+    val outside = staged.map(_.toString).filterNot(under)
+    assert(outside.isEmpty, s"staged outside $root: ${outside.mkString(", ")}")
+    val unmarked = staged.filterNot(p => Files.exists(p.resolve("_STAGED")))
+    assert(unmarked.isEmpty, s"staged without a marker: ${unmarked.mkString(", ")}")
     val (oTbl, cTbl) = operators.ScaleOps.prepareBucketed(spark, sf)
     val tableDirs = Seq(oTbl, cTbl).map(t => spark.sql(s"DESCRIBE TABLE EXTENDED $t")
       .filter(col("col_name") === "Location").head.getString(1))
-    import operators.EtlOps._
-    val staged = Seq(
-      stageJsonl(spark, sf), stageNestedJson(spark, sf), stageCsv(spark, sf),
-      stageText(spark, sf), stageOrc(spark, sf), stageBinaryDocs(spark, sf),
-      stagePartitioned(spark, sf), stageCompact(spark, sf), stageStatusDim(spark, sf),
-      stageXml(spark, sf),
-      streaming.Streams.stageUpsertInput(spark, sf).toString,
-      streaming.StreamDedup.stageDocBatches(spark, sf).toString,
-      operators.Multimodal.stagePngDocs(spark, sf)) ++ tableDirs
-    val outside = staged.filterNot(under)
-    assert(outside.isEmpty, s"staged outside $root: ${outside.mkString(", ")}")
+    assert(tableDirs.forall(under), tableDirs)
     val plan = org.apache.spark.sql.graftbridge.Bridge.analyzed(
       streaming.Streams.eventsStream(spark, sf)).toString
     val link = Scratch.fixture(spark, "events", sf).resolve("events.parquet")
     assert(under(link.toString) && Files.isSymbolicLink(link))
     assert(plan.contains(link.getParent.toString), plan)
+  }
+
+  test("whether a fixture is staged is decided in Fixture only: no _SUCCESS, _STAGED or tableExists check elsewhere in src/main") {
+    val needles = Seq("\"_SUCCESS\"", "\"_STAGED\"", "tableExists")
+    val files = Files.walk(Paths.get("src/main")).iterator().asScala
+      .filter(p => Files.isRegularFile(p) && p.toString.endsWith(".scala")).toList
+    assert(files.size > 50, s"source walk broke: ${files.size} files")
+    val hits = for {
+      p <- files if p.getFileName.toString != "Scratch.scala"
+      n <- needles if Files.readString(p).contains(n)
+    } yield s"$p: $n"
+    assert(hits.isEmpty, s"staging decided outside graft.Fixture: ${hits.mkString(", ")}")
+  }
+
+  test("a fixture stages once, restages a dir that lost its marker, and its clear does not follow the events link") {
+    val events = Paths.get(sf, "events.parquet")
+    val before = sha(events)
+    val f = streaming.Streams.stageEventsLink
+    val dir = f(spark, sf)
+    val n = f.stagings.get
+    assert(f(spark, sf) === dir && f.stagings.get === n, "a marked fixture staged again")
+    // a partial dir: the link is there, the marker is not
+    Files.delete(dir.resolve("_STAGED"))
+    assert(f(spark, sf) === dir && f.stagings.get === n + 1)
+    assert(Files.isSymbolicLink(dir.resolve("events.parquet")))
+    assert(Files.isRegularFile(events) && sha(events) === before)
   }
 
   test("Spark's recursive delete of the events staging dir leaves the sf events file intact") {
