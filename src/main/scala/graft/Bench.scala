@@ -23,6 +23,10 @@ object Bench {
     // follows.
     val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    // one untimed no-op job first: the JVM and session cold start (first
+    // job, scheduler and task-path JIT) would otherwise be billed to
+    // whichever entry the itemized warm block below runs first
+    spark.range(1).count()
     // untimed warmup: JIT, the codegen cache (shared by every session and
     // sized for the sweep's working set, see Tuning), parquet footers — so
     // per-query numbers measure the query, not whichever one ran first — plus
@@ -54,8 +58,12 @@ object Bench {
     // parquet footers and shuffle paths are compiled before any clock
     // starts. ~35 mostly-sub-second queries — bounded, family-complete,
     // and independent of which names happen to sort to the sweep head.
-    timedSet.groupBy(_.takeWhile(_ != '_')).toSeq.sortBy(_._1)
-      .foreach { case (_, members) => Measure.count(spark, sfDir, members.min) }
+    // Each family's member comes from the FULL registry, so a
+    // SPARK_GRAFT_BENCH_ONLY re-measure warms what the full sweep warms
+    // instead of running untimed the very entries it then times.
+    def family(name: String): String = name.takeWhile(_ != '_')
+    val warmMember = SparkEntry.queries.keys.groupBy(family).map { case (f, ms) => f -> ms.min }
+    timedSet.map(family).distinct.sorted.foreach(f => Measure.count(spark, sfDir, warmMember(f)))
     val codegenAtSweep = Measure.codegen()
     val results = timedSet.zipWithIndex.map { case (name, i) =>
       // GC barrier between ~128-query chunks (VERDICT r13 item 2): a

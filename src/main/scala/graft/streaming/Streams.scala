@@ -213,7 +213,10 @@ object Streams extends graft.Bank {
     * deployment's input grows the width up to the context's parallelism.
     * Results are partition-count-independent (every query ends in an
     * ORDER BY; the RocksDB/default-provider parity spec re-runs the
-    * family). */
+    * family). That A/B predates cheap checkpoint commits
+    * ([[LocalCheckpointFileManager]]): each checkpoint file then cost
+    * ~30 ms, and state-store commits scale with the width, so the width
+    * that minimized commits may no longer be the best one. */
   private[graft] def streamShufflePartitions(s: SparkSession, bytes: Long): Int = {
     val byBytes = 1 + ((bytes - 1) / (32L << 20)).toInt
     math.max(2, math.min(s.sparkContext.defaultParallelism, byBytes))
