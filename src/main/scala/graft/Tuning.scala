@@ -22,9 +22,9 @@ import org.apache.spark.sql.SparkSession
   *    (`spark.sql.codegen.cache.maxEntries=5000`). Spark caches each
   *    compiled class by (thread context classloader, generated source).
   *    With isolation on (Spark 4.1's default) every session gets its own
-  *    executor classloader keyed by its UUID: each `Bridge.cloneSession`
-  *    (the streaming replays in `Streams.runToTable` and StreamDedup) and
-  *    the clone Spark makes for every streaming query it starts compile
+  *    executor classloader keyed by its UUID: the clone Spark makes for
+  *    every streaming query it starts and each `Bridge.cloneSession`
+  *    (`Components.hashMinLabels` and the ScaleOps join queries) compile
   *    again every class they use. The default cap of 100 entries is a
   *    Guava cache that may evict before it is full, and `analytics_mix`
   *    alone needs about 130 entries, so its LRU thrashed on every pass.

@@ -33,9 +33,7 @@ object RestQueries extends graft.Bank {
         .option("url", stub.url).option("pages", "20").option("pageSize", "50")
         .option("pagesPerTrigger", "5")
         .load()
-      graft.streaming.Streams.drain(s, "rest_ingest", stream.writeStream
-        .format("memory").queryName("mem_rest_ingest").outputMode("append"))
-      s.table("mem_rest_ingest")
+      graft.streaming.Streams.drainToFrame(s, stream, "mem_rest_ingest", "append")
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n"), dsum(col("value")).as("v"))
         .orderBy(col("event_type"))

@@ -150,8 +150,7 @@ object StreamDedup extends graft.Bank {
     val runDir = graft.Scratch.fresh(s, "sdn_")
     val storeDir = runDir.resolve("store")
     val outDir = runDir.resolve("out")
-    val scoped = Streams.replaySession(s, inDir)
-    Streams.drain(s, "sdn", scoped.readStream.schema(docSchema)
+    Streams.drain(s, "sdn", s.readStream.schema(docSchema)
       .option("maxFilesPerTrigger", "1").parquet(inDir.toString)
       .writeStream.foreachBatch((b: DataFrame, id: Long) => processBatch(b, id, storeDir, outDir)))
     // decisions are batch-partitioned (batch=N dirs); the partition

@@ -201,52 +201,12 @@ object Streams extends graft.Bank {
       raw.filter(col("event_id") % 5 === 0).withColumn("value", col("value") * 2)))
   }
 
-  /** Shuffle-partition count for the bounded stream replays — SIZE-DERIVED
-    * (optimization r16; guide §2.2 "fewer, larger reduce partitions" and
-    * the scale-adaptive-settings rule): state-store instances, their
-    * per-batch commits and the memory-sink collection all scale with
-    * shuffle partitions, and an idle A/B at sf0.1 read the family at
-    * 33.6 s (8 partitions, the old constant) / 30.3 s (4) / 27.8 s (2) /
-    * 33.3 s (1 — compute serializes). One partition per 32 MB of stream
-    * input, floor 2, capped at the context's parallelism: sf0.1's 2 MB
-    * events file → 2; the ×100 rehearsal's ~200 MB → 7; a real
-    * deployment's input grows the width up to the context's parallelism.
-    * Results are partition-count-independent (every query ends in an
-    * ORDER BY; the RocksDB/default-provider parity spec re-runs the
-    * family). That A/B predates cheap checkpoint commits
-    * ([[LocalCheckpointFileManager]]): each checkpoint file then cost
-    * ~30 ms, and state-store commits scale with the width, so the width
-    * that minimized commits may no longer be the best one. */
-  private[graft] def streamShufflePartitions(s: SparkSession, bytes: Long): Int = {
-    val byBytes = 1 + ((bytes - 1) / (32L << 20)).toInt
-    math.max(2, math.min(s.sparkContext.defaultParallelism, byBytes))
-  }
-
-  /** A clone of `s` for one bounded replay of the parquet input at `input`
-    * (a file, or the `.parquet` files directly in a dir): shared
-    * SparkContext, its own SQLConf with the size-derived shuffle width.
-    * The caller's session conf is never mutated, so a concurrent query on
-    * it can't silently inherit narrow parallelism. The clone reuses the
-    * classes the caller's session compiled ([[graft.Tuning]]). */
-  private[graft] def replaySession(s: SparkSession, input: Path): SparkSession = {
-    val bytes = scala.util.Try {
-      val files = if (!Files.isDirectory(input)) Array(input) else {
-        val l = Files.list(input)
-        try l.filter(_.toString.endsWith(".parquet")).toArray(new Array[Path](_))
-        finally l.close()
-      }
-      files.map(Files.size).sum
-    }.getOrElse(0L)
-    val scoped = org.apache.spark.sql.graftbridge.Bridge.cloneSession(s)
-    scoped.conf.set("spark.sql.shuffle.partitions",
-      streamShufflePartitions(s, bytes).toString)
-    scoped
-  }
-
   /** Drain a bounded stream: start `writer` with an explicit checkpoint in
     * a fresh scratch dir, process all available input, stop, and delete
-    * the checkpoint — these replays have nothing to recover. The query
-    * runs on the session `writer` was built from. */
+    * the checkpoint — these replays have nothing to recover. Every replay
+    * builds its stream on the caller's session `s`, so the query reports
+    * its progress to the listeners registered there and runs at that
+    * session's shuffle width. */
   private[graft] def drain(s: SparkSession, name: String, writer: DataStreamWriter[_]): Unit = {
     val ckpt = graft.Scratch.fresh(s, s"ckpt_${name}_")
     val q = writer.option("checkpointLocation", ckpt.toString).start()
@@ -256,17 +216,16 @@ object Streams extends graft.Bank {
     }
   }
 
-  /** Run a streaming aggregation to completion into a memory sink, on a
-    * [[replaySession]]: state-store instances and their per-batch commits
-    * scale with shuffle partitions, and the narrow width cuts that
-    * overhead without changing results. The memory-sink view and the
-    * returned frame are bound to the clone, which is dropped with it. */
-  private def runToTable(s: SparkSession, dir: String,
-      build: SparkSession => DataFrame,
+  /** Drain `stream` into a memory sink named `name` and return the sink's
+    * contents as a frame. The sink registers a temp view on the stream's
+    * session; the resolved frame keeps the sink, so the view is dropped
+    * before returning and a replay leaves no view behind. */
+  private[graft] def drainToFrame(s: SparkSession, stream: DataFrame,
       name: String, mode: String): DataFrame = {
-    val scoped = replaySession(s, Paths.get(dir, "events.parquet"))
-    drain(s, name, build(scoped).writeStream.format("memory").queryName(name).outputMode(mode))
-    scoped.table(name)
+    drain(s, name, stream.writeStream.format("memory").queryName(name).outputMode(mode))
+    val out = s.table(name)
+    s.catalog.dropTempView(name)
+    out
   }
 
   val queries: Map[String, QFn] = Map(
@@ -277,7 +236,7 @@ object Streams extends graft.Bank {
     // WINDOW-grain frame (|windows|·|types| rows — the rank window is
     // partitioned by window start, never global, never the fact).
     "stream_topk" -> ((s, dir) => {
-      val hourly = runToTable(s, dir, s2 => eventsStream(s2, dir)
+      val hourly = drainToFrame(s, eventsStream(s, dir)
         .groupBy(window(col("ts"), "1 hour"), col("event_type"))
         .agg(count(lit(1)).as("n")),
         "mem_topk", "complete")
@@ -293,7 +252,7 @@ object Streams extends graft.Bank {
     }),
 
     "stream_tumbling" -> ((s, dir) => {
-      runToTable(s, dir, s2 => eventsStream(s2, dir)
+      drainToFrame(s, eventsStream(s, dir)
         .groupBy(window(col("ts"), "5 minutes"), col("event_type"))
         .agg(count(lit(1)).as("n"), dsum(col("value")).as("v")),
         "mem_tumbling", "complete")
@@ -312,7 +271,7 @@ object Streams extends graft.Bank {
     // the (window × ≤50 bins) grain, integer-exact (2·cum ≥ n and
     // 20·cum ≥ 19·n avoid float thresholds).
     "stream_hist_quantile" -> ((s, dir) => {
-      val binned = runToTable(s, dir, s2 => eventsStream(s2, dir)
+      val binned = drainToFrame(s, eventsStream(s, dir)
         .withColumn("bin", least(lit(49L), floor(col("value") / 10).cast("long")))
         .groupBy(window(col("ts"), "1 hour"), col("bin"))
         .agg(count(lit(1)).as("n")),
@@ -346,7 +305,7 @@ object Streams extends graft.Bank {
     "stream_windowed_pivot" -> ((s, dir) => {
       val perType = EventTypes.map(et =>
         sum(when(col("event_type") === et, 1L).otherwise(0L)).as(s"n_$et"))
-      runToTable(s, dir, s2 => eventsStream(s2, dir)
+      drainToFrame(s, eventsStream(s, dir)
         .groupBy(window(col("ts"), "1 hour"))
         .agg(perType.head, perType.tail :+ count(lit(1)).as("n_total"): _*),
         "mem_wpivot", "complete")
@@ -365,7 +324,7 @@ object Streams extends graft.Bank {
     // as one mirrored double tree, |z| > 2 flags. nullif guards a
     // constant series (sd = 0 → NULL z, no alert).
     "stream_rate_alert" -> ((s, dir) => {
-      val hourly = runToTable(s, dir, s2 => eventsStream(s2, dir)
+      val hourly = drainToFrame(s, eventsStream(s, dir)
         .groupBy(window(col("ts"), "1 hour"), col("event_type"))
         .agg(count(lit(1)).as("n")),
         "mem_rate_alert", "complete")
@@ -390,7 +349,7 @@ object Streams extends graft.Bank {
     }),
 
     "stream_sliding" -> ((s, dir) => {
-      runToTable(s, dir, s2 => eventsStream(s2, dir)
+      drainToFrame(s, eventsStream(s, dir)
         .groupBy(window(col("ts"), "10 minutes", "5 minutes"), col("event_type"))
         .agg(count(lit(1)).as("n"), dsum(col("value")).as("v")),
         "mem_sliding", "complete")
@@ -400,7 +359,7 @@ object Streams extends graft.Bank {
     }),
 
     "stream_session" -> ((s, dir) => {
-      runToTable(s, dir, s2 => eventsStream(s2, dir)
+      drainToFrame(s, eventsStream(s, dir)
         .groupBy(session_window(col("ts"), "30 minutes"), col("user_id"))
         .agg(count(lit(1)).as("n_events")),
         "mem_session", "complete")
@@ -412,7 +371,7 @@ object Streams extends graft.Bank {
     }),
 
     "stream_watermark" -> ((s, dir) => {
-      runToTable(s, dir, s2 => eventsStream(s2, dir)
+      drainToFrame(s, eventsStream(s, dir)
         .withWatermark("ts", "10 minutes")
         .groupBy(window(col("ts"), "5 minutes"), col("event_type"))
         .agg(count(lit(1)).as("n")),
@@ -423,7 +382,7 @@ object Streams extends graft.Bank {
     }),
 
     "stream_dedup" -> ((s, dir) => {
-      runToTable(s, dir, s2 => eventsStream(s2, dir)
+      drainToFrame(s, eventsStream(s, dir)
         .withWatermark("ts", "10 minutes")
         .dropDuplicates("event_id")
         .select(col("event_id"), col("event_type")),
@@ -446,7 +405,7 @@ object Streams extends graft.Bank {
     // under the watermark, so a generator change that adds later data
     // trips a test instead of a silent oracle drift.
     "stream_distinct_users" -> ((s, dir) => {
-      runToTable(s, dir, s2 => eventsStream(s2, dir)
+      drainToFrame(s, eventsStream(s, dir)
         .withWatermark("ts", "10 minutes")
         .select(window(col("ts"), "5 minutes").as("w"),
           col("event_type"), col("user_id"))
@@ -463,10 +422,10 @@ object Streams extends graft.Bank {
     // dimension (the connector pattern: incoming feed ⋈ reference data).
     // The static side is broadcast into every micro-batch.
     "stream_static_join" -> ((s, dir) => {
-      runToTable(s, dir, { s2 =>
-        val dim = t(s2, dir, "customer")
+      drainToFrame(s, {
+        val dim = t(s, dir, "customer")
           .select(col("c_custkey"), col("c_mktsegment"))
-        eventsStream(s2, dir)
+        eventsStream(s, dir)
           .join(broadcast(dim), col("user_id") === col("c_custkey"), "inner")
           .groupBy(col("c_mktsegment"), col("event_type"))
           .agg(count(lit(1)).as("n"), dsum(col("value")).as("v"))
@@ -480,10 +439,10 @@ object Streams extends graft.Bank {
     // order-insensitive (count + strict max on (ts, event_id)), so no
     // in-batch sort is needed for determinism.
     "stream_custom_state" -> ((s, dir) => {
-      runToTable(s, dir, { s2 =>
-        import s2.implicits._
+      drainToFrame(s, {
+        import s.implicits._
         import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
-        val src = eventsStream(s2, dir)
+        val src = eventsStream(s, dir)
           .select(col("event_id"), col("user_id"), col("event_type"),
             unix_micros(col("ts")).as("ts_us"))
           .as[(Long, Long, String, Long)]
@@ -516,13 +475,13 @@ object Streams extends graft.Bank {
     // streams forever. State is hash-partitioned by user_id, the same
     // shuffle a batch join would use, so it scales like the batch twin.
     "stream_stream_join" -> ((s, dir) => {
-      runToTable(s, dir, { s2 =>
-        val clicks = eventsStream(s2, dir)
+      drainToFrame(s, {
+        val clicks = eventsStream(s, dir)
           .filter(col("event_type") === "click")
           .select(col("event_id").as("c_id"), col("user_id").as("c_user"),
             col("ts").as("c_ts"))
           .withWatermark("c_ts", "10 minutes")
-        val purchases = eventsStream(s2, dir)
+        val purchases = eventsStream(s, dir)
           .filter(col("event_type") === "purchase")
           .select(col("event_id").as("p_id"), col("user_id").as("p_user"),
             col("ts").as("p_ts"))

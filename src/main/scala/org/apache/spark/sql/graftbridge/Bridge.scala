@@ -24,8 +24,10 @@ object Bridge {
 
   /** Clone of a session: shared SparkContext + shared state, but isolated
     * SQLConf/temp views copied from the parent — the per-query conf scope
-    * (`private[sql]` in Spark 4; used to scope streaming shuffle width
-    * without mutating the caller's session). */
+    * (`private[sql]` in Spark 4; used where a query needs plan-shaping
+    * confs, such as AQE off or a broadcast gate, without mutating the
+    * caller's session). A stream must not be started on one: its progress
+    * would reach the clone's listeners, not the caller's. */
   def cloneSession(spark: org.apache.spark.sql.SparkSession): org.apache.spark.sql.SparkSession =
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].cloneSession()
 }

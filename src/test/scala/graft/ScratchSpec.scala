@@ -108,10 +108,9 @@ class ScratchSpec extends SparkSuite {
         java.nio.file.StandardCopyOption.REPLACE_EXISTING)
     }
     def drain(name: String): Seq[(Long, Long)] = {
-      streaming.Streams.drain(spark, name, streaming.Streams.eventsStream(spark, sfDir.toString)
-        .select(col("event_id"), unix_micros(col("ts")).as("us"))
-        .writeStream.format("memory").queryName(name).outputMode("append"))
-      spark.table(name).orderBy("event_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
+      streaming.Streams.drainToFrame(spark, streaming.Streams.eventsStream(spark, sfDir.toString)
+        .select(col("event_id"), unix_micros(col("ts")).as("us")), name, "append")
+        .orderBy("event_id").collect().map(r => (r.getLong(0), r.getLong(1))).toSeq
     }
     val want = (0L until 5L).map(i => (i, 1700000000000000L + i * 1000000L))
     write(timestamp_micros(col("us")))

@@ -773,6 +773,47 @@ class StreamingSpec extends SparkSuite {
     assert(rocks === default)
   }
 
+  test("every stream_* replay reports its progress to the caller's session") {
+    // a replay started on a clone reports to the clone's listeners only,
+    // so a caller (Bench, perfbench's trace) would see none of its
+    // micro-batches. QueryStartedEvent reaches local listeners
+    // synchronously; progress arrives on the listener bus, hence eventually.
+    import org.apache.spark.sql.streaming.StreamingQueryListener
+    import org.scalatest.concurrent.Eventually._
+    import org.scalatest.time.{Seconds, Span}
+    import scala.jdk.CollectionConverters._
+    val started = new java.util.concurrent.ConcurrentHashMap[java.util.UUID, String]()
+    val progressed = java.util.concurrent.ConcurrentHashMap.newKeySet[java.util.UUID]()
+    val listener = new StreamingQueryListener {
+      override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit =
+        started.put(e.runId, Option(e.name).getOrElse(""))
+      override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit =
+        progressed.add(e.progress.runId)
+      override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
+    }
+    val width = spark.conf.get("spark.sql.shuffle.partitions")
+    val block = SparkEntry.queries.keys.filter(_.startsWith("stream_")).toSeq.sorted
+    assert(block.size >= 16, s"streaming block shrank? $block")
+    spark.streams.addListener(listener)
+    try {
+      val runIds = block.map { name =>
+        val before = started.keySet.asScala.toSet
+        q(name).collect()
+        name -> (started.keySet.asScala.toSet -- before)
+      }
+      eventually(timeout(Span(30, Seconds))) {
+        val blind = runIds.collect { case (n, ids) if !ids.exists(progressed.contains) => n }
+        assert(blind.isEmpty, s"no progress reached the caller's session from: $blind")
+      }
+    } finally spark.streams.removeListener(listener)
+    // a memory sink registers a temp view named after its query
+    val sinks = started.values.asScala.filter(_.nonEmpty).toSet
+    val views = spark.catalog.listTables().collect()
+      .filter(t => t.isTemporary && sinks(t.name)).map(_.name)
+    assert(views.isEmpty, s"replays left memory-sink views: ${views.mkString(", ")}")
+    assert(spark.conf.get("spark.sql.shuffle.partitions") === width)
+  }
+
   test("the FULL streaming block matches under the RocksDB state store") {
     // provider parity for EVERY registered stream_* query (VERDICT r14
     // item 5 — parity covered 4 members through r14; the sfscale1
@@ -780,26 +821,31 @@ class StreamingSpec extends SparkSuite {
     // store keeps keyed state on the executor heap; RocksDB spills to
     // local SST files and is the production answer at 100 TB keyed-state
     // scale — so the WHOLE block must be provider-agnostic: identical
-    // results under both stores. Runs at SPARK_GRAFT_TEST_SF_DIR, so the
-    // sfscale1 replay exercises it at 10x event density for free.
+    // results under both stores. The replays run at their session's
+    // shuffle width, so the block must also give the same results at
+    // widths 1 and 3 as at the default. Runs at SPARK_GRAFT_TEST_SF_DIR,
+    // so the sfscale1 replay exercises it at 10x event density for free.
     val rocks =
       "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-    def run(name: String, provider: Option[String]): Seq[String] = {
+    def run(name: String, confs: (String, String)*): Seq[String] = {
       val scoped = org.apache.spark.sql.graftbridge.Bridge.cloneSession(spark)
-      provider.foreach(
-        scoped.conf.set("spark.sql.streaming.stateStore.providerClass", _))
+      confs.foreach { case (k, v) => scoped.conf.set(k, v) }
       SparkEntry.queries(name)(scoped, sf).collect().map(_.toString).toSeq
     }
+    val variants = Seq(
+      "the RocksDB provider" -> ("spark.sql.streaming.stateStore.providerClass" -> rocks),
+      "shuffle width 1" -> ("spark.sql.shuffle.partitions" -> "1"),
+      "shuffle width 3" -> ("spark.sql.shuffle.partitions" -> "3"))
     val block = SparkEntry.queries.keys.filter(_.startsWith("stream_")).toSeq.sorted
     assert(block.size >= 14, s"streaming block shrank? $block")
     val failures = block.flatMap { name =>
       try {
-        val r = run(name, Some(rocks))
-        val d = run(name, None)
-        if (r.isEmpty) Some(s"$name: empty result under RocksDB")
-        else if (r != d) Some(s"$name: provider changed the results")
-        else None
-      } catch { case e: Throwable => Some(s"$name: ${e.getMessage}") }
+        val d = run(name)
+        if (d.isEmpty) Seq(s"$name: empty result")
+        else variants.collect {
+          case (label, conf) if run(name, conf) != d => s"$name: $label changed the results"
+        }
+      } catch { case e: Throwable => Seq(s"$name: ${e.getMessage}") }
     }
     assert(failures.isEmpty, failures.mkString("\n"))
   }
