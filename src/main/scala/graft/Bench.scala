@@ -19,8 +19,7 @@ object Bench {
     // SPARK_GRAFT_CPUS to pin a smaller width deliberately.
     // SPARK_GRAFT_CONF=spark.sql.streaming.stateStore.providerClass=... times
     // the streaming family under another state store (e.g. RocksDB);
-    // session clones inherit the conf, so every stream_* scoped session
-    // follows.
+    // every stream_* replay runs on this session, so each one follows.
     val spark = GraftSession.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     // one untimed no-op job first: the JVM and session cold start (first

@@ -29,7 +29,10 @@ object GraftSession {
   /** `local[cpus]` with one shuffle partition per core, UTC session time,
     * no UI and the [[Tuning]] defaults; then every `k=v` entry of
     * `SPARK_GRAFT_CONF=k=v;k=v` (e.g. the RocksDB state-store provider,
-    * or `spark.graft.*` knobs for an A/B), which overrides all of these. */
+    * or a [[Knobs]] capacity lever for an A/B), which overrides all of
+    * these. No `spark.graft.*` setting can change a result: a value that
+    * changes a published result is a constant next to its oracle, never
+    * a conf. */
   def builder(cpus: Int = defaultCpus): SparkSession.Builder = {
     val b = Tuning.tuned(SparkSession.builder()
       .master(s"local[$cpus]")

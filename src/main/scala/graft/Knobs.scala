@@ -2,32 +2,19 @@ package graft
 
 import org.apache.spark.sql.SparkSession
 
-/** Central registry of SCALE PARAMETERS — every compiled constant that
-  * must grow (or shrink) with data volume, each overridable at runtime
-  * via `spark.graft.*` conf so a 100× deployment tunes it without
-  * recompiling (VERDICT r13 item 3). SURVEY.md §6.7 carries the table;
-  * KnobsSpec asserts every entry here resolves its conf override.
+/** Every `spark.graft.*` setting, and the only module that reads one.
+  * SURVEY.md §6.7 carries the table; KnobsSpec asserts every entry
+  * resolves its conf override and that none changes a result.
   *
-  * Three knob classes, with different override semantics:
+  * Each knob in [[all]] is a capacity lever that must grow (or shrink)
+  * with data volume: it changes WHERE work happens (broadcast vs shuffle,
+  * bucket fan-out, target partitioning), never what is computed, so a
+  * 100× deployment tunes it freely without recompiling (VERDICT r13
+  * item 3). A value that changes a published result (a round bound, a
+  * sketch occupancy) is a constant next to its oracle, never a conf.
   *
-  *  - '''capacity knobs''' (broadcast gates, partition counts, banding
-  *    fan-out with a recall guarantee): change WHERE work happens
-  *    (broadcast vs shuffle, bucket fan-out), never what is computed.
-  *    Safe to tune freely.
-  *  - '''capacity-result knobs''' (LSH/MinHash/SimHash target
-  *    occupancies): still capacity levers — they size sketch fan-out to
-  *    the corpus — but the derived bucketing IS part of the published
-  *    candidate sets (ADVICE r14), so overriding one changes results
-  *    by design. The DuckDB oracles and fixture pins replay the
-  *    compiled default; retuning mid-session also requires
-  *    `ArtifactCache.evictAllCaches()` only where a cache does NOT fold
-  *    the resolved value into its key (the knn-graph cache does).
-  *  - '''semantic round bounds''' (peel/BFS/Lloyd rounds): the operator
-  *    is DEFINED as "N bounded rounds" and the DuckDB oracles unroll
-  *    exactly the compiled default — overriding one changes the
-  *    published result by design (more Lloyd rounds = a different
-  *    clustering). Tune in deployments; leave at default under the
-  *    correctness harness, which replays defaults.
+  * Two switches sit outside [[all]]: [[checkpointDir]] (where round pins
+  * go) and [[forceCollapse]] (a parity hook); neither changes a result.
   *
   * Accessors read the session conf on EVERY call, so a long-lived
   * driver can retune between corpora without rebuilding sessions.
@@ -38,60 +25,6 @@ object Knobs {
     s.conf.getOption(key).map(_.toLong).getOrElse(dflt)
   private def int(s: SparkSession, key: String, dflt: Int): Int =
     s.conf.getOption(key).map(_.toInt).getOrElse(dflt)
-
-  // ---- capacity-result knobs (oracles/pins replay the defaults) ------
-
-  /** Target mean vectors-per-bucket for the shared random-hyperplane LSH
-    * (knn graph, range pairs, lsh_ann): plane count p is the smallest in
-    * [8, 30] with occupancy·2^p ≥ |corpus|, so bucket fan-out grows with
-    * data and the within-bucket candidate join stays ~linear (VERDICT
-    * r13: fixed 8 planes → 256 buckets was quadratic at 10×). Default 8
-    * reproduces the historical buckets at the oracle scales (≤2k
-    * vectors → 8 planes) and SURVEY §6.5b's prescribed 12 planes at
-    * sf~1's 20k. The DuckDB oracles recompute the same rule from
-    * count(*), so the override is mirrored there ONLY at the default —
-    * see class doc (capacity-result: bucketing is part of the published
-    * candidate sets). */
-  val LshTargetOccupancyKey = "spark.graft.lsh.targetOccupancy"
-  val LshTargetOccupancyDefault = 8L
-  def lshTargetOccupancy(s: SparkSession): Long =
-    long(s, LshTargetOccupancyKey, LshTargetOccupancyDefault)
-
-  /** Background-collision budget for MinHash-LSH banding (text_dedup_near,
-    * dedup_minhash_recall): rows-per-band r is the smallest in [4, 16]
-    * with occupancy·4^r ≥ |distinct docs| (signature K = 4·r, always 4
-    * bands; since the r16 exact-dup collapse only one representative per
-    * distinct lower(text) is banded, so capacity tracks distinct content
-    * — a 100×-copied crawl keeps its base corpus's banding), so
-    * the expected unrelated-pair band-collision volume — which is what
-    * blows up candidate generation at corpus scale, a band agreeing by
-    * chance with probability ≈ J_bg^r — stays ~linear in the corpus
-    * instead of quadratic (VERDICT r14 item 2: the fixed 4×4 banding was
-    * the last LSH-planes-class constant). Default 256 reproduces r=4 /
-    * K=16 (bit-identical signatures and pins) through 65 536 docs — every
-    * fixture, bench and ×10 rehearsal scale — then grows r by 1 per 4×.
-    * More rows per band = a sharper S-curve (higher effective Jaccard
-    * threshold), which is the standard large-corpus MinHash trade; exact
-    * duplicates collide at ANY r (identical signatures). */
-  val MinhashTargetOccupancyKey = "spark.graft.minhash.targetOccupancy"
-  val MinhashTargetOccupancyDefault = 256L
-  def minhashTargetOccupancy(s: SparkSession): Long =
-    long(s, MinhashTargetOccupancyKey, MinhashTargetOccupancyDefault)
-
-  /** Target mean docs-per-bucket for dedup_simhash's published bucket
-    * column: bucket width is the smallest b ∈ [8, 16] bits with
-    * occupancy·2^b ≥ |docs| (top b bits of the 16-bit signature), capped
-    * at the signature width — past occupancy·2^16 docs the signature
-    * itself saturates and the operator's documented scale path is a wider
-    * signature, not finer buckets. Default 32 reproduces the historical
-    * 8-bit /256 bucket through 8 192 docs (all fixture and bench
-    * scales). */
-  val SimhashTargetOccupancyKey = "spark.graft.simhash.targetOccupancy"
-  val SimhashTargetOccupancyDefault = 32L
-  def simhashTargetOccupancy(s: SparkSession): Long =
-    long(s, SimhashTargetOccupancyKey, SimhashTargetOccupancyDefault)
-
-  // ---- capacity knobs -----------------------------------------------
 
   /** Per-band bucket-occupancy target for mm_phash's banded hamming join:
     * 4 bands × 16 bits while occupancy·2^15 ≥ |docs| (2^15 = the
@@ -133,51 +66,24 @@ object Knobs {
   def graphBroadcastMaxNodes(s: SparkSession): Long =
     long(s, GraphBroadcastMaxNodesKey, GraphBroadcastMaxNodesDefault)
 
-  // ---- semantic round bounds (oracles unroll the defaults) ----------
+  /** Every knob: (conf key, compiled default) — the machine-readable
+    * form of SURVEY §6.7, asserted by KnobsSpec. */
+  val all: Seq[(String, String)] = Seq(
+    PhashBandOccupancyKey -> PhashBandOccupancyDefault.toString,
+    UpsertPkBucketsKey -> UpsertPkBucketsDefault.toString,
+    ComponentsBroadcastMaxEdgesKey -> ComponentsBroadcastMaxEdgesDefault.toString,
+    GraphBroadcastMaxNodesKey -> GraphBroadcastMaxNodesDefault.toString)
 
-  /** Lloyd iterations for vec_kmeans / vec_spherical_kmeans. */
-  val KmeansRoundsKey = "spark.graft.kmeans.rounds"
-  val KmeansRoundsDefault = 3
-  def kmeansRounds(s: SparkSession): Int =
-    int(s, KmeansRoundsKey, KmeansRoundsDefault)
+  /** Reliable-checkpoint directory for round pins (see
+    * [[graft.operators.RoundPin]]); unset or empty keeps local checkpoints. */
+  val CheckpointDirKey = "spark.graft.checkpointDir"
+  def checkpointDir(s: SparkSession): Option[String] =
+    s.conf.getOption(CheckpointDirKey).filter(_.nonEmpty)
 
-  /** Degree-peel rounds for graph_kcore. */
-  val KcorePeelRoundsKey = "spark.graft.graph.kcorePeelRounds"
-  val KcorePeelRoundsDefault = 6
-  def kcorePeelRounds(s: SparkSession): Int =
-    int(s, KcorePeelRoundsKey, KcorePeelRoundsDefault)
-
-  /** Support-peel rounds for graph_ktruss. */
-  val TrussRoundsKey = "spark.graft.graph.trussRounds"
-  val TrussRoundsDefault = 6
-  def trussRounds(s: SparkSession): Int =
-    int(s, TrussRoundsKey, TrussRoundsDefault)
-
-  /** Synchronous label-propagation rounds for graph_label_prop. */
-  val LabelPropRoundsKey = "spark.graft.graph.labelPropRounds"
-  val LabelPropRoundsDefault = 4
-  def labelPropRounds(s: SparkSession): Int =
-    int(s, LabelPropRoundsKey, LabelPropRoundsDefault)
-
-  /** Frontier-expansion hops for graph_bfs_depth / graph_closeness. */
-  val BfsRoundsKey = "spark.graft.graph.bfsRounds"
-  val BfsRoundsDefault = 4
-  def bfsRounds(s: SparkSession): Int =
-    int(s, BfsRoundsKey, BfsRoundsDefault)
-
-  /** Every knob: (conf key, compiled default, capacity|rounds) — the
-    * machine-readable form of SURVEY §6.7, asserted by KnobsSpec. */
-  val all: Seq[(String, String, String)] = Seq(
-    (LshTargetOccupancyKey, LshTargetOccupancyDefault.toString, "capacity-result"),
-    (MinhashTargetOccupancyKey, MinhashTargetOccupancyDefault.toString, "capacity-result"),
-    (SimhashTargetOccupancyKey, SimhashTargetOccupancyDefault.toString, "capacity-result"),
-    (PhashBandOccupancyKey, PhashBandOccupancyDefault.toString, "capacity"),
-    (UpsertPkBucketsKey, UpsertPkBucketsDefault.toString, "capacity"),
-    (ComponentsBroadcastMaxEdgesKey, ComponentsBroadcastMaxEdgesDefault.toString, "capacity"),
-    (GraphBroadcastMaxNodesKey, GraphBroadcastMaxNodesDefault.toString, "capacity"),
-    (KmeansRoundsKey, KmeansRoundsDefault.toString, "rounds"),
-    (KcorePeelRoundsKey, KcorePeelRoundsDefault.toString, "rounds"),
-    (TrussRoundsKey, TrussRoundsDefault.toString, "rounds"),
-    (LabelPropRoundsKey, LabelPropRoundsDefault.toString, "rounds"),
-    (BfsRoundsKey, BfsRoundsDefault.toString, "rounds"))
+  /** `true` runs the exact-dup collapse branch even on a duplicate-free
+    * corpus — the test/parity hook; the branch is result-identical by
+    * construction ([[graft.Tables.docCollapseGate]]). */
+  val ForceCollapseKey = "spark.graft.dedup.forceCollapse"
+  def forceCollapse(s: SparkSession): Boolean =
+    s.conf.getOption(ForceCollapseKey).contains("true")
 }

@@ -42,7 +42,7 @@ object ScaleProbe {
     import graft.operators.MinHashDedup
     val nDocs = Tables.docCount(s, dir)
     val nDistinct = Tables.distinctDocCount(s, dir)
-    val k = 4 * MinHashDedup.bandRows(nDistinct, Knobs.minhashTargetOccupancy(s))
+    val k = 4 * MinHashDedup.bandRows(nDistinct)
     val keyed = Tables.t(s, dir, "documents")
       .select(col("doc_id"), lower(col("text")).as("lt"))
       .withColumn("rep", min(col("doc_id")).over(

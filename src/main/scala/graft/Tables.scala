@@ -125,7 +125,7 @@ object Tables {
     * documents corpus: duplicates exist (distinct lower(text) < rows —
     * which also implies distinct payload bytes < rows, so the same gate
     * serves mm_phash's digest collapse), or
-    * `spark.graft.dedup.forceCollapse=true` (the test/parity override).
+    * [[Knobs.forceCollapse]] (the test/parity override).
     * Gate OFF takes the pre-collapse direct formulation — bit-identical
     * output (every cluster is a singleton), none of the collapse's
     * window/persist/re-expansion cost (optimization r16); both counts
@@ -133,7 +133,7 @@ object Tables {
     * time. The broadcast-gate idiom: a capacity branch, never a result
     * change. */
   def docCollapseGate(spark: SparkSession, sfDir: String): Boolean =
-    spark.conf.getOption("spark.graft.dedup.forceCollapse").contains("true") ||
+    Knobs.forceCollapse(spark) ||
       distinctDocCount(spark, sfDir) < docCount(spark, sfDir)
 
   /** Cache tag for fixtures derived from a source directory: a sha-256

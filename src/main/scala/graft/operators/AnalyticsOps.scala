@@ -371,8 +371,6 @@ object AnalyticsOps extends graft.Bank {
          FROM f ORDER BY seg"""
   }
 
-  private[graft] val PagerankBroadcastMaxNodes = graft.Knobs.GraphBroadcastMaxNodesDefault
-
   /** Per-user distinct-item cap for recs_item_cf. The co-occurrence
     * self-join fans out quadratically in the heaviest basket, so a single
     * hyper-active user (a bot, a shared account) can dominate the whole
@@ -391,7 +389,7 @@ object AnalyticsOps extends graft.Bank {
     * 3-core fixpoint well inside the bound. Real peeling converges in
     * O(log n) effective rounds on power-law graphs — at 100 TB the same
     * loop runs with a convergence check (count of removed nodes = 0). */
-  private[graft] val KcorePeelRounds = graft.Knobs.KcorePeelRoundsDefault
+  private[graft] val KcorePeelRounds = 6
 
   /** Steps per walk for graph_walk_corpus — bounded-round like
     * KcorePeelRounds; the DuckDB twin unrolls the same steps. */
@@ -403,7 +401,7 @@ object AnalyticsOps extends graft.Bank {
     * and the DuckDB twin unrolls the same rounds, so the gate is exact
     * whether or not a given scale has converged (sf0.01 converges at 7,
     * sf0.1 at 3, the tiny fixture immediately). */
-  private[graft] val TrussRounds = graft.Knobs.TrussRoundsDefault
+  private[graft] val TrussRounds = 6
 
   /** Synchronous rounds for graph_label_prop — bounded-round semantics
     * like KcorePeelRounds/BfsRounds so the DuckDB twin unrolls the same
@@ -411,7 +409,7 @@ object AnalyticsOps extends graft.Bank {
     * fixture graph; real LPA runs to label-change convergence in O(log n)
     * effective rounds on power-law graphs — same loop, convergence check
     * instead of a fixed bound. */
-  private[graft] val LabelPropRounds = graft.Knobs.LabelPropRoundsDefault
+  private[graft] val LabelPropRounds = 4
 
   /** One kcore peel: node-sized degree agg off the (checkpointed) edge
     * frame, degree-≥3 survivors applied back as two semi-joins. Under the
@@ -472,7 +470,7 @@ object AnalyticsOps extends graft.Bank {
       val bcastLabels = nNodes <= graft.Knobs.graphBroadcastMaxNodes(s)
       var labels = nodes.select(col("node"), col("node").as("lbl"))
         .transform(RoundPin.pin)
-      for (_ <- 1 to graft.Knobs.labelPropRounds(s)) {
+      for (_ <- 1 to LabelPropRounds) {
         labels = lpaRound(adj, labels, bcastLabels).transform(RoundPin.pin)
       }
       Pinned(labels)
@@ -541,7 +539,7 @@ object AnalyticsOps extends graft.Bank {
     val bcastNbr = nNodes <= graft.Knobs.graphBroadcastMaxNodes(s)
     var prev = if (earlyExit) e.count() else -1L
     var stable = false
-    for (_ <- 1 to graft.Knobs.trussRounds(s) if !stable) {
+    for (_ <- 1 to TrussRounds if !stable) {
       e = trussRound(e, bcastNbr).transform(RoundPin.pin)
       if (earlyExit) {
         val c = e.count()
@@ -552,17 +550,19 @@ object AnalyticsOps extends graft.Bank {
     e
   }
 
-  /** One BFS frontier expansion: frontier ⋈ adjacency, new nodes via
-    * LEFT ANTI against the visited set, tagged with the hop distance.
-    * Under the gate the (node-domain-bounded) frontier broadcasts; above
-    * it the join runs hash-partitioned — the standard large-graph BFS
-    * shape. Factored out so PlanSpec pins both shapes. */
+  /** One multi-seed BFS frontier expansion: frontier (seed, node) ⋈
+    * adjacency, new (seed, node) pairs via LEFT ANTI against the visited
+    * set, tagged with the hop distance. Every join is keyed by seed, so
+    * each seed's rows are exactly its own single-source BFS. Under the
+    * gate the (node-domain-bounded) frontier broadcasts; above it the
+    * join runs hash-partitioned — the standard large-graph BFS shape.
+    * Factored out so PlanSpec pins both shapes. */
   private[graft] def bfsExpand(adj: DataFrame, frontier: DataFrame,
       visited: DataFrame, dist: Int, bcastFrontier: Boolean): DataFrame =
     adj.join(if (bcastFrontier) broadcast(frontier) else frontier,
         col("src") === col("node"))
-      .select(col("dst").as("node")).distinct()
-      .join(visited, Seq("node"), "left_anti")
+      .select(col("seed"), col("dst").as("node")).distinct()
+      .join(visited, Seq("seed", "node"), "left_anti")
       .withColumn("dist", lit(dist))
 
   /** Frontier-expansion rounds for graph_bfs_hops — bounded-round
@@ -571,7 +571,7 @@ object AnalyticsOps extends graft.Bank {
     * BfsRounds hops of the hub"), NOT a full component sweep — at
     * sf0.01 the frontier is still alive at round 4, exactly the
     * ego-network use case. The DuckDB twin unrolls the same rounds. */
-  private[graft] val BfsRounds = graft.Knobs.BfsRoundsDefault
+  private[graft] val BfsRounds = 4
 
   /** One PageRank round. With `broadcastRanks` (node count under the gate)
     * the rank table is BROADCAST onto the cached edge frame — no edge
@@ -694,9 +694,11 @@ object AnalyticsOps extends graft.Bank {
     }).on(s)
 
   /** Memoized 3-landmark BFS distance frame (seed, node, dist) per
-    * (JVM, dir) — graph_closeness_sample and graph_harmonic_centrality
-    * fold the same visited set; the BfsRounds-round expansion must run
-    * once, not per query (the r10 per-query-artifact-rebuild lesson). */
+    * (JVM, dir), seeds the top-3 degree nodes in (degree desc, id) order —
+    * graph_bfs_hops (the first seed, the hub), graph_closeness_sample,
+    * graph_eccentricity_sample and graph_harmonic_centrality fold the same
+    * visited set; the BfsRounds-round expansion must run once, not per
+    * query (the r10 per-query-artifact-rebuild lesson). */
   private val bfsCache =
     ArtifactCache.frames[Pinned]("landmark BFS distances")(bfsVisited(_, _))
 
@@ -710,19 +712,28 @@ object AnalyticsOps extends graft.Bank {
       val deg = adj.groupBy(col("src")).agg(count(lit(1)).as("dg"))
       val seeds = deg.orderBy(col("dg").desc, col("src")).limit(3)
         .select(col("src").as("seed"), col("src").as("node"), lit(0).as("dist"))
+      // On a dense graph the frontier is near-catalog-sized after one hop,
+      // so its broadcast is SIZE-GATED on the node domain (same ceiling as
+      // pagerank/kcore): under it the expansion join broadcasts the
+      // frontier; above it adj shuffles on src per round — the standard
+      // large-graph BFS shape, no forced catalog-sized broadcast.
       val bcastFrontier = nNodes <= graft.Knobs.graphBroadcastMaxNodes(s)
       var visited = seeds.transform(RoundPin.pin)
       var frontier = visited.select(col("seed"), col("node"))
-      for (r <- 1 to graft.Knobs.bfsRounds(s)) {
-        val next = adj.join(
-            if (bcastFrontier) broadcast(frontier) else frontier,
-            col("src") === col("node"))
-          .select(col("seed"), col("dst").as("node")).distinct()
-          .join(visited, Seq("seed", "node"), "left_anti")
-          .withColumn("dist", lit(r))
+      // EMPTY-FRONTIER EARLY-EXIT (optimization r16): an empty frontier
+      // expands to an empty frontier forever, so every later round
+      // unions nothing — skipping them is bit-identical to the unrolled
+      // BfsRounds the oracles replay. The count is one cheap job over
+      // the just-checkpointed frontier blocks.
+      var dead = false
+      for (r <- 1 to BfsRounds if !dead) {
+        val next = bfsExpand(adj, frontier, visited, r, bcastFrontier)
           .transform(RoundPin.pin)
-        visited = visited.union(next).transform(RoundPin.pin)
-        frontier = next.select(col("seed"), col("node"))
+        dead = next.count() == 0
+        if (!dead) {
+          visited = visited.union(next).transform(RoundPin.pin)
+          frontier = next.select(col("seed"), col("node"))
+        }
       }
       Pinned(visited)
     }).on(s)
@@ -3434,7 +3445,7 @@ object AnalyticsOps extends graft.Bank {
       val (und, _, nNodes) = coPurchaseGraph(s, dir)
       // Early peels keep a survivor set that is near node-domain-sized, so
       // the semi-join broadcast is SIZE-GATED exactly like pagerank's rank
-      // frame: under PagerankBroadcastMaxNodes `keep` broadcasts (edges
+      // frame: under the graph.broadcastMaxNodes gate `keep` broadcasts (edges
       // never shuffle per round); above it the rounds fall back to plain
       // shuffle semi-joins — edge-linear per round, no driver/executor OOM
       // from forcing a catalog-sized broadcast. The count is the pinned
@@ -3448,7 +3459,7 @@ object AnalyticsOps extends graft.Bank {
       // bit-identical to the unrolled KcorePeelRounds the oracle replays.
       var prev = edges.count()
       var stable = false
-      for (_ <- 1 to graft.Knobs.kcorePeelRounds(s) if !stable) {
+      for (_ <- 1 to KcorePeelRounds if !stable) {
         edges = kcorePeelRound(edges, bcastKeep).transform(RoundPin.pin)
         val c = edges.count()
         stable = c == prev
@@ -3714,41 +3725,18 @@ object AnalyticsOps extends graft.Bank {
     // graph_kcore/pagerank) so the DuckDB twin unrolls the rounds as
     // MATERIALIZED CTEs; nodes beyond BfsRounds hops are by definition
     // outside the profile (the frontier may legitimately still be alive
-    // at the bound). Each round: frontier ⋈ adjacency (frontier
-    // broadcast — node-sized), new nodes via LEFT ANTI vs the visited
-    // set, result checkpointed; per-round cost is edge-linear.
+    // at the bound). The hub is the first of the landmark BFS's seeds
+    // and every join there is keyed by seed, so its rows of the memoized
+    // bfsVisited frame ARE this BFS. The graph has no self-loops, so a
+    // seed's dist-1 row count is its degree, and the seeds' (degree desc,
+    // id) order over those counts picks the hub out of the three.
     "graph_bfs_hops" -> ((s, dir) => {
-      val (undRaw, _, nNodes) = coPurchaseGraph(s, dir)
-      val und = undRaw.select(col("p1"), col("p2"))
-      val adj = und.select(col("p1").as("src"), col("p2").as("dst"))
-        .union(und.select(col("p2").as("src"), col("p1").as("dst")))
-      val deg = adj.groupBy(col("src")).agg(count(lit(1)).as("dg"))
-      val hub = deg.orderBy(col("dg").desc, col("src")).limit(1)
-        .select(col("src").as("node"), lit(0).as("dist"))
-      // On a dense graph the frontier is near-catalog-sized after one hop,
-      // so its broadcast is SIZE-GATED on the node domain (same ceiling as
-      // pagerank/kcore): under it the expansion join broadcasts the
-      // frontier; above it adj shuffles on src per round — the standard
-      // large-graph BFS shape, no forced catalog-sized broadcast.
-      val bcastFrontier = nNodes <= graft.Knobs.graphBroadcastMaxNodes(s)
-      var visited = hub.transform(RoundPin.pin)
-      var frontier = visited
-      // EMPTY-FRONTIER EARLY-EXIT (optimization r16): an empty frontier
-      // expands to an empty frontier forever, so every later round
-      // unions nothing — skipping them is bit-identical to the unrolled
-      // BfsRounds the oracle replays. The count is one cheap job over
-      // the just-checkpointed frontier blocks.
-      var dead = false
-      for (r <- 1 to graft.Knobs.bfsRounds(s) if !dead) {
-        val next = bfsExpand(adj, frontier, visited, r, bcastFrontier)
-          .transform(RoundPin.pin)
-        dead = next.count() == 0
-        if (!dead) {
-          visited = visited.union(next).transform(RoundPin.pin)
-          frontier = next
-        }
-      }
-      visited.groupBy(col("dist")).agg(count(lit(1)).as("n_nodes"))
+      val visited = bfsVisited(s, dir)
+      val hub = visited.filter(col("dist") === 1)
+        .groupBy(col("seed")).agg(count(lit(1)).as("dg"))
+        .orderBy(col("dg").desc, col("seed")).limit(1).select(col("seed"))
+      visited.join(hub, "seed")
+        .groupBy(col("dist")).agg(count(lit(1)).as("n_nodes"))
         .orderBy(col("dist"))
     }),
 
@@ -3758,10 +3746,11 @@ object AnalyticsOps extends graft.Bank {
     // top-3 degree seeds simultaneously (the standard sampled
     // approximation — exact closeness is all-pairs-BFS, infeasible at
     // scale; landmark sampling is what production graph stacks run).
-    // One multi-seed frontier keyed (seed, node) rides the SAME bounded
-    // expansion loop as bfs_hops — per-round cost is edge-linear × the
-    // seed count, frontier broadcast under the node gate, every level
-    // checkpointed. DuckDB twin unrolls the same rounds seed-keyed.
+    // One multi-seed frontier keyed (seed, node) rides the one bounded
+    // expansion loop (bfsVisited, shared with bfs_hops) — per-round cost
+    // is edge-linear × the seed count, frontier broadcast under the node
+    // gate, every level checkpointed. DuckDB twin unrolls the same rounds
+    // seed-keyed.
     "graph_closeness_sample" -> ((s, dir) => {
       bfsVisited(s, dir).groupBy(col("seed"))
         .agg((count(lit(1)) - 1).as("n_reached"), sum(col("dist")).as("sum_dist"))

@@ -43,11 +43,6 @@ private[graft] object Components {
   private[graft] def loopPartitions(nEdges: Long): Int =
     math.min(math.max(1L, nEdges / 65536L), 16384L).toInt
 
-  /** Edge-count gate for the loop's per-round broadcast hints: a pair
-    * frame past this is no longer a safe repeated broadcast (same
-    * reasoning as AnalyticsOps.PagerankBroadcastMaxNodes). */
-  private[graft] val BroadcastMaxEdges = graft.Knobs.ComponentsBroadcastMaxEdgesDefault
-
   /** `pairs`: columns `d1`,`d2` — one row per UNDIRECTED edge
     * (symmetrized internally). `nodes` (one column `id`), when given,
     * fixes the label domain — pass it to include singletons in the
@@ -97,21 +92,15 @@ private[graft] object Components {
                     broadcastMaxEdges: Long = -1L): DataFrame = {
     val s = org.apache.spark.sql.graftbridge.Bridge.cloneSession(outer)
     s.conf.set("spark.sql.adaptive.enabled", "false")
-    // RoundPin's reliable-checkpoint conf applies to this fixpoint too:
-    // with spark.graft.checkpointDir set, each round's cached RDD also
-    // checkpoints reliably (cache serves the round's reads, the
-    // checkpoint survives executor loss — the cache+checkpoint combo, so
-    // the checkpoint write reads the cache instead of recomputing). The
-    // per-round action below materializes both.
-    val reliableDir = s.conf.getOption("spark.graft.checkpointDir")
-      .filter(_.nonEmpty)
-    reliableDir.foreach { dir =>
-      if (s.sparkContext.getCheckpointDir.isEmpty)
-        s.sparkContext.setCheckpointDir(dir)
-    }
+    // RoundPin's reliable-checkpoint setup applies to this fixpoint too:
+    // in reliable mode each round's cached RDD also checkpoints (cache
+    // serves the round's reads, the checkpoint survives executor loss —
+    // the cache+checkpoint combo, so the checkpoint write reads the cache
+    // instead of recomputing). The per-round action below materializes both.
+    val reliable = RoundPin.reliable(s)
     def pin(df: DataFrame): DataFrame = {
       val r = df.rdd.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      if (reliableDir.isDefined) r.checkpoint()
+      if (reliable) r.checkpoint()
       s.createDataFrame(r, df.schema)
     }
     val p = pin(pairs.select(col("d1"), col("d2")))

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Iteration-round pinning with a cluster-grade reliable option.
   *
@@ -21,9 +21,9 @@ import org.apache.spark.sql.DataFrame
   * the old inline localCheckpoint calls; a PlanSpec parity test runs one
   * full pagerank member both ways.
   *
-  * The SparkContext checkpoint dir is set once per JVM on first reliable
-  * pin (setCheckpointDir mints a UUID subdir per call — re-setting every
-  * round would scatter files across subdirs for nothing).
+  * The SparkContext checkpoint dir is set once per context on first
+  * reliable pin (setCheckpointDir mints a UUID subdir per call —
+  * re-setting every round would scatter files across subdirs for nothing).
   *
   * '''Disk-lifetime requirement for reliable mode''': Spark never deletes
   * reliable checkpoint files on its own — the iterative families pin
@@ -40,9 +40,14 @@ import org.apache.spark.sql.DataFrame
 object RoundPin {
   @volatile private var warnedCleaner = false
 
-  def pin(df: DataFrame): DataFrame = {
-    val s = df.sparkSession
-    s.conf.getOption("spark.graft.checkpointDir").filter(_.nonEmpty) match {
+  def pin(df: DataFrame): DataFrame =
+    if (reliable(df.sparkSession)) df.checkpoint(true) else df.localCheckpoint(true)
+
+  /** True when `s` pins reliably ([[graft.Knobs.checkpointDir]] set); the
+    * context's checkpoint dir is then set up, so a caller with its own pin
+    * shape (Components' cache + `rdd.checkpoint()`) can checkpoint too. */
+  private[graft] def reliable(s: SparkSession): Boolean =
+    graft.Knobs.checkpointDir(s) match {
       case Some(dir) =>
         val sc = s.sparkContext
         if (sc.getCheckpointDir.isEmpty) sc.setCheckpointDir(dir)
@@ -51,13 +56,12 @@ object RoundPin {
           warnedCleaner = true
           System.err.println(
             "WARN RoundPin: reliable checkpoints enabled " +
-              "(spark.graft.checkpointDir) without " +
+              s"(${graft.Knobs.CheckpointDirKey}) without " +
               "spark.cleaner.referenceTracking.cleanCheckpoints=true in the " +
               "submit-time conf — iterative-round checkpoint files will " +
               "accumulate unbounded under " + dir)
         }
-        df.checkpoint(true)
-      case None => df.localCheckpoint(true)
+        true
+      case None => false
     }
-  }
 }

@@ -351,7 +351,7 @@ object TextOps extends graft.Bank {
     // words that matter, recursively. The graph is VOCABULARY-bounded
     // (language-bounded, never corpus-grain), but the rank plan still
     // takes graph_pagerank's SIZE GATE rather than trusting that bound:
-    // under PagerankBroadcastMaxNodes the vocab-grain rank frame
+    // under the graph.broadcastMaxNodes gate the vocab-grain rank frame
     // broadcasts onto the cached edge frame; above it, the edges
     // co-partition on src ONCE and only ranks shuffle per round (the
     // forced-gate-off PlanSpec parity test exercises that path). Five

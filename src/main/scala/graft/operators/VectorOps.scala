@@ -91,17 +91,38 @@ object VectorOps extends graft.Bank {
            SELECT v, n, sim, row_number() OVER (PARTITION BY v ORDER BY sim DESC, n) AS rk
            FROM scored) WHERE rk <= 4"""
 
+  /** Target mean vectors-per-bucket for the shared random-hyperplane LSH
+    * (knn graph, range pairs, lsh_ann, the standing index). 8 reproduces
+    * the historical 8-plane buckets at the oracle scales (≤2k vectors)
+    * and SURVEY §6.5b's prescribed 12 planes at sf~1's 20k. The bucketing
+    * is part of the published candidate sets, so the Spark side and CTE
+    * `np` of every LSH oracle read this one value. */
+  private[graft] val LshTargetOccupancy = 8L
+
+  /** Scale-derived hyperplane count for the shared LSH: the smallest
+    * p ∈ [8, 30] with targetOcc·2^p ≥ n, so mean bucket occupancy stays
+    * ≤ targetOcc as the corpus grows and the within-bucket candidate
+    * join stays ~linear in n (VERDICT r13: a FIXED 8 planes → 256
+    * buckets made bucket occupancy — and hence the quadratic-in-bucket
+    * pair work — grow linearly with data: 0.3 s at sf0.1 → 8.4 s at
+    * 10×). Pure integer rule replayed verbatim by the DuckDB oracles
+    * from count(*) (CTE `np` in [[lshBucketsSql]]), so every
+    * plane-derived query stays hash-compared at ANY scale: 8 planes up
+    * to 2k vectors (all oracle fixtures), 12 at sf~1's 20k (SURVEY
+    * §6.5b's prescribed occupancy restore), 27 at a billion. */
+  private[graft] def lshPlaneCount(n: Long,
+      targetOcc: Long = LshTargetOccupancy): Int =
+    (8 to 30).find(p => (targetOcc << p) >= n).getOrElse(30)
+
   /** DuckDB regeneration of the ADAPTIVE bucketing: CTE `np` replays
     * [[lshPlaneCount]]'s integer rule from count(*) (so the oracle
-    * derives the same plane count at ANY corpus scale — the compiled
-    * default target occupancy is interpolated; a conf override of the
-    * knob is a deployment lever outside the oracle harness), and CTE `b`
+    * derives the same plane count at ANY corpus scale), and CTE `b`
     * is (vec_id, embedding, bucket), shared by the lsh_ann, range/cluster
     * pair, and k-NN-graph oracles. */
   private val lshBucketsSql: String =
     s"""np AS (
        SELECT coalesce(min(p), 30) AS planes FROM range(8, 31) tp(p)
-       WHERE (${graft.Knobs.LshTargetOccupancyDefault}::BIGINT << p)
+       WHERE ($LshTargetOccupancy::BIGINT << p)
              >= (SELECT count(*) FROM embeddings)),
      b AS (
        SELECT vec_id, embedding,
@@ -127,21 +148,6 @@ object VectorOps extends graft.Bank {
                 round(${cosSql("l.embedding", "r.embedding")}, 6) AS sim
          FROM b l JOIN b r ON l.bucket = r.bucket AND l.vec_id < r.vec_id)
        WHERE sim >= 0.3)"""
-
-  /** Scale-derived hyperplane count for the shared LSH: the smallest
-    * p ∈ [8, 30] with targetOcc·2^p ≥ n, so mean bucket occupancy stays
-    * ≤ targetOcc as the corpus grows and the within-bucket candidate
-    * join stays ~linear in n (VERDICT r13: a FIXED 8 planes → 256
-    * buckets made bucket occupancy — and hence the quadratic-in-bucket
-    * pair work — grow linearly with data: 0.3 s at sf0.1 → 8.4 s at
-    * 10×). Pure integer rule replayed verbatim by the DuckDB oracles
-    * from count(*) (CTE `np` in [[lshBucketsSql]]), so every
-    * plane-derived query stays hash-compared at ANY scale: 8 planes up
-    * to 2k vectors (all oracle fixtures), 12 at sf~1's 20k (SURVEY
-    * §6.5b's prescribed occupancy restore), 27 at a billion. */
-  private[graft] def lshPlaneCount(n: Long,
-      targetOcc: Long = graft.Knobs.LshTargetOccupancyDefault): Int =
-    (8 to 30).find(p => (targetOcc << p) >= n).getOrElse(30)
 
   /** The deterministic random-hyperplane matrix shared by every
     * LSH-seeded query (`vec_lsh_ann`, range/cluster pairs,
@@ -178,17 +184,16 @@ object VectorOps extends graft.Bank {
       embStore(s, dir).select(col("embedding")).distinct().count())
 
   /** True when the collapse machinery must run: the corpus carries exact-
-    * duplicate embeddings, or `spark.graft.dedup.forceCollapse=true`
+    * duplicate embeddings, or [[graft.Knobs.forceCollapse]]
     * (the test/parity override — production never needs it; the branch
     * is result-identical by construction, see [[lshRepRangePairs]]). */
   private[graft] def embCollapseGate(s: SparkSession, dir: String): Boolean =
-    s.conf.getOption("spark.graft.dedup.forceCollapse").contains("true") ||
+    graft.Knobs.forceCollapse(s) ||
       distinctEmbCount(s, dir) < embCount(s, dir)
 
-  /** The corpus-size-adaptive plane matrix for `dir` (conf-overridable
-    * target occupancy — graft.Knobs.lshTargetOccupancy). */
+  /** The corpus-size-adaptive plane matrix for `dir`. */
   private[graft] def lshPlanesFor(s: SparkSession, dir: String): Seq[Seq[Double]] =
-    lshPlanes(lshPlaneCount(embCount(s, dir), graft.Knobs.lshTargetOccupancy(s)))
+    lshPlanes(lshPlaneCount(embCount(s, dir)))
 
   /** All embedding pairs with cosine ≥ 0.3 whose LSH signatures share a
     * bucket (columns v1 < v2, sim) — the candidate generator for both
@@ -318,13 +323,7 @@ object VectorOps extends graft.Bank {
     ArtifactCache.frames[Pinned]("knn graph")(knnGraphFrame(_, _))
 
   private def knnGraphFrame(s: SparkSession, dir: String): DataFrame =
-    // key folds in the RESOLVED occupancy (ADVICE r14): buildKnnGraph
-    // depends on the conf-overridable plane count, and a dir-only key
-    // would keep serving the old-plane graph after a retune while the
-    // uncached lshRangePairs consumers switched immediately — the ANN
-    // family must stay internally consistent without a manual evict
-    knnGraphCache.getOrElseUpdate(s"$dir@occ${graft.Knobs.lshTargetOccupancy(s)}",
-      Pinned(buildKnnGraph(s, dir))).on(s)
+    knnGraphCache.getOrElseUpdate(dir, Pinned(buildKnnGraph(s, dir))).on(s)
 
   /** Standing LSH bucket index for the incremental-ingest tier
     * (`vec_index_incremental`; VERDICT r14 item 6 — dedup_incremental's
@@ -333,8 +332,7 @@ object VectorOps extends graft.Bank {
     * RESIDENT count. An index's plane count is its persisted layout (the
     * `_PK_BUCKETS` discipline): arrivals PROBE it with the index's own
     * planes — they never re-derive the plane count or rebuild the index.
-    * Pinned per (dir, occupancy) like the knn graph (the key folds in the
-    * resolved occupancy per ADVICE r14), so every ingest batch pays
+    * Pinned per dir like the knn graph, so every ingest batch pays
     * batch-sized bucket hashing plus bucket-local joins. At 100 TB this
     * is the standing ANN index a continuously-growing embedding store
     * maintains — new shards fold in by bucket append, not rebuild. */
@@ -342,10 +340,9 @@ object VectorOps extends graft.Bank {
     ArtifactCache.frames[(Int, Pinned)]("standing lsh index")(standingIndex(_, _))
 
   private def standingIndex(s: SparkSession, dir: String): (Int, DataFrame) = {
-    val occ = graft.Knobs.lshTargetOccupancy(s)
-    val (planes, idx) = standingIdxCache.getOrElseUpdate(s"$dir@occ$occ", {
+    val (planes, idx) = standingIdxCache.getOrElseUpdate(dir, {
       val standing = embStore(s, dir).filter(col("vec_id") % 16 =!= 7)
-      val p = lshPlaneCount(standing.count(), occ)
+      val p = lshPlaneCount(standing.count())
       (p, Pinned(standing.withColumn("bucket",
         graft.functions.LshBucket.lsh_bucket(col("embedding"), lshPlanes(p)))))
     })
@@ -1741,25 +1738,22 @@ object VectorOps extends graft.Bank {
         .orderBy(col("cluster"))
     }))
 
-  /** Lloyd rounds for vec_kmeans — bounded-round semantics like
-    * pagerank's 5 and kcore's 6 peels; the DuckDB twin unrolls the same
-    * rounds CTE for CTE. */
-  private[graft] val KmeansRounds = graft.Knobs.KmeansRoundsDefault
+  /** Lloyd rounds for vec_kmeans / vec_spherical_kmeans / vec_cluster_nmi
+    * — bounded-round semantics like pagerank's 5 and kcore's 6 peels (more
+    * Lloyd rounds = a different clustering); the DuckDB twins unroll the
+    * same rounds CTE for CTE. */
+  private[graft] val KmeansRounds = 3
 
   /** The bounded-Lloyd result (final assignment + final centroids) as a
     * pinned artifact shared by vec_kmeans and vec_cluster_nmi — both
     * consumed the same loop, each paying the 3-round build per query
-    * (~2.5 s in-sweep each at sf0.1); it builds once per (dir, rounds)
-    * and both read the pinned frames. The key folds in the RESOLVED
-    * rounds knob (it is a semantic round bound — a retune must rebuild,
-    * and unsetting must serve the original default-rounds clustering;
-    * the occ-keyed knn cache's ADVICE r14 discipline). */
+    * (~2.5 s in-sweep each at sf0.1); it builds once per dir and both
+    * read the pinned frames. */
   private val kmeansCache =
     ArtifactCache.frames[(Pinned, Pinned)]("kmeans assignment")(kmeansAssignCent(_, _))
 
   private def kmeansAssignCent(s: SparkSession, dir: String): (DataFrame, DataFrame) = {
-    val rounds = graft.Knobs.kmeansRounds(s)
-    val (a, c) = kmeansCache.getOrElseUpdate(s"$dir@r$rounds", {
+    val (a, c) = kmeansCache.getOrElseUpdate(dir, {
       val (assign, cent) = buildKmeans(s, dir)
       (Pinned(assign), Pinned(cent))
     })
@@ -1769,14 +1763,13 @@ object VectorOps extends graft.Bank {
   /** The spherical bounded-Lloyd assignment, pinned like [[kmeansCache]]:
     * the 3-round unit-sphere loop was the second-highest in-sweep cost
     * (2.8 s isolated at sf0.1), rebuilt on every vec_spherical_kmeans
-    * call; now it builds once per (dir, rounds) in warmup and the query
+    * call; now it builds once per dir in warmup and the query
     * folds the pinned (vec_id, k, dot) rows. */
   private val sphCache =
     ArtifactCache.frames[Pinned]("spherical kmeans assignment")(sphericalAssign(_, _))
 
   private def sphericalAssign(s: SparkSession, dir: String): DataFrame =
-    sphCache.getOrElseUpdate(s"$dir@r${graft.Knobs.kmeansRounds(s)}",
-      Pinned(buildSpherical(s, dir))).on(s)
+    sphCache.getOrElseUpdate(dir, Pinned(buildSpherical(s, dir))).on(s)
 
   /** The unit-sphere Lloyd loop (final (vec_id, k, dot) assignment):
     * exact-decimal dot products, argMAX under a (dot desc, k) total
@@ -1797,7 +1790,7 @@ object VectorOps extends graft.Bank {
     var cent = base.filter(col("vec_id") < 8)
       .select(col("vec_id").cast("int").as("k"), col("pos"), col("xv").as("cv"))
     var assign: DataFrame = null
-    for (_ <- 1 to graft.Knobs.kmeansRounds(s)) {
+    for (_ <- 1 to KmeansRounds) {
       val dots = base.join(broadcast(cent), "pos")
         .groupBy(col("vec_id"), col("k"))
         .agg(sum(col("xv") * col("cv")).as("dot"))
@@ -1838,7 +1831,7 @@ object VectorOps extends graft.Bank {
     var cent = base.filter(col("vec_id") < 8)
       .select(col("vec_id").cast("int").as("k"), col("pos"), col("xv").as("cv"))
     var assign: DataFrame = null
-    for (_ <- 1 to graft.Knobs.kmeansRounds(s)) {
+    for (_ <- 1 to KmeansRounds) {
       val diff = (col("xv") - col("cv")).cast(d12)
       val d2 = base.join(broadcast(cent), "pos")
         .groupBy(col("vec_id"), col("k"))
@@ -2413,7 +2406,7 @@ object VectorOps extends graft.Bank {
     "vec_index_incremental" ->
       s"""WITH np AS (
            SELECT coalesce(min(p), 30) AS planes FROM range(8, 31) tp(p)
-           WHERE (${graft.Knobs.LshTargetOccupancyDefault}::BIGINT << p)
+           WHERE ($LshTargetOccupancy::BIGINT << p)
                  >= (SELECT count(*) FROM embeddings WHERE vec_id % 16 <> 7)),
          b AS (
            SELECT vec_id, embedding,

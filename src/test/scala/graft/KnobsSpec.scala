@@ -5,28 +5,30 @@ import org.apache.spark.sql.SparkSession
 
 /** The scale-parameter registry contract (SURVEY §6.7, VERDICT r13
   * item 3): every knob in [[Knobs.all]] resolves its `spark.graft.*`
-  * conf override, the SURVEY table stays in sync with the registry, and
-  * the LSH plane-count rule behaves as documented at the boundaries. */
+  * conf override and changes no result, Knobs is the only module that
+  * names a `spark.graft.*` key, the SURVEY table stays in sync with the
+  * registry, and the sketch sizing rules behave as documented at the
+  * boundaries. */
 class KnobsSpec extends SparkSuite {
 
   private def accessor(key: String): SparkSession => Long = key match {
-    case Knobs.LshTargetOccupancyKey => Knobs.lshTargetOccupancy
-    case Knobs.MinhashTargetOccupancyKey => Knobs.minhashTargetOccupancy
-    case Knobs.SimhashTargetOccupancyKey => Knobs.simhashTargetOccupancy
     case Knobs.PhashBandOccupancyKey => Knobs.phashBandOccupancy
     case Knobs.UpsertPkBucketsKey => s => Knobs.upsertPkBuckets(s).toLong
     case Knobs.ComponentsBroadcastMaxEdgesKey => Knobs.componentsBroadcastMaxEdges
     case Knobs.GraphBroadcastMaxNodesKey => Knobs.graphBroadcastMaxNodes
-    case Knobs.KmeansRoundsKey => s => Knobs.kmeansRounds(s).toLong
-    case Knobs.KcorePeelRoundsKey => s => Knobs.kcorePeelRounds(s).toLong
-    case Knobs.TrussRoundsKey => s => Knobs.trussRounds(s).toLong
-    case Knobs.LabelPropRoundsKey => s => Knobs.labelPropRounds(s).toLong
-    case Knobs.BfsRoundsKey => s => Knobs.bfsRounds(s).toLong
     case other => fail(s"knob $other has no accessor mapping in this spec")
   }
 
+  /** Each knob's extreme value and the queries that read it. */
+  private val consumers: Map[String, (String, Seq[String])] = Map(
+    Knobs.PhashBandOccupancyKey -> ("0", Seq("mm_phash")),
+    Knobs.UpsertPkBucketsKey -> ("8", Seq("stream_upsert_sink")),
+    Knobs.ComponentsBroadcastMaxEdgesKey -> ("0", Seq("dedup_cluster")),
+    Knobs.GraphBroadcastMaxNodesKey -> ("0", Seq("graph_pagerank", "graph_label_prop",
+      "graph_kcore", "graph_ktruss", "graph_bfs_hops", "text_textrank")))
+
   test("every registered knob returns its default unset and its conf override when set") {
-    Knobs.all.foreach { case (key, dflt, _) =>
+    Knobs.all.foreach { case (key, dflt) =>
       val get = accessor(key)
       spark.conf.unset(key)
       assert(get(spark) === dflt.toLong, s"$key default")
@@ -38,40 +40,27 @@ class KnobsSpec extends SparkSuite {
     }
   }
 
-  test("knob keys are unique, spark.graft.-prefixed, and classed capacity|capacity-result|rounds") {
+  test("knob keys are unique and spark.graft.-prefixed") {
     val keys = Knobs.all.map(_._1)
     assert(keys.distinct.size === keys.size, "duplicate knob keys")
     keys.foreach(k => assert(k.startsWith("spark.graft."), s"bad prefix: $k"))
-    Knobs.all.foreach { case (k, _, cls) =>
-      assert(Set("capacity", "capacity-result", "rounds")(cls), s"$k class $cls")
-    }
-    // the sketch occupancies whose derived bucketing is PART of the
-    // published candidate sets must carry the capacity-result class
-    // (ADVICE r14: the old 'capacity / tune freely' label promised
-    // result-neutrality these knobs don't have)
-    val byKey = Knobs.all.map(t => t._1 -> t._3).toMap
-    assert(byKey(Knobs.LshTargetOccupancyKey) === "capacity-result")
-    assert(byKey(Knobs.MinhashTargetOccupancyKey) === "capacity-result")
-    assert(byKey(Knobs.SimhashTargetOccupancyKey) === "capacity-result")
-    // phash banding is pure capacity: the pigeonhole makes the pair set
-    // identical at both band settings (see Multimodal.phashBandCount)
-    assert(byKey(Knobs.PhashBandOccupancyKey) === "capacity")
   }
 
   test("every spark.graft. conf key read in src/main is a registered knob or a documented switch") {
-    // the two switches outside Knobs.all: the reliable-checkpoint dir
-    // (Tuning, RoundPin, Components) and the dedup collapse parity hook
-    val switches = Set("spark.graft.checkpointDir", "spark.graft.dedup.forceCollapse")
-    val allowed = Knobs.all.map(_._1).toSet ++ switches
+    // Knobs is the only module that names a key: every other module reads
+    // a knob or one of the two switches (the reliable-checkpoint dir and
+    // the dedup collapse parity hook) through its accessor
+    val allowed = Knobs.all.map(_._1).toSet + Knobs.CheckpointDirKey + Knobs.ForceCollapseKey
     val key = "\"(spark\\.graft\\.[A-Za-z0-9_.]+)".r
     val files = java.nio.file.Files.walk(java.nio.file.Paths.get("src/main")).iterator()
       .asScala.filter(p => p.toString.endsWith(".scala")).toList
     assert(files.size > 50, s"source walk broke: ${files.size} files")
     val found = files.flatMap(p => key.findAllMatchIn(java.nio.file.Files.readString(p))
-      .map(m => s"${p.getFileName}: ${m.group(1)}"))
-    assert(found.size >= Knobs.all.size, s"key scan broke: $found")
-    val undeclared = found.filterNot(f => allowed(f.split(": ")(1)))
-    assert(undeclared.isEmpty, s"conf keys outside Knobs.all: ${undeclared.mkString(", ")}")
+      .map(m => p.getFileName.toString -> m.group(1)))
+    val outside = found.filterNot(_._1 == "Knobs.scala")
+    assert(outside.isEmpty,
+      s"spark.graft. literals outside Knobs.scala: ${outside.map(f => s"${f._1}: ${f._2}").mkString(", ")}")
+    assert(found.map(_._2).toSet === allowed, s"Knobs.scala declares ${found.map(_._2)}")
   }
 
   test("SURVEY §6.7 table lists exactly the registered knobs with their defaults") {
@@ -80,7 +69,7 @@ class KnobsSpec extends SparkSuite {
       .flatMap("""^\| `(spark\.graft\.[a-zA-Z.]+)` \| (\d+) \|""".r.findFirstMatchIn(_))
       .map(m => m.group(1) -> m.group(2)).toMap
     finally src.close()
-    val registry = Knobs.all.map { case (k, d, _) => k -> d }.toMap
+    val registry = Knobs.all.toMap
     assert(rows === registry,
       s"SURVEY §6.7 drifted from Knobs.all: doc-only ${rows.keySet -- registry.keySet}, " +
         s"registry-only ${registry.keySet -- rows.keySet}, " +
@@ -101,7 +90,7 @@ class KnobsSpec extends SparkSuite {
     // monotone non-decreasing in n
     val counts = (1 to 60).map(i => lshPlaneCount(1L << (i / 2)))
     assert(counts === counts.sorted, "plane count must be monotone in n")
-    // occupancy knob: larger target → fewer planes
+    // occupancy parameter: larger target → fewer planes
     assert(lshPlaneCount(20000, targetOcc = 128) === 8)
   }
 
@@ -120,7 +109,7 @@ class KnobsSpec extends SparkSuite {
     assert(bandRows(Long.MaxValue / 2) === 16)
     val rs = (1 to 60).map(i => bandRows(1L << i))
     assert(rs === rs.sorted, "rows-per-band must be monotone in n")
-    // occupancy knob: larger budget → fewer rows (cheaper banding)
+    // occupancy parameter: larger budget → fewer rows (cheaper banding)
     assert(bandRows(100000, occ = 4096) === 4)
   }
 
@@ -146,52 +135,28 @@ class KnobsSpec extends SparkSuite {
       "3 bands is the floor — fewer would lose the hamming<=2 pigeonhole guarantee")
   }
 
-  test("a capacity-result knob reaches the plan: lsh.targetOccupancy=1 widens bucket fan-out and the occ-keyed knn cache stays consistent") {
-    // end-to-end evidence for a CAPACITY knob (VERDICT r14 item 7 —
-    // rounds knobs had this, capacity knobs were accessor-only): on the
-    // dev fixture (500 vectors) occ=1 derives 9 planes instead of 8, so
-    // the REAL bucketing expression fans out into strictly more distinct
-    // buckets; and because the knn-graph ArtifactCache keys on the
-    // resolved occupancy (ADVICE r14), a retune mid-session rebuilds the
-    // graph instead of serving the stale 8-plane artifact, while
-    // unsetting restores the original cached result bit-for-bit.
+  test("no knob changes a result: each knob at an extreme value") {
+    // every knob is a capacity lever (SURVEY §6.7): at an extreme value
+    // its consumers must publish the default run's rows. Each run evicts
+    // the artifact caches first, so an artifact-backed consumer rebuilds
+    // under the knob instead of serving the frame the other run cached.
     val dir = "/root/testdata/sf0.001"
-    import org.apache.spark.sql.functions.col
-    def fanOut(): Long = {
-      val planes = graft.operators.VectorOps.lshPlanesFor(spark, dir)
-      spark.read.parquet(s"$dir/embeddings.parquet")
-        .select(graft.functions.LshBucket.lsh_bucket(col("embedding"), planes).as("b"))
-        .distinct().count()
+    def run(q: String): Seq[String] = {
+      ArtifactCache.evictAllCaches()
+      SparkEntry.queries(q)(spark, dir).collect().map(_.toString).toSeq.sorted
     }
-    def knnGraph(): Seq[String] =
-      SparkEntry.queries("vec_knn_graph")(spark, dir).collect().map(_.toString).toSeq
-    spark.conf.unset(Knobs.LshTargetOccupancyKey)
-    val fan8 = fanOut()
-    val graph8 = knnGraph()
-    spark.conf.set(Knobs.LshTargetOccupancyKey, "1")
-    val (fan9, graph9) =
-      try (fanOut(), knnGraph()) finally spark.conf.unset(Knobs.LshTargetOccupancyKey)
-    assert(graft.operators.VectorOps.lshPlaneCount(500, targetOcc = 1) === 9)
-    assert(fan9 > fan8, s"occ=1 must widen bucket fan-out (got $fan8 -> $fan9)")
-    assert(graph9 !== graph8, "the 9-plane knn graph must differ from the 8-plane default")
-    assert(knnGraph() === graph8,
-      "unsetting the knob must serve the ORIGINAL default-occupancy graph (occ-keyed cache)")
-  }
-
-  test("a rounds knob reaches the plan: kmeans at 1 Lloyd round differs from the default 3") {
-    // end-to-end evidence the conf override is consumed by the operator,
-    // not just by the accessor: fewer Lloyd rounds = a different (less
-    // converged) clustering on the dev fixture. Restore the default and
-    // re-run to prove the override was the only cause.
-    val dir = "/root/testdata/sf0.001"
-    def run(): Seq[String] =
-      SparkEntry.queries("vec_kmeans")(spark, dir).collect().map(_.toString).toSeq
-    spark.conf.unset(Knobs.KmeansRoundsKey)
-    val dflt = run()
-    spark.conf.set(Knobs.KmeansRoundsKey, "1")
-    val one = try run() finally spark.conf.unset(Knobs.KmeansRoundsKey)
-    assert(one !== dflt, "1-round clustering must differ from the 3-round default")
-    assert(run() === dflt, "unsetting the knob restores the default result")
+    val missing = Knobs.all.map(_._1).filterNot(consumers.contains)
+    assert(missing.isEmpty, s"knobs without a consumer list: ${missing.mkString(", ")}")
+    val changed = Knobs.all.flatMap { case (key, _) =>
+      val (extreme, queries) = consumers(key)
+      queries.filter { q =>
+        spark.conf.unset(key)
+        val dflt = run(q)
+        spark.conf.set(key, extreme)
+        try run(q) != dflt finally spark.conf.unset(key)
+      }.map(q => s"$key=$extreme changed $q")
+    }
+    assert(changed.isEmpty, changed.mkString("; "))
   }
 
   test("lshPlanes: adaptive matrix extends the historical 8-plane prefix") {

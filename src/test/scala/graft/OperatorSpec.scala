@@ -5350,18 +5350,16 @@ class PropertySpec extends SparkSuite {
 
   test("dedup_simhash bucket widens with the derived bit count; signature column is bit-stable") {
     // occ=1 on the 500-doc fixture derives 9 bucket bits (1·2^9 ≥ 500)
-    // instead of the default 8: every bucket must equal the signature's
-    // top 9 bits, and the signature itself must not move (the knob sizes
-    // the bucket only).
+    // instead of the default 8: at 9 bits every bucket must equal the
+    // signature's top 9 bits, and the signature itself must not move
+    // (the width sizes the bucket only).
     val dir = "/root/testdata/sf0.001"
-    def run(): Seq[(Long, Long, Long)] =
-      graft.SparkEntry.queries("dedup_simhash")(spark, dir).collect()
-        .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
-    val dflt = run()
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long, Long)] =
+      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
+    val dflt = rows(graft.SparkEntry.queries("dedup_simhash")(spark, dir))
     dflt.foreach { case (_, sh, bk) => assert(bk === sh >> 8) }
-    spark.conf.set(graft.Knobs.SimhashTargetOccupancyKey, "1")
-    val wide = try run() finally spark.conf.unset(graft.Knobs.SimhashTargetOccupancyKey)
     assert(graft.operators.MinHashDedup.simhashBucketBits(500, occ = 1) === 9)
+    val wide = rows(graft.operators.MinHashDedup.simhashFrame(spark, dir, bits = 9))
     assert(wide.map(r => (r._1, r._2)) === dflt.map(r => (r._1, r._2)),
       "signatures must be identical at any bucket width")
     wide.foreach { case (_, sh, bk) => assert(bk === sh >> 7) }

@@ -682,7 +682,7 @@ class PlanSpec extends SparkSuite {
     }
   }
 
-  // The above-gate (PagerankBroadcastMaxNodes exceeded) shuffle fallbacks
+  // The above-gate (graph.broadcastMaxNodes exceeded) shuffle fallbacks
   // are the entire 100 TB story for the graph family — every gated round
   // is exercised here with the gate forced OFF: the plan must contain no
   // static BroadcastExchange (AQE may still convert at runtime on fixture
@@ -741,10 +741,10 @@ class PlanSpec extends SparkSuite {
     import spark.implicits._
     val adj = Seq((1L, 2L), (2L, 1L), (2L, 3L), (3L, 2L), (3L, 4L), (4L, 3L))
       .toDF("src", "dst")
-    val visited = Seq((1L, 0)).toDF("node", "dist")
+    val visited = Seq((1L, 1L, 0)).toDF("seed", "node", "dist")
     withNoAutoBroadcast {
       parity(b => graft.operators.AnalyticsOps
-        .bfsExpand(adj, visited.select(col("node")), visited, 1, b))
+        .bfsExpand(adj, visited.select(col("seed"), col("node")), visited, 1, b))
     }
   }
 
