@@ -1,8 +1,13 @@
 package graft
 
+import java.nio.file.{FileVisitOption, Files, Paths}
+import java.nio.file.attribute.BasicFileAttributes
+import java.util.concurrent.TimeUnit
+import scala.jdk.CollectionConverters._
+import org.apache.hadoop.fs.{Path => HadoopPath}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.sql.types.{DataType, DecimalType, LongType, StructType}
 
 /** Shared helpers for every query in the inventory (SURVEY.md §7.0).
   *
@@ -15,9 +20,80 @@ import org.apache.spark.sql.types.DecimalType
 object Tables {
   type QFn = (SparkSession, String) => DataFrame
 
-  /** Read one driver-generated table: `$sfDir/<name>.parquet`. */
-  def t(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    spark.read.parquet(s"$sfDir/$name.parquet")
+  /** Read one generated sf table, [[path]]`(sfDir, name)`, with the
+    * schema [[schemaOf]] memoizes for its current file version.
+    *
+    * Why: a bare `spark.read.parquet(path)` infers the schema on every
+    * call, and Spark's parquet inference (`mergeSchemasInParallel`) runs a
+    * one-task job to read the footer even for a single file. At sf0.1 on
+    * 4 cores (`local[4]`) a read took 73–82 ms that way and 6–8 ms with
+    * the schema supplied, once per table read of every query. The supplied
+    * schema is the one Spark inferred, so the schema and the optimized
+    * plan are the same both ways.
+    *
+    * The memo key is the qualified path, the size and mtime of every leaf
+    * file under it (the file itself, or every part file of a directory),
+    * and the session's `spark.sql.parquet.*` / `spark.sql.legacy.parquet.*`
+    * values, which change what is inferred ([[events]] sets `nanosAsLong`).
+    * A rewritten file, an added part file or a flipped conf misses it. */
+  def t(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val p = path(sfDir, name)
+    spark.read.schema(schemaOf(spark, p)).parquet(p)
+  }
+
+  /** Where table `name` of the sf dir `sfDir` lives: one parquet file, or
+    * a directory of part files. */
+  def path(sfDir: String, name: String): String = s"$sfDir/$name.parquet"
+
+  private val schemaMemo = new ArtifactCache[StructType]("parquet schema",
+    _ => (), ArtifactCache.KeyDriven("keyed by a table's file version and the " +
+      "session's parquet confs (see Tables.t); one footer read each, rebuilt on demand"))
+
+  /** The schema Spark infers for the parquet at `path` under `spark`'s
+    * confs, inferred once per memo key (see [[t]]). */
+  private def schemaOf(spark: SparkSession, path: String): StructType =
+    schemaMemo.getOrElseUpdate(schemaKey(spark, path), spark.read.parquet(path).schema)
+
+  private def schemaKey(spark: SparkSession, path: String): String = {
+    val confs = spark.conf.getAll.toSeq.filter { case (k, _) =>
+      k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.")
+    }.sorted.map { case (k, v) => s"$k=$v" }
+    (leafVersions(spark, path) ++ confs).mkString("|")
+  }
+
+  /** The qualified `path`, then `name:size:mtime` of each leaf file under
+    * it, sorted. `file:` paths are read through java.nio: Hadoop's local
+    * file system forks a process per file status without its native
+    * library. A missing path has no leaves, and the read reports it. */
+  private def leafVersions(spark: SparkSession, path: String): Seq[String] = {
+    val hp = new HadoopPath(path)
+    val scheme = hp.toUri.getScheme
+    if (scheme == null || scheme == "file") {
+      val root = Paths.get(hp.toUri.getPath).toAbsolutePath.normalize
+      val leaves = if (!Files.exists(root)) Nil else {
+        val walk = Files.walk(root, FileVisitOption.FOLLOW_LINKS)
+        try walk.iterator.asScala.flatMap { f =>
+          val a = Files.readAttributes(f, classOf[BasicFileAttributes])
+          if (a.isRegularFile) Some(s"${root.relativize(f)}:${a.size}:" +
+            a.lastModifiedTime.to(TimeUnit.NANOSECONDS))
+          else None
+        }.toVector finally walk.close()
+      }
+      s"file:$root" +: leaves.sorted
+    } else {
+      val fs = hp.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val root = fs.makeQualified(hp)
+      val leaves = scala.collection.mutable.ArrayBuffer.empty[String]
+      if (fs.exists(root)) {
+        val it = fs.listFiles(root, true)
+        while (it.hasNext) {
+          val f = it.next()
+          leaves += s"${f.getPath}:${f.getLen}:${f.getModificationTime}"
+        }
+      }
+      root.toString +: leaves.sorted.toSeq
+    }
+  }
 
   /** Read the `events` table, normalizing `ts` to a session-tz TIMESTAMP
     * whatever the generator wrote it as: nanosecond-precision INT64
@@ -27,15 +103,21 @@ object Tables {
     * TIMESTAMP_NTZ; cast to TIMESTAMP, the identity under the UTC
     * session timezone every entrypoint pins). */
   def events(spark: SparkSession, sfDir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val df = t(spark, sfDir, "events")
-    df.schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType =>
-        df.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
-      case _ =>
-        df.withColumn("ts", col("ts").cast("timestamp"))
-    }
+    val tsType = eventsTsType(spark, sfDir)
+    normalizeTs(t(spark, sfDir, "events"), tsType)
   }
+
+  /** The type the events file's `ts` reads as, from the [[schemaOf]] memo,
+    * with `nanosAsLong` set so an ns-INT64 `ts` reads as its raw Long. */
+  private[graft] def eventsTsType(spark: SparkSession, sfDir: String): DataType = {
+    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    schemaOf(spark, path(sfDir, "events"))("ts").dataType
+  }
+
+  /** `ts` of type `tsType` as a session-tz TIMESTAMP (see [[events]]). */
+  private[graft] def normalizeTs(df: DataFrame, tsType: DataType): DataFrame =
+    if (tsType == LongType) df.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
+    else df.withColumn("ts", col("ts").cast("timestamp"))
 
   /** The events generator's CLOSED event-type catalog (TESTDATA.md;
     * RestStubServer emits the same set). Single source of truth for every

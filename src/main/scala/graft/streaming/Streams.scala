@@ -31,12 +31,6 @@ import graft.Tables.{dsum, t, EventTypes, QFn}
   */
 object Streams extends graft.Bank {
 
-  // memo of the events `ts` physical type per source file version (see eventsStream)
-  private val tsTypeCache = new graft.ArtifactCache[DataType]("events ts type",
-    _ => (), graft.ArtifactCache.KeyDriven(
-      "schema-probe memo keyed by the events file's (path, size, mtime) — one " +
-        "footer read, rebuilt on demand; nothing dir-shaped to pre-build"))
-
   private val eventSchema = StructType(Seq(
     StructField("event_id", LongType),
     StructField("ts", LongType), // overridden per-fixture; see eventsStream
@@ -45,35 +39,28 @@ object Streams extends graft.Bank {
     StructField("value", DoubleType),
     StructField("props", StringType)))
 
-  /** The file-stream source needs a directory, so the single events file
+  /** The file-stream source needs a directory, so a single events file
     * is staged (symlinked) into a scratch dir per scale factor. */
   private[graft] val stageEventsLink = graft.Fixture("events") { (_, sfDir, out) =>
+    val src = Paths.get(graft.Tables.path(sfDir, "events"))
     Files.createDirectories(out)
-    Files.createSymbolicLink(out.resolve("events.parquet"), Paths.get(sfDir, "events.parquet"))
+    Files.createSymbolicLink(out.resolve(src.getFileName), src)
   }
 
-  /** File-source stream over the events parquet with µs timestamps. */
+  /** File-source stream over the events parquet with µs timestamps. An
+    * events directory of part files is streamed itself; a single file,
+    * through its staged link. The stream schema takes the `ts` type the
+    * generator wrote (ns-INT64 in earlier drops, µs TIMESTAMP in current
+    * ones) from the `Tables` schema memo, keyed by the file version, so no
+    * stream replay pays a footer read; `ts` then normalizes to a session-tz
+    * TIMESTAMP exactly as `Tables.events` does for the batch path. */
   private[graft] def eventsStream(s: SparkSession, sfDir: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val dir = stageEventsLink(s, sfDir)
-    val src = Paths.get(sfDir, "events.parquet")
-    // the stream schema must match what the generator actually wrote for
-    // `ts` (ns-INT64 in earlier drops, µs TIMESTAMP in current ones) — a
-    // one-footer batch read resolves it, then ts normalizes to a session-tz
-    // TIMESTAMP exactly like Tables.events does for the batch path. The
-    // probe is MEMOIZED (optimization r17): it is a listing + footer read
-    // that every stream query's timed region otherwise repays (twice for
-    // the dual-source interval join). The key is the source
-    // file's (path, size, mtime), so a regenerated file is probed again.
-    val key = s"$src|${Files.size(src)}|${Files.getLastModifiedTime(src).toMillis}"
-    val tsType = tsTypeCache.getOrElseUpdate(key,
-      s.read.parquet(src.toString).schema("ts").dataType)
+    val tsType = graft.Tables.eventsTsType(s, sfDir)
+    val src = Paths.get(graft.Tables.path(sfDir, "events"))
+    val dir = if (Files.isDirectory(src)) src else stageEventsLink(s, sfDir)
     val schema = StructType(eventSchema.map(f =>
       if (f.name == "ts") f.copy(dataType = tsType) else f))
-    val raw = s.readStream.schema(schema).parquet(dir.toString)
-    if (tsType == LongType)
-      raw.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
-    else raw.withColumn("ts", col("ts").cast("timestamp"))
+    graft.Tables.normalizeTs(s.readStream.schema(schema).parquet(dir.toString), tsType)
   }
 
   /** Write `frames` as `<i>_batch.parquet` files in `inDir`, one file per
@@ -194,8 +181,7 @@ object Streams extends graft.Bank {
   /** The upsert-sink input feed: batch 0 = the raw events, batch 1 =
     * corrected duplicates (value × 2 for every 5th id). */
   private[graft] val stageUpsertInput = graft.Fixture("in") { (s, dir, out) =>
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = s.read.parquet(s"$dir/events.parquet")
+    val raw = graft.Tables.events(s, dir)
       .select(col("event_id"), col("user_id"), col("event_type"), col("value"))
     writeBatches(out, Seq(raw,
       raw.filter(col("event_id") % 5 === 0).withColumn("value", col("value") * 2)))

@@ -1,6 +1,7 @@
 package graft
 
 import java.sql.Timestamp
+import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
@@ -127,6 +128,35 @@ class StreamingSpec extends SparkSuite {
     val streamed = q("stream_tumbling").collect().map(_.toSeq).toSeq
     val batch = SparkEntry.queries("win_tumbling_batch")(spark, sf).collect().map(_.toSeq).toSeq
     assert(streamed === batch)
+  }
+
+  test("an events directory of part files streams the same rows as the single file") {
+    // the sf dir's events.parquet is a directory holding the unchanged
+    // events file; every other table is linked
+    import java.nio.file.{Files, Paths}
+    val dirSf = graft.Scratch.fresh(spark, "sf_events_dir_")
+    val l = Files.list(Paths.get(sf))
+    val tables = try l.iterator.asScala.toVector finally l.close()
+    tables.foreach { p =>
+      val name = p.getFileName.toString
+      if (name == "events.parquet") {
+        Files.createDirectories(dirSf.resolve(name))
+        Files.copy(p, dirSf.resolve(name).resolve("part-00000.parquet"))
+      } else Files.createSymbolicLink(dirSf.resolve(name), p)
+    }
+    def rows(sfDir: String, name: String) =
+      SparkEntry.queries(name)(spark, sfDir).collect().map(_.toSeq).toSeq
+    Seq("stream_tumbling", "stream_static_join").foreach { n =>
+      val want = rows(sf, n)
+      assert(want.nonEmpty, n)
+      assert(rows(dirSf.toString, n) === want, n)
+    }
+    def drained(sfDir: String, name: String): Long =
+      graft.streaming.Streams.drainToFrame(spark,
+        graft.streaming.Streams.eventsStream(spark, sfDir), name, "append").count()
+    val n = drained(sf, "events_file")
+    assert(n === graft.Tables.events(spark, sf).count())
+    assert(drained(dirSf.toString, "events_dir") === n)
   }
 
   test("stream_sliding equals its oracled batch twin") {
@@ -781,7 +811,6 @@ class StreamingSpec extends SparkSuite {
     import org.apache.spark.sql.streaming.StreamingQueryListener
     import org.scalatest.concurrent.Eventually._
     import org.scalatest.time.{Seconds, Span}
-    import scala.jdk.CollectionConverters._
     val started = new java.util.concurrent.ConcurrentHashMap[java.util.UUID, String]()
     val progressed = java.util.concurrent.ConcurrentHashMap.newKeySet[java.util.UUID]()
     val listener = new StreamingQueryListener {
